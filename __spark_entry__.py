@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Public query surface of the engine.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is the flagship smoke query.  ``queries()`` maps every
+registered query name to its builder, and ``oracle_sql()`` maps the same
+names to DuckDB SQL; ``tests/test_oracle.py`` runs each query at sf0.01
+against its oracle (row count, Arrow dtypes, order-insensitive values).
 
 Implementation lives in ``test_flink_spark/`` (plans/ holds the named query
 assemblies; operators/ the reusable DataFrame operator library).
@@ -17,7 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# the driver may import this module from any CWD — make the repo importable
+# callers may import this module from any CWD — make the repo importable
+# (Python workers get the package from session.ship_package)
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
@@ -42,8 +43,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL equivalent for each query (omitted for
-    non-SQL-expressible ops → driver records a rows-only check)."""
+    """DuckDB-runnable ANSI SQL equivalent for each query (every
+    registered query has one)."""
     from test_flink_spark.plans import all_oracles
 
     return all_oracles()

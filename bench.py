@@ -1,19 +1,17 @@
 #!/usr/bin/env python3
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec for the slowest 15 + shared stages},
-"qt": [sec for EVERY registered query, positional — qt[i] is the time of
-the i-th name in sorted(entry.queries().keys())], "sf": ...}.
+"""Benchmark harness: runs every registered query (HEADLINE first) at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec for EVERY
+registered query + the shared-stage lines}, "sf": ...}.
+``tools/bench_diff.py`` compares two such lines.
 
 Each query is fully materialized through the noop sink — every projected
 column is computed executor-side with no driver row transfer.  A bare
 count() action would let Catalyst prune computed projections entirely
 (non-aggregating queries would time little more than a row count).
 
-The JSON line is compact-separated and kept under the driver's 2000-char
-tail window so round-over-round regression comparison stays mechanical;
-per-query detail and the streaming pipeline breakdown go to stderr.
+Per-query detail and the streaming pipeline breakdown go to stderr.
 """
 
 from __future__ import annotations
@@ -322,33 +320,6 @@ def main() -> None:
         print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
-    # Per-query transparency within the driver's 2000-char stdout tail
-    # (r4 verdict item: folding hid two-thirds of the fleet from
-    # round-over-round diffs).  Two encodings of the same data:
-    #   "qt"      — seconds for EVERY registered query, as a positional
-    #               array ordered by sorted(queries().keys());
-    #               qt[i] belongs to sorted name i.  ~6 chars/query keeps
-    #               the full 161-query fleet inside the tail window.
-    #   "queries" — name→sec map for the SLOWEST entries plus the two
-    #               shared-stage accounting lines (the regression-relevant
-    #               subset, human-readable).
-    registered = sorted(qs)
-    qt = [timings[n] for n in registered if n in timings]
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:15]
-    )
-    # the shared-stage accounting lines are not registry names, so qt
-    # cannot carry them — always itemize them in the map
-    for stage in ("dedup_pair_base_build", "dedup_shared_stage", "dedup_index_build"):
-        if stage in timings:
-            slowest[stage] = timings[stage]
-    # 8-hex fingerprint of the sorted name list: lets compare_bench
-    # verify the positional qt decode against the registry THAT RAN,
-    # instead of trusting a length check (a rename or an add+remove
-    # preserves count but silently shifts every later attribution).
-    import hashlib
-
-    qt_fp = hashlib.md5("|".join(registered).encode()).hexdigest()[:8]
     # Fresh-JVM min-of-3 for the heavy lines (see ISOLATED_TOP).  Opt out
     # with SPARK_GRAFT_BENCH_ISOLATED=0 for quick local iterations.
     iso: dict[str, float] = {}
@@ -358,25 +329,13 @@ def main() -> None:
         "metric": "sum_query_seconds",
         "value": total,
         "unit": "sec",
-        "queries": slowest,
-        "qt": qt,
-        "qt_order": "sorted(queries().keys())",
-        "qt_fp": qt_fp,
+        "queries": dict(sorted(timings.items())),
         "sf": float(sf),
     }
     if iso:
         out["iso"] = iso
     out.update(stream_out)
-    line = json.dumps(out, separators=(",", ":"))
-    # Backstop if the line ever outgrows the tail window: shrink the
-    # itemized map first (qt keeps every query's time regardless).
-    while len(line) > 1950 and len(out["queries"]) > 1:
-        q = out["queries"]
-        fastest = min(q, key=q.get)
-        out["folded_n"] = out.get("folded_n", 0) + 1
-        out["folded_sec"] = round(out.get("folded_sec", 0.0) + q.pop(fastest), 2)
-        line = json.dumps(out, separators=(",", ":"))
-    print(line)
+    print(json.dumps(out, separators=(",", ":")))
 
 
 def streaming_throughput(spark, n_events: int = 200_000):

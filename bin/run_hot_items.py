@@ -11,6 +11,9 @@ Streaming over a file directory (each new file = a micro-batch):
 Kafka (requires the spark-sql-kafka package on the cluster):
     python bin/run_hot_items.py --mode kafka --kafka_from_url host:9092 \
         --topic hot-items --checkpoint_dir /tmp/ck --output /tmp/out
+
+Streaming output is one parquet directory per committed micro-batch; read
+it with ``test_flink_spark.sinks.files.read_committed(spark, "/tmp/out")``.
 """
 
 from __future__ import annotations

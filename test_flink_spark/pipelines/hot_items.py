@@ -5,7 +5,7 @@ per-window Top-3 → console.
 Two streaming Top-N strategies (SURVEY.md §2.6 T1):
 - ``foreachBatch`` (default, idiomatic): windowed agg in append mode emits
   finalized windows; each batch ranks them with the batch rank-window
-  operator — exactly-once with an idempotent sink.
+  operator; ``sinks.files.idempotent_batch_sink`` skips replayed batches.
 - ``stateful`` (faithful port): streaming/stateful_topn.py buffers per
   window-end with an event-time timeout at window_end+1 — the reference's
   ListState + timer pattern, kept fully incremental.
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..functions.parsing import parse_user_behavior
 from ..operators.topn import top_n_by_count
 from ..operators.windows import sliding_count
+from ..sinks.files import idempotent_batch_sink
 from ..sinks.memory import start_foreach_batch
 from ..streaming.stateful_topn import streaming_windowed_top_n
 from ..streaming.watermarks import ascending_watermark
@@ -48,15 +49,15 @@ def run_streaming_foreach_batch(
 ):
     """Default strategy: the windowed agg in append mode emits each window
     exactly once (when the watermark closes it), so ranking within the batch
-    is complete per window; ranked rows land as parquet (idempotent file
-    sink — stand-in for the JDBC upsert / console)."""
+    is complete per window.  Ranked rows go to ``idempotent_batch_sink``
+    (stand-in for the JDBC upsert / console): a replayed batch is skipped,
+    so output is effectively-once; read it with ``read_committed``."""
     counts = behavior_counts(raw_lines, streaming=True)
+    sink = idempotent_batch_sink(out_path)
 
     def rank_batch(batch_df: DataFrame, batch_id: int) -> None:
         ranked = top_n_by_count(batch_df, ["window_end"], "cnt", ["item_id"], n)
-        ranked.select("window_end", "rank", "item_id", "cnt").write.mode(
-            "append"
-        ).parquet(out_path)
+        sink(ranked.select("window_end", "rank", "item_id", "cnt"), batch_id)
 
     return start_foreach_batch(
         counts, rank_batch, name="hot items job", checkpoint=checkpoint, mode="append"

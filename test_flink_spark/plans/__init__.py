@@ -2,11 +2,10 @@
 
 Each module exposes:
     QUERIES: dict[str, Callable[(SparkSession, sf_dir: str), DataFrame]]
-    ORACLES: dict[str, str]  — ANSI SQL DuckDB equivalents (omitted for
-             genuinely non-SQL-expressible ops → driver does rows-only check)
+    ORACLES: dict[str, str]  — ANSI SQL DuckDB equivalents, one per query
 
-Differential-testing conventions (driver compares row-count + schema +
-order-insensitive value hash, columns sorted by name):
+Differential-testing conventions (tests/test_oracle.py compares row count,
+Arrow dtypes and order-insensitive values, columns sorted by name):
     - timestamps are returned as epoch-millis BIGINT, never TimestampType
       (timezone/precision proof);
     - every float aggregate is ROUND()ed to a fixed scale in BOTH dialects
@@ -17,130 +16,19 @@ order-insensitive value hash, columns sorted by name):
 
 from . import advanced, enterprise, llm_data, reference_queries, relational, tpch_extra
 
-
-# Registration order is load-bearing: the driver's CORRECTNESS snapshot
-# verifies the FIRST 50 entries of queries() (dict insertion order).
-# Promotion is GLOBAL as of round 5: every name in _PROMOTED is emitted
-# first, in _PROMOTED order, REGARDLESS of which module defines it, then
-# the remaining queries follow in module order.  (The old within-module
-# promotion could never surface tpch_extra/relational rows — those modules
-# sit last, so their promotions landed at position 120+ and the driver
-# window never reached them.  That is exactly how 41 queries accumulated
-# zero driver rows through r4.)
-#
-# Window accounting for THIS round (r8): union(CORRECTNESS_r01..r07)
-# covers the whole r7 registry, so the window's job changed from closing
-# coverage debt to ROTATING stale certificates (r7 verdict item 2): new
-# queries lead, then the stalest cohort oldest-first
-# (tools/verified_age.py).  Two gates enforce it at commit time:
-# tests/test_plans.py::test_promotion_window_covers_registry (no query
-# outside union+window) and ::test_promotion_window_rotates_stalest
-# (nothing unverified for >= 6 rounds stays out of the window).
-_MODULE_ORDER = (reference_queries, enterprise, advanced, llm_data, relational, tpch_extra)
-
-# Query name -> round its implementation was SWAPPED under the same name
-# (r8 ADVICE): driver certificates from earlier rounds attest the retired
-# algorithm, so tools/verified_age.py voids them and the rotation gate
-# forces the name back into the window until a post-swap certificate
-# lands.  Entries become no-ops (and can be pruned) once last-verified
-# >= swap round.
-_REVERIFY = {
-    # (r13 prune: the five r12 cap-rollout swap entries —
-    # dedup_clusters_incremental, dedup_containment,
-    # dedup_lsh_candidate_audit, dedup_minhash_band_sweep,
-    # dedup_minhash_estimate_audit, all swapped in r12 — were
-    # driver-re-certified by CORRECTNESS_r12 (50/50 green), so per the
-    # rule above they became no-ops and are removed.  No implementation
-    # swaps this round: r13 is an optimization round and every change is
-    # plan-only (oracle hashes unchanged, re-checked via
-    # tools/check_oracle.py).
-}
-
-_PROMOTED = (
-    # r13 rotation window: verified-age rotation (tools/verified_age.py).
-    # 46 forced names — the cohort last driver-verified in r7 (6 rounds
-    # stale at r13 open, forced by test_promotion_window_rotates_stalest
-    # at MAX_AGE=6) — plus the 3 slots RESERVED by the r12 window note
-    # for prompt post-cap re-certification of the flipped-but-not-voided
-    # fresh-cert names (dedup_ngram_jaccard r8, corpus_split_leakage r11,
-    # dedup_cross_lingual r11 — their r12 marginal cost now rides the
-    # session pair base, so a fresh certificate attests the shipped
-    # read path), plus ONE remaining free slot spent on the stalest r8
-    # name (anti_join_customers_no_orders).  46 + 3 + 1 = 50.
-    # Regenerate with: python tools/verified_age.py --fill N
-    # --- last verified r7 (forced cohort) ---
-    "corpus_classifier_calibration",
-    "corpus_dedup_cascade_audit",
-    "dedup_detector_agreement",
-    "dedup_simhash_band_occupancy",
-    "dedup_source_flow_matrix",
-    "embedding_bitq_hamming_recall",
-    "embedding_ivf_nprobe_sweep",
-    "embedding_ivfpq_ann",
-    "embedding_ivfpq_refine_sweep",
-    "embedding_label_confusion",
-    "embedding_ood_outliers",
-    "embedding_pq_distortion_audit",
-    "embedding_random_projection_audit",
-    "events_attribution_linear",
-    "events_attribution_markov_removal",
-    "events_cep_branching",
-    "events_cep_within",
-    "events_cohort_ltv_curve",
-    "events_cuped_adjustment",
-    "events_interarrival_profile",
-    "events_kaplan_meier_retention",
-    "events_ks_drift_test",
-    "events_l_diversity",
-    "events_power_mde",
-    "events_seasonal_decompose",
-    "events_session_threshold_sweep",
-    "events_velocity_flags",
-    "events_wilson_ctr_rank",
-    "fk_integrity_audit",
-    "graph_clustering_coefficient",
-    "graph_components_knn",
-    "graph_hits_trade",
-    "graph_ppr_suppliers",
-    "hot_items_topn",
-    "hot_media_tumbling_count",
-    "multimodal_image_phash",
-    "nation_revenue_hhi",
-    "orders_basket_rules",
-    "orders_fulfillment_latency",
-    "part_price_anova_by_brand",
-    "reco_item_cf_topk",
-    "retrieval_ndcg_audit",
-    "schema_fd_audit",
-    "text_textrank_keywords",
-    "text_trigram_index_audit",
-    "unpivot_user_event_matrix",
-    # --- reserved post-cap re-certifications (r12 window note) ---
-    "dedup_ngram_jaccard",
-    "corpus_split_leakage",
-    "dedup_cross_lingual",
-    # --- stalest r8 name (remaining free slot) ---
-    "anti_join_customers_no_orders",
-)
+_MODULES = (reference_queries, enterprise, advanced, llm_data, relational, tpch_extra)
 
 
-
-
-def _ordered(attr):
+def _merged(attr):
     merged = {}
-    for m in _MODULE_ORDER:
+    for m in _MODULES:
         merged.update(getattr(m, attr))
-    out = {}
-    for name in _PROMOTED:  # global promotion: cross-module, _PROMOTED order
-        if name in merged:
-            out[name] = merged[name]
-    out.update(merged)
-    return out
+    return merged
 
 
 def all_queries():
-    return _ordered("QUERIES")
+    return _merged("QUERIES")
 
 
 def all_oracles():
-    return _ordered("ORACLES")
+    return _merged("ORACLES")

@@ -447,7 +447,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine summation-order noise of a ~2e10 double sum crossed a
     half-cent rounding boundary — precisely the drift the repo's
     sum-cents-not-doubles convention exists to prevent.  Implementation
-    swapped r10 (plans._REVERIFY)."""
+    swapped r10."""
     orders = _t(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("__orders_gs")
     return spark.sql(
@@ -520,7 +520,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
 
 # ---------------------------------------------------------------------------
 # Exact + approximate aggregates.  approx_count_distinct (HLL) is engine-
-# specific → rows-only check (no oracle); exact twin is fully checked.
+# specific, so its oracle checks guarantee booleans, not sketch values.
 # ---------------------------------------------------------------------------
 
 def count_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -117,5 +117,34 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # conf not runtime-settable on this build — defaults fine
+    ship_package(spark.sparkContext)
     _CONFS_APPLIED[id(spark)] = spark
     return spark
+
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def ship_package(sc) -> None:
+    """Make ``test_flink_spark`` importable in every Python worker of ``sc``.
+
+    Workers resolve pickled functions by module name, and their
+    ``sys.path`` holds the worker's working directory, not the driver's
+    import path: a ``mapInPandas`` over a package function fails with
+    ``ModuleNotFoundError`` unless the package is shipped.  ``addPyFile``
+    of a zip is the cluster-wide mechanism, so the same call serves a
+    remote executor and a local worker started from any directory.
+    """
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="tfs-pyfiles-")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = shutil.make_archive(
+        os.path.join(tmp, "test_flink_spark"),
+        "zip",
+        root_dir=os.path.dirname(_PACKAGE_DIR),
+        base_dir="test_flink_spark",
+    )
+    sc.addPyFile(path)

@@ -1,6 +1,6 @@
 """Error-bound checks for the sketch-based aggregates.
 
-``approx_aggregates`` is rows-only at the driver's oracle gate (sketch
+``approx_aggregates``'s oracle checks only guarantee booleans (sketch
 results are engine-specific by design), so this is its correctness story:
 the HLL count-distinct must land within its configured relative standard
 deviation of the exact twin, and the approximate median must respect the

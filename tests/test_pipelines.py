@@ -10,6 +10,7 @@ from pathlib import Path
 import pytest
 
 from test_flink_spark.pipelines.hot_items import batch_top_n, run_streaming_foreach_batch
+from test_flink_spark.sinks.files import read_committed
 from test_flink_spark.sources.files import text_lines
 from test_flink_spark.sql import register_testdata_views
 
@@ -40,7 +41,7 @@ def test_foreach_batch_topn_matches_batch(spark, tmpdirs):
         q.stop()
     got = {
         (r["window_end"], r["rank"]): (r["item_id"], r["cnt"])
-        for r in spark.read.parquet(out).collect()
+        for r in read_committed(spark, out).collect()
         if r["item_id"] != 999
     }
     batch = spark.createDataFrame([(l,) for l in lines], "value STRING")

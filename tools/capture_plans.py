@@ -3,10 +3,12 @@
 
 Usage: python tools/capture_plans.py OUTDIR SUFFIX NAME [NAME ...]
 
-Writes OUTDIR/<name>_<SUFFIX>.txt for each query.  Run from any repo
-checkout (the repo root on sys.path decides which code is explained) —
-the r12 optimization round uses this to record before/after plan shapes
-for the judge (plans/r12/<query>_{before,after}.txt).
+Writes OUTDIR/<name>_<SUFFIX>.txt for each query (SUFFIX is e.g. 'before'
+or 'after').  Run from any repo checkout: the checkout holding this script
+decides which code is explained.  Planning only — no job runs except the
+driver-side work a query function itself performs (e.g. k-means training
+collects), as it would under the bench.  $SPARK_GRAFT_SF_DIR picks the
+data (default /root/testdata/sf0.1).
 """
 from __future__ import annotations
 

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's t2 differential check: run every
-__spark_entry__.queries() entry on Spark and its oracle_sql() on DuckDB at
-sf0.01, compare row-count + schema + order-insensitive value hash.
+"""Spark-vs-DuckDB differential check: run a registered query
+(``__spark_entry__.queries()``) on Spark and its ``oracle_sql()`` on DuckDB
+at sf0.01, then compare row count, columns, Arrow dtype parity and
+order-insensitive values.  ``tests/test_oracle.py`` runs ``check_query``
+over the whole registry; this CLI is a loop over the same function.
 
 Usage: python tools/check_oracle.py [query ...]
 """
@@ -11,13 +13,26 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+
+# Arrow type of an oracle column -> the Spark dtype the query must return
+# (other Arrow types must match Spark's simpleString verbatim)
+_ARROW_TO_SPARK = {
+    "int64": "bigint",
+    "int32": "int",
+    "double": "double",
+    "float": "float",
+    "string": "string",
+    "large_string": "string",
+    "bool": "boolean",
+}
 
 
 def normalize(df):
     """pandas DataFrame → canonical sorted form for order-insensitive compare."""
-    import pandas as pd
-
     df = df.reindex(sorted(df.columns), axis=1)
     for c in df.columns:
         if df[c].dtype == object:
@@ -26,100 +41,90 @@ def normalize(df):
     return df
 
 
-def main() -> int:
+def connect(sf_dir: str = SF_DIR):
+    """DuckDB connection with one view per testdata table of ``sf_dir``."""
     import duckdb
 
-    import __spark_entry__ as entry
-    from test_flink_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    only = set(sys.argv[1:])
-
-    spark = get_spark("oracle-check", shuffle_partitions=8)
-    con = duckdb.connect()
     from test_flink_spark.schemas import TESTDATA_TABLES
 
+    con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
 
-    queries = entry.queries()
-    oracles = entry.oracle_sql()
+
+def check_query(spark, con, name: str, sf_dir: str = SF_DIR) -> list[str]:
+    """Differences between query ``name`` and its DuckDB oracle; empty when
+    they agree.  Spark or DuckDB errors propagate to the caller."""
+    import numpy as np
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    df = entry.queries()[name](spark, sf_dir)
+    oracle = entry.oracle_sql().get(name)
+    if oracle is None:
+        return ["no oracle SQL registered"]
+    spark_dtypes = dict(df.dtypes)
+    s = normalize(df.toPandas())
+    arrow = con.execute(oracle).fetch_arrow_table()
+    o = normalize(arrow.to_pandas())
+
     failures = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle — rows-only check)")
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {e}")
-            continue
-        # dtype parity (arrow view): int32-vs-int64 or DECIMAL sums would
-        # pass a stringified value compare but may fail stricter drivers
-        try:
-            arrow = con.execute(oracles[name]).fetch_arrow_table().schema
-            amap = {"int64": "bigint", "int32": "int", "double": "double",
-                    "float": "float", "string": "string", "large_string": "string",
-                    "bool": "boolean"}
-            sdt = dict(fn(spark, sf_dir).dtypes)
-            for f_ in arrow:
-                want = amap.get(str(f_.type), str(f_.type))
-                if sdt.get(f_.name) not in (want, None) or f_.name not in sdt:
-                    # HARD failure (r5 verdict): a dtype divergence is
-                    # exactly what the driver's schema_match rejects, so
-                    # a "0 failures" sweep must not hide one.
-                    failures.append(name)
-                    print(f"FAIL  {name}: DTYPE {f_.name} spark={sdt.get(f_.name)} duck={f_.type}")
-        except Exception:
-            pass
-        s, o = normalize(sdf), normalize(odf)
-        if len(s) != len(o):
-            failures.append(name)
-            print(f"FAIL  {name}: rows spark={len(s)} duck={len(o)}")
-            continue
-        if list(s.columns) != list(o.columns):
-            failures.append(name)
-            print(f"FAIL  {name}: cols spark={list(s.columns)} duck={list(o.columns)}")
-            continue
-        mismatch = None
-        for c in s.columns:
-            import pandas as pd
-
-            sc, oc = s[c], o[c]
-            if str(sc.dtype).startswith("float") or str(oc.dtype).startswith("float"):
-                import numpy as np
-
-                if not np.allclose(
-                    pd.to_numeric(sc), pd.to_numeric(oc), rtol=0, atol=1e-9, equal_nan=True
-                ):
-                    mismatch = c
-                    break
-            elif not sc.astype(str).equals(oc.astype(str)):
-                mismatch = c
-                break
-        if mismatch:
-            failures.append(name)
-            print(f"FAIL  {name}: value mismatch in column {mismatch}")
-            merged = s.compare(o) if s.shape == o.shape else None
-            if merged is not None:
-                print(merged.head(10))
+    # dtype parity: int32-vs-int64 or DECIMAL sums would pass the
+    # stringified value compare but are a schema mismatch
+    for field in arrow.schema:
+        want = _ARROW_TO_SPARK.get(str(field.type), str(field.type))
+        if spark_dtypes.get(field.name) != want:
+            failures.append(
+                f"dtype {field.name}: spark={spark_dtypes.get(field.name)} "
+                f"duckdb={field.type}"
+            )
+    if len(s) != len(o):
+        return failures + [f"rows spark={len(s)} duckdb={len(o)}"]
+    if list(s.columns) != list(o.columns):
+        return failures + [f"columns spark={list(s.columns)} duckdb={list(o.columns)}"]
+    for c in s.columns:
+        sc, oc = s[c], o[c]
+        if str(sc.dtype).startswith("float") or str(oc.dtype).startswith("float"):
+            same = np.allclose(
+                pd.to_numeric(sc), pd.to_numeric(oc), rtol=0, atol=1e-9, equal_nan=True
+            )
         else:
-            print(f"OK    {name}: {len(s)} rows")
-    failures = list(dict.fromkeys(failures))  # DTYPE + value can both fire
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    return 1 if failures else 0
+            same = sc.astype(str).equals(oc.astype(str))
+        if not same:
+            failures.append(f"value mismatch in column {c}\n{s.compare(o).head(10)}")
+            break
+    return failures
+
+
+def main(names: list[str]) -> int:
+    import __spark_entry__ as entry
+    from test_flink_spark.session import get_spark
+
+    spark = get_spark("oracle-check", shuffle_partitions=8)
+    con = connect()
+    names = names or list(entry.queries())
+    failed = []
+    for name in names:
+        try:
+            failures = check_query(spark, con, name)
+        except Exception as e:  # noqa: BLE001 - an error fails the query
+            failures = [f"{type(e).__name__}: {e}"]
+        if failures:
+            failed.append(name)
+            for f in failures:
+                print(f"FAIL  {name}: {f}")
+        else:
+            print(f"OK    {name}")
+    print(
+        f"\n{len(names) - len(failed)} OK, {len(failed)} failures"
+        + (f": {failed}" if failed else "")
+    )
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -14,7 +14,8 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -28,20 +29,18 @@ def main() -> None:
     oracles = entry.oracle_sql()
     rows = []
     for name, fn in qs.items():
-        mod = inspect.getmodule(fn)
-        src = os.path.relpath(inspect.getsourcefile(fn), "/root/repo")
+        src = os.path.relpath(inspect.getsourcefile(fn), REPO)
         line = inspect.getsourcelines(fn)[1]
         doc = (inspect.getdoc(fn) or "").split("\n")[0].rstrip() or "—"
-        kind = "value-hash" if name in oracles else "rows-only"
+        kind = "value-hash" if name in oracles else "none"
         rows.append((name, f"{src}:{line}", kind, doc))
 
     out = [
         f"# Query index — {len(rows)} registered queries\n\n",
         "Generated by `tools/query_index.py`. Oracle kind 'value-hash' means\n"
-        "the driver/`tools/check_oracle.py` compares row count + schema +\n"
-        "order-insensitive value hash against the paired DuckDB SQL;\n"
-        "'rows-only' would mark a query without one (none since r5: the last\n"
-        "exception, approx_aggregates, now hashes guarantee-bound booleans).\n\n",
+        "`tests/test_oracle.py` compares row count, Arrow dtypes and\n"
+        "order-insensitive values against the paired DuckDB SQL; 'none'\n"
+        "would mark a query without one, which that test fails.\n\n",
         "| query | defined at | oracle | summary |\n|---|---|---|---|\n",
     ]
     for name, loc, kind, doc in rows:
