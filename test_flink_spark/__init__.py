@@ -17,8 +17,9 @@ Layout:
     operators/     reusable DataFrame operators (windows, topn, joins, dedup…)
     sources/       batch + streaming source builders (kafka, files, rate)
     sinks/         foreachBatch JDBC upsert, console
-    streaming/     watermarks, stateful Top-N (applyInPandasWithState)
-    pipelines/     the two reference jobs reassembled (batch + streaming)
+    streaming/     watermarks, keyed state + timers (applyInPandasWithState)
+    pipelines/     the two reference jobs reassembled (batch + streaming;
+                   hot-items Top-N streams through foreachBatch)
     plans/         named query assemblies used by __spark_entry__.py
 """
 

@@ -6,9 +6,10 @@ desc by count, cuts at topSize, clears state.
 
 Spark-first: a rank-window is the idiomatic batch/foreachBatch form —
 ``row_number().over(Window.partitionBy(group).orderBy(desc(metric), tiebreak))``.
-The fully-incremental streaming form lives in
-``streaming/stateful_topn.py`` (transformWithState/applyInPandasWithState);
-this batch form is its correctness oracle (SURVEY.md §7 phase 3).
+It serves both sides of the streaming check: ``pipelines.hot_items``'s
+foreachBatch engine ranks each micro-batch's closed windows with it, and
+``batch_top_n`` ranks the whole bounded input with it as the oracle
+(SURVEY.md §7 phase 3).
 
 Determinism: the reference breaks count ties by arrival order under
 parallelism=1 (HotItemAnalysis.java:203, stable sort).  That is not

@@ -2,13 +2,15 @@
 behavior → filter pv → event-time 1 h / 5 min sliding window count per item →
 per-window Top-3 → console.
 
-Two streaming Top-N strategies (SURVEY.md §2.6 T1):
-- ``foreachBatch`` (default, idiomatic): windowed agg in append mode emits
-  finalized windows; each batch ranks them with the batch rank-window
-  operator; ``sinks.files.idempotent_batch_sink`` skips replayed batches.
-- ``stateful`` (faithful port): streaming/stateful_topn.py buffers per
-  window-end with an event-time timeout at window_end+1 — the reference's
-  ListState + timer pattern, kept fully incremental.
+One streaming Top-N engine (SURVEY.md §2.6 T1), ``run_streaming_foreach_batch``:
+the windowed agg in append mode emits each window once, when the watermark
+closes it; each micro-batch ranks those finished windows with the batch
+rank-window operator (``top_n_by_count``); ``sinks.files.idempotent_batch_sink``
+never writes a replayed batch twice.  The reference's ListState + event-time timer
+(``TopNHotItems``) collapses into the append-mode close: a window reaches the
+ranker exactly when the timer at window_end+1 would have fired.
+``batch_top_n`` runs the same operators over a bounded input and is the
+stream's correctness oracle.
 """
 
 from __future__ import annotations
@@ -21,7 +23,6 @@ from ..operators.topn import top_n_by_count
 from ..operators.windows import sliding_count
 from ..sinks.files import idempotent_batch_sink
 from ..sinks.memory import start_foreach_batch
-from ..streaming.stateful_topn import streaming_windowed_top_n
 from ..streaming.watermarks import ascending_watermark
 
 
@@ -47,11 +48,12 @@ def batch_top_n(raw_lines: DataFrame, n: int = 3) -> DataFrame:
 def run_streaming_foreach_batch(
     raw_lines: DataFrame, checkpoint: str, out_path: str, n: int = 3
 ):
-    """Default strategy: the windowed agg in append mode emits each window
+    """The streaming job: the windowed agg in append mode emits each window
     exactly once (when the watermark closes it), so ranking within the batch
     is complete per window.  Ranked rows go to ``idempotent_batch_sink``
-    (stand-in for the JDBC upsert / console): a replayed batch is skipped,
-    so output is effectively-once; read it with ``read_committed``."""
+    (stand-in for the JDBC upsert / console): a replayed batch is not
+    written again, so output is effectively-once across a restart from the
+    checkpoint; read it with ``read_committed``."""
     counts = behavior_counts(raw_lines, streaming=True)
     sink = idempotent_batch_sink(out_path)
 
@@ -62,14 +64,3 @@ def run_streaming_foreach_batch(
     return start_foreach_batch(
         counts, rank_batch, name="hot items job", checkpoint=checkpoint, mode="append"
     )
-
-
-def streaming_top_n_pipeline(raw_lines: DataFrame, n: int = 3) -> DataFrame:
-    """Faithful stateful port: one fused stateful operator keyed by window
-    end (CountAgg + TopNHotItems collapsed — Spark rejects a stateful map
-    chained after a streaming aggregation).  Returns the unstarted stream."""
-    parsed = parse_user_behavior(raw_lines)
-    # no watermark here: streaming_windowed_top_n owns watermark placement
-    # (it must sit above the map-side combine)
-    pv = parsed.filter(F.col("behavior") == "pv")
-    return streaming_windowed_top_n(pv, ts_col="ts", item_col="item_id", n=n)

@@ -253,8 +253,9 @@ def idempotent_batch_sink(path: str):
     Layout: ``path/data/batch-<id>/`` holds each micro-batch's parquet;
     ``path/_committed/batch-<id>`` is a marker created ONLY after the
     data directory is complete and atomically renamed into place.
-    A replayed (batchId, data) is detected by its marker and skipped, so
-    re-running a failed batch never duplicates rows; a batch that
+    A replayed (batchId, data) is detected by its marker and not written
+    again (it is still executed, into Spark's ``noop`` sink), so re-running
+    a failed batch never duplicates rows; a batch that
     crashed mid-write left only an orphan tmp dir (never read — readers
     go through ``read_committed``).  Write order is the crash-safety
     proof: data rename FIRST, marker create SECOND — every marker
@@ -272,7 +273,12 @@ def idempotent_batch_sink(path: str):
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(commit_root, f"batch-{batch_id}")
-        if os.path.exists(marker):  # replay of a committed batch: no-op
+        if os.path.exists(marker):
+            # replay of a committed batch: write nothing, but still run it.
+            # A stateful upstream (the hot-items window count) commits its
+            # state store only when every partition executes; a skipped
+            # batch fails with STATE_STORE_COMMIT_VALIDATION_FAILED.
+            batch_df.write.format("noop").mode("overwrite").save()
             return
         final = os.path.join(data_root, f"batch-{batch_id}")
         tmp = final + ".__tmp"

@@ -3,13 +3,14 @@ stream goes SILENT — the monitoring operator (device offline, pipeline
 stalled, feed dropped) whose defining property is that output is driven
 by the ABSENCE of data.
 
-The timer shape this adds to the streaming family: stateful_topn fires
-event-time timers to FLUSH buffered results per window; here the timer
-IS the signal — state holds only the key's last-seen event time, the
-timeout is last_seen + gap, and the watermark advancing past it (driven
-by OTHER keys' traffic) produces the alert row.  A key that resumes
-after alerting starts a fresh vigil (and a new alert can fire for a
-later gap — each silence is detected once).
+The timer shape this adds to the streaming family: the reference's
+TopNHotItems fires event-time timers to FLUSH buffered results per
+window (our hot-items job gets that from the append-mode window close);
+here the timer IS the signal — state holds only the key's last-seen
+event time, the timeout is last_seen + gap, and the watermark advancing
+past it (driven by OTHER keys' traffic) produces the alert row.  A key
+that resumes after alerting starts a fresh vigil (and a new alert can
+fire for a later gap — each silence is detected once).
 
 State is one (last_seen_ms,) tuple per live key and is REMOVED on
 alert, so the store holds only keys currently under watch: bounded by

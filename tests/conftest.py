@@ -7,14 +7,6 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-# Before ANY SparkContext exists: export the protobuf fallback env so
-# Spark workers (which inherit the JVM's environment) can import
-# google.protobuf for the transformWithState tests.  A no-op when a real
-# protobuf install is present or the fallback dir is absent.
-from test_flink_spark.streaming.stateful_topn_tws import export_protobuf_env  # noqa: E402
-
-export_protobuf_env()
-
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 

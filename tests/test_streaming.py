@@ -1,7 +1,9 @@
 """Streaming semantics tests (SURVEY.md §5.2 item 4): watermark close,
-append mode, late-row drop, stateful Top-N vs its batch oracle, streaming
-dedup.  Harness: file streaming source (new file per micro-batch) + memory/
-parquet sinks, processAllAvailable() between file drops for determinism."""
+append mode, late-row drop, streaming dedup, keyed-state operators vs
+their batch forms (the hot-items Top-N engine is tested in
+test_pipelines.py).  Harness: file streaming source (new file per
+micro-batch) + memory/parquet sinks, processAllAvailable() between file
+drops for determinism."""
 
 from __future__ import annotations
 
@@ -12,7 +14,6 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from test_flink_spark.pipelines.hot_items import batch_top_n, streaming_top_n_pipeline
 from test_flink_spark.pipelines.hot_media_track import transform as media_transform
 from test_flink_spark.sinks.memory import start_memory
 from test_flink_spark.sources.files import text_lines
@@ -27,112 +28,6 @@ def tmpdirs():
 
 def _write_lines(dir_: Path, name: str, lines: list[str]) -> None:
     (dir_ / name).write_text("\n".join(lines) + "\n")
-
-
-# CSV contract: user_id,item_id,category_id,behavior,epoch_seconds
-BATCH1 = [
-    "1,100,10,pv,3600",
-    "2,100,10,pv,3610",
-    "3,200,10,pv,3620",
-    "4,100,10,buy,3630",   # filtered (not pv)
-    "5,300,10,pv,3640",
-]
-# advances watermark far past the first windows' ends
-BATCH2 = ["9,999,10,pv,90000"]
-
-
-def test_hot_items_streaming_matches_batch_oracle(spark, tmpdirs):
-    src = tmpdirs / "src"
-    src.mkdir()
-    ckpt = str(tmpdirs / "ckpt")
-    _write_lines(src, "b1.csv", BATCH1)
-
-    stream = text_lines(spark, str(src), streaming=True)
-    out = streaming_top_n_pipeline(stream, n=3)
-    q = start_memory(out, "topn_test", ckpt)
-    try:
-        q.processAllAvailable()
-        _write_lines(src, "b2.csv", BATCH2)  # push watermark → fire timers
-        q.processAllAvailable()
-        got = spark.table("topn_test").collect()
-    finally:
-        q.stop()
-
-    batch_lines = spark.createDataFrame([(l,) for l in BATCH1], "value STRING")
-    expected = batch_top_n(batch_lines, n=3).collect()
-    exp = {
-        (r["window_end"], r["rank"]): (r["item_id"], r["cnt"]) for r in expected
-    }
-    got_m = {
-        (int(r["window_end"].timestamp() * 1000), r["rank"]): (r["item_id"], r["cnt"])
-        for r in got
-    }
-    assert got_m == exp
-    # sanity: item 100 (2 pv) outranks 200/300 in shared windows
-    assert any(v == (100, 2) for k, v in got_m.items() if k[1] == 1)
-
-
-def test_stateful_topn_combine_modes_equivalent(spark, tmpdirs):
-    """The map-side-combine and naive fan-out paths of the fused stateful
-    Top-N must emit identical rows (same fixture as the batch-oracle test)."""
-    from test_flink_spark.functions.parsing import parse_user_behavior
-    from test_flink_spark.streaming.stateful_topn import streaming_windowed_top_n
-
-    results = {}
-    for mode in (True, False):
-        src = tmpdirs / f"src_{mode}"
-        src.mkdir()
-        _write_lines(src, "b1.csv", BATCH1)
-        stream = text_lines(spark, str(src), streaming=True)
-        pv = parse_user_behavior(stream).filter(F.col("behavior") == "pv")
-        out = streaming_windowed_top_n(
-            pv, ts_col="ts", item_col="item_id", n=3, partial_combine=mode
-        )
-        q = start_memory(out, f"topn_mode_{mode}", str(tmpdirs / f"ckpt_{mode}"))
-        try:
-            q.processAllAvailable()
-            _write_lines(src, "b2.csv", BATCH2)
-            q.processAllAvailable()
-            results[mode] = sorted(
-                (r["window_end"], r["rank"], r["item_id"], r["cnt"])
-                for r in spark.table(f"topn_mode_{mode}").collect()
-            )
-        finally:
-            q.stop()
-    assert results[True] == results[False]
-    assert results[True]  # non-vacuous: rows actually fired
-
-
-def test_stateful_topn_combine_plan_shape(spark):
-    """Plan gate for the fan-out fix: with the combine, a MapInPandas
-    (partial per-(item,bucket) count) must sit BEFORE the shuffle feeding
-    the stateful operator; the naive path must not pay the extra crossing."""
-    from test_flink_spark.functions.parsing import parse_user_behavior
-    from test_flink_spark.streaming.stateful_topn import streaming_windowed_top_n
-
-    def plan_of(combine: bool) -> str:
-        stream = spark.readStream.format("rate").load().select(
-            F.concat_ws(
-                ",",
-                F.col("value"),
-                (F.col("value") % 997),
-                F.lit(7),
-                F.lit("pv"),
-                F.unix_seconds(F.col("timestamp")),
-            ).alias("value")
-        )
-        pv = parse_user_behavior(stream).filter(F.col("behavior") == "pv")
-        out = streaming_windowed_top_n(
-            pv, ts_col="ts", item_col="item_id", partial_combine=combine
-        )
-        return out._jdf.queryExecution().analyzed().toString()
-
-    with_combine = plan_of(True)
-    naive = plan_of(False)
-    assert "MapInPandas" in with_combine
-    assert "MapInPandas" not in naive
-    for p in (with_combine, naive):
-        assert "FlatMapGroupsInPandasWithState" in p
 
 
 def test_hot_media_streaming_counts(spark, tmpdirs):
@@ -286,109 +181,6 @@ def test_rate_source_smoke(spark, tmpdirs):
         q.stop()
     assert n > 0
     assert dict(spark.table("rate_test").dtypes) == {"timestamp": "timestamp", "value": "bigint"}
-
-
-def test_transform_with_state_topn(spark, tmpdirs):
-    """Spark 4 transformWithStateInPandas port of TopNHotItems (real
-    ListState + named timers).  Skipped where python protobuf (its control
-    channel serialization) is unavailable — the applyInPandasWithState path
-    is the production implementation either way."""
-    from test_flink_spark.streaming.stateful_topn_tws import (
-        rocksdb_confs,
-        streaming_top_n_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("python protobuf unavailable: transformWithState cannot run here")
-
-    src = tmpdirs / "src"
-    src.mkdir()
-    (src / "b1.csv").write_text("120000,100,5\n120000,200,3\n120000,300,9\n")
-    raw = spark.readStream.schema("wem BIGINT, item_id BIGINT, cnt BIGINT").csv(str(src))
-    counts = raw.select(
-        F.timestamp_millis(F.col("wem")).alias("window_end_ts"), "item_id", "cnt"
-    ).withWatermark("window_end_ts", "0 seconds")
-    out = streaming_top_n_tws(counts, n=2)
-    # transformWithState's ListState needs multiple column families —
-    # RocksDB provider only (the default HDFSBacked provider raises
-    # UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES)
-    prev = {}
-    for k, v in rocksdb_confs().items():
-        prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        q = start_memory(out, "tws_out", str(tmpdirs / "ckpt"))
-        try:
-            q.processAllAvailable()
-            (src / "b2.csv").write_text("900000,999,1\n")
-            q.processAllAvailable()
-            rows = spark.table("tws_out").collect()
-        finally:
-            q.stop()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    got = [(r["rank"], r["item_id"], r["cnt"]) for r in rows if r["item_id"] != 999]
-    assert sorted(got)[:2] == [(1, 300, 9), (2, 100, 5)]
-
-
-def test_streaming_top_n_auto_defaults_to_tws(spark, tmpdirs):
-    """r11 verdict item 6: streaming_top_n_auto must pick the
-    transformWithState port BY DEFAULT in this environment (the cloud-sdk
-    protobuf fallback makes tws_available() true here), execute it
-    end-to-end, and agree with the forced GroupState engine on the same
-    fixture — the promotion is semantic-preserving, not just a dispatch."""
-    from test_flink_spark.streaming.stateful_topn import streaming_top_n_auto
-    from test_flink_spark.streaming.stateful_topn_tws import (
-        rocksdb_confs,
-        tws_available,
-    )
-
-    assert tws_available(), "protobuf fallback regressed: auto would demote"
-
-    def run(engine, tag):
-        src = tmpdirs / f"auto_src_{tag}"
-        src.mkdir()
-        (src / "b1.csv").write_text(
-            "120000,100,5\n120000,200,3\n120000,300,9\n"
-        )
-        raw = spark.readStream.schema(
-            "wem BIGINT, item_id BIGINT, cnt BIGINT"
-        ).csv(str(src))
-        counts = raw.select(
-            F.timestamp_millis(F.col("wem")).alias("window_end_ts"),
-            "item_id",
-            "cnt",
-        ).withWatermark("window_end_ts", "0 seconds")
-        out = streaming_top_n_auto(counts, n=2, engine=engine)
-        q = start_memory(out, f"auto_out_{tag}", str(tmpdirs / f"ckpt_{tag}"))
-        try:
-            q.processAllAvailable()
-            (src / "b2.csv").write_text("900000,999,1\n")
-            q.processAllAvailable()
-            return sorted(
-                (r["rank"], r["item_id"], r["cnt"])
-                for r in spark.table(f"auto_out_{tag}").collect()
-                if r["item_id"] != 999
-            )
-        finally:
-            q.stop()
-
-    prev = {k: spark.conf.get(k, None) for k in rocksdb_confs()}
-    try:
-        got_auto = run("auto", "tws")
-        got_gs = run("groupstate", "gs")
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    assert got_auto == got_gs == [(1, 300, 9), (2, 100, 5)]
 
 
 def test_update_mode_emits_revisions(spark, tmpdirs):
@@ -1017,55 +809,6 @@ def test_streaming_session_window_converges_to_batch(spark, tmpdirs):
         assert got.get(k) == v, (k, v, got)
     assert got[(7, 0)] == 2  # cross-batch merge happened
     assert got[(7, 1_000_000)] == 1
-
-
-def test_protobuf_fallback_skew_stays_within_sanctioned_skip():
-    """The vendored pure-python protobuf runtime (google-cloud-sdk
-    appengine tree) is authorized to serve pyspark's generated
-    StateMessage_pb2 ONLY under protobuf's own escape hatch for a
-    small forward skew (TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK),
-    validated today at runtime 6.32 vs gencode 6.33.  If a pyspark
-    upgrade moves the gencode further ahead (or across a major), the
-    transformWithState path must fail LOUDLY here instead of silently
-    re-gating behind tws_available() — re-vet the proto features and
-    update this pin (or install a real protobuf) when it fires."""
-    import re
-    from pathlib import Path
-
-    import pyspark
-
-    from test_flink_spark.streaming.stateful_topn_tws import (
-        export_protobuf_env,
-    )
-
-    assert export_protobuf_env(), (
-        "protobuf runtime no longer importable — the google-cloud-sdk "
-        "fallback moved; transformWithState would silently skip"
-    )
-    import google.protobuf as pb
-
-    runtime = tuple(int(x) for x in pb.__version__.split(".")[:2])
-
-    pb2 = (
-        Path(pyspark.__file__).parent
-        / "sql" / "streaming" / "proto" / "StateMessage_pb2.py"
-    )
-    m = re.search(
-        r"ValidateProtobufRuntimeVersion\(\s*[^,]+,\s*(\d+),\s*(\d+),",
-        pb2.read_text(),
-    )
-    assert m, "StateMessage_pb2 gencode version marker not found — pyspark layout changed, re-vet the fallback"
-    gencode = (int(m.group(1)), int(m.group(2)))
-
-    assert gencode[0] == runtime[0], (
-        f"protobuf MAJOR skew gencode={gencode} runtime={runtime}: the "
-        "version-check override is NOT sanctioned across majors"
-    )
-    assert gencode[1] - runtime[1] <= 1, (
-        f"gencode {gencode} is more than one minor ahead of runtime "
-        f"{runtime}: outside the vetted skip — re-validate StateMessage."
-        "proto against the vendored runtime before trusting TWS"
-    )
 
 
 def _foreachbatch_accumulate_and_apply(spark, tmpdirs, src_schema, batches,
