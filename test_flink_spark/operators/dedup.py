@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .fanout import fan_out
-from .text import words
+from .text import let, word_ngrams, words
 
 
 def _h60(col: Column) -> Column:
@@ -101,16 +101,7 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: i
     # and everything downstream (md5 per shingle, minhash aggs, index joins)
     # is compute-bound — spread it across the cluster before the explode.
     df = fan_out(df)
-    ws = words(F.col(text_col))
-    # guard: sequence(1, 0) is DESCENDING in Spark ([1,0]), not empty — docs
-    # shorter than n words must yield an empty shingle set explicitly
-    # (measured: binding ws via the text.bigrams array-of-one trick is a
-    # wash here — the slice lambda doesn't re-evaluate the split — so the
-    # simpler inlined form stays)
-    idx = F.when(
-        F.size(ws) >= n, F.sequence(F.lit(1), F.size(ws) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, n)))
+    grams = word_ngrams(F.col(text_col), n)
     return (
         df.select(F.col(id_col), F.explode(grams).alias("shingle"))
         .filter(F.col("shingle") != "")
@@ -136,14 +127,7 @@ def shingle_hashes(
     DuckDB oracles (their DISTINCT is on the same md5-derived int), so the
     differential gate checks the exact semantics shipped here."""
     df = fan_out(df)
-    ws = words(F.col(text_col))
-    idx = F.when(
-        F.size(ws) >= n, F.sequence(F.lit(1), F.size(ws) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.filter(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, n))),
-        lambda s: s != "",
-    )
+    grams = F.filter(word_ngrams(F.col(text_col), n), lambda s: s != "")
     return df.select(
         F.col(id_col),
         F.explode(F.array_distinct(F.transform(grams, _h60))).alias("h"),
@@ -159,6 +143,80 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         F.min(id_col).alias("canonical_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
+
+
+def capped_shingle_hashes(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    max_doc_freq: int | None = NGRAM_MAX_DOC_FREQ,
+    _hot_out: list | None = None,
+) -> DataFrame:
+    """The shingle index of the exact pair operators: ``shingle_hashes``
+    minus every shingle found in more than ``max_doc_freq`` documents,
+    pinned by an eager ``localCheckpoint``.  ``max_doc_freq=None`` returns
+    the uncapped, unpinned ``shingle_hashes``.
+
+    ``_hot_out``, when given, receives the pinned table: the caller
+    releases it with ``_unpersist_checkpoint`` once its consumer has
+    materialized (a long-running service must not accumulate one pinned
+    table per call).
+
+    The key is the 60-bit HASH, not the n-gram string: the inverted-index
+    self-join is the dominant exchange, and an 8-byte int key shuffles
+    ~3-6x fewer bytes than ~8·n-char text.  The oracles' DISTINCT/join run
+    on the same md5-derived int (hash-collision semantics are the shipped
+    spec, as everywhere in this family)."""
+    sh = shingle_hashes(df, text_col, id_col, n)
+    if max_doc_freq is None:
+        return sh
+    # Anti-join against the HOT set, not a semi-join on the kept set: kept
+    # shingles are ~all distinct shingles (unbroadcastable at 100 TB), while
+    # shingles over the cap are bounded by total_occurrences/cap — a small
+    # table Catalyst/AQE broadcasts on its own.  The df groupBy is one
+    # map-side-combined linear pass.
+    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
+    hot = freq.filter(F.col("df_") > max_doc_freq).select("h")
+    # Pin the CAPPED shingle table, not just the hot set: three plan
+    # branches read it (sizes + both self-join sides), and without a
+    # materialization each branch re-runs the shingle pass, the freq
+    # aggregation and the anti-join — four corpus passes per query
+    # (measured: the shared dedup stage tripled when the r12 cap rollout
+    # pinned only `hot`).  The pin is O(doc-shingle rows) of 16-byte
+    # (id, hash) pairs, MEMORY_AND_DISK, and at 100 TB it is the same
+    # artifact a production pipeline persists as its shingle index table
+    # instead of re-deriving per consumer.
+    sh = sh.join(hot, "h", "left_anti").localCheckpoint(eager=True)
+    if _hot_out is not None:
+        _hot_out.append(sh)
+    return sh
+
+
+def shingle_overlaps(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Inverted-index self-join of a shingle index ``(id_col, h)``: one row
+    ``(id_b, id_a, shared, n_a, n_b)`` per document pair (id_a < id_b)
+    sharing at least one shingle — ``shared`` distinct common shingles,
+    ``n_a``/``n_b`` each side's shingle count.  Pairs come only from
+    shared keys, never a cross join: the cost is Σ bucket², which the
+    stop-shingle cap bounds."""
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    a, b = sh.alias("a"), sh.alias("b")
+    shared = (
+        a.join(
+            b,
+            (F.col("a.h") == F.col("b.h"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    return shared.join(sa, "id_a").join(sb, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -186,66 +244,15 @@ def ngram_jaccard_pairs(
     doc-frequency filter, and the cap cannot bind below sf10 on the
     certified fixtures — see the constant's docstring).  None = exact
     uncapped (bounded audit strata only; quadratic under hot shingles).
+    ``_hot_out`` is ``capped_shingle_hashes``' release handle.
     """
-    # NOTE: the shingle index feeds three plan branches; recomputing the
-    # (cheap, codegen-fused) explode+md5 per branch measured FASTER than
-    # persist() — caching 260k short ints costs more in BlockManager
-    # serialization than the recompute saves.  Revisit only if the shingle
-    # stage grows expensive (e.g. char-level shingles at 100 TB).
-    # The index key is the 60-bit HASH, not the n-gram string: the
-    # inverted-index self-join is the dominant exchange here, and an 8-byte
-    # int key shuffles ~3-6x fewer bytes than ~8·n-char text.  The oracle's
-    # DISTINCT/join run on the same md5-derived int (hash-collision
-    # semantics are the shipped spec, as everywhere in this family).
-    sh = shingle_hashes(df, text_col, id_col, n)
-    if max_doc_freq is not None:
-        # Anti-join against the HOT set, not a semi-join on the kept set:
-        # kept shingles are ~all distinct shingles (unbroadcastable at
-        # 100 TB), while shingles over the cap are bounded by
-        # total_occurrences/cap — a small table Catalyst/AQE broadcasts on
-        # its own.  The df groupBy is one map-side-combined linear pass.
-        # localCheckpoint(eager) pins the hot set so the downstream
-        # consumers (sizes + both self-join sides re-expand the capped-sh
-        # subtree) anti-join against a materialized tiny table instead of
-        # re-running the freq aggregation per branch — measured +1.4-3.4 s
-        # per query at sf0.1 without it (r12 preflight).
-        freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
-        hot = freq.filter(F.col("df_") > max_doc_freq).select("h")
-        # Pin the CAPPED shingle table, not just the hot set: three plan
-        # branches read it (sizes + both self-join sides), and without a
-        # materialization each branch re-runs the shingle pass, the freq
-        # aggregation and the anti-join — four corpus passes per query
-        # (measured: the shared dedup stage tripled when the r12 cap
-        # rollout pinned only `hot`).  The pin is O(doc-shingle rows) of
-        # 16-byte (id, hash) pairs, MEMORY_AND_DISK, and at 100 TB it is
-        # the same artifact a production pipeline persists as its shingle
-        # index table instead of re-deriving per consumer (guide §5:
-        # reuse x recompute-cost > memory pressure here).
-        sh = sh.join(hot, "h", "left_anti").localCheckpoint(eager=True)
-        if _hot_out is not None:
-            # hand the checkpoint to the caller for unpersist once its
-            # consumer has materialized (cache discipline: a long-running
-            # service must not accumulate one pinned table per call)
-            _hot_out.append(sh)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")), 4
-            ).alias("jaccard"),
-        )
+    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq, _hot_out)
+    out = shingle_overlaps(sh, id_col).select(
+        "id_a",
+        "id_b",
+        F.round(
+            F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")), 4
+        ).alias("jaccard"),
     )
     return out.filter(F.col("jaccard") >= threshold)
 
@@ -275,42 +282,9 @@ def containment_pairs(
     Returns (id_a, id_b, n_a, n_b, shared, containment_bp) with
     id_a < id_b and containment_bp >= threshold_bp.
     """
-    sh = shingle_hashes(df, text_col, id_col, n)
-    if max_doc_freq is not None:
-        # Anti-join against the HOT set, not a semi-join on the kept set:
-        # kept shingles are ~all distinct shingles (unbroadcastable at
-        # 100 TB), while shingles over the cap are bounded by
-        # total_occurrences/cap — a small table Catalyst/AQE broadcasts on
-        # its own.  The df groupBy is one map-side-combined linear pass.
-        # localCheckpoint(eager) pins the hot set so the downstream
-        # consumers (sizes + both self-join sides re-expand the capped-sh
-        # subtree) anti-join against a materialized tiny table instead of
-        # re-running the freq aggregation per branch — measured +1.4-3.4 s
-        # per query at sf0.1 without it (r12 preflight).
-        freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
-        hot = freq.filter(F.col("df_") > max_doc_freq).select("h")
-        # pin the capped shingle table once for the three consuming
-        # branches — see ngram_jaccard_pairs for the measured rationale
-        sh = sh.join(hot, "h", "left_anti").localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq)
     return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        shingle_overlaps(sh, id_col)
         .select(
             "id_a",
             "id_b",
@@ -342,8 +316,8 @@ def minhash_signatures(
     inline comment).  The two retained reference forms:
     ``_minhash_signatures_agg`` (explode + Tungsten min-aggregates — the
     pre-r12 batch path, one exchange of partial mins) and the shuffle-free
-    ``minhash_signature_expr`` array-fold (8-12 s at sf0.1 — interpreted
-    higher-order lambdas; kept for streaming, where an aggregation
+    ``minhash_signature_expr`` array-fold (interpreted higher-order
+    lambdas; kept for streaming, where an aggregation
     upstream of a stateful operator is illegal and micro-batch volumes
     are small — streaming/minhash_dedup.py).  A parity pytest pins all
     three bit-identical.
@@ -975,45 +949,42 @@ def minhash_signature_expr(
 
     This is the form that composes over readStream (aggregations cannot
     precede a stateful operator).  It is NOT the batch form: nested
-    higher-order lambdas evaluate interpreted (measured 8-12 s vs the
-    Tungsten groupBy's ~1.5 s at sf0.1 — see minhash_signatures), so use
-    it only where streaming semantics force it."""
-    from .text import words as _words
-
-    ws = _words(text_col)
-    idx = F.when(
-        F.size(ws) >= shingle_n,
-        F.sequence(F.lit(1), F.size(ws) - (shingle_n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
+    higher-order lambdas evaluate interpreted.  On one 1000-doc benchmark
+    shard at local[1], warm, it takes 0.8-1.4 s against 0.9 s for the
+    Tungsten groupBy and 0.6 s for the Arrow pass (minhash_signatures),
+    so use it only where streaming semantics force it."""
     grams = F.array_distinct(
-        F.filter(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, shingle_n))),
-            lambda g: g != "",
-        )
+        F.filter(word_ngrams(text_col, shingle_n), lambda g: g != "")
     )
-    hs = F.transform(grams, lambda g: _h60(g) % MINHASH_MOD)
-    # ONE fold over the shingle hashes updating all num_perm mins at once.
-    # The naive form — num_perm separate array_min(transform(hs, ...)) —
-    # re-evaluates hs (an md5 per shingle) once PER PERMUTATION after
-    # Catalyst collapses the projections: measured 11-15 s vs ~1.5 s at
-    # sf0.1.  Here hs is an aggregate() argument, evaluated once per row.
     coeffs = minhash_coeffs(num_perm)
     a_arr = F.array(*[F.lit(a) for a, _ in coeffs])
     b_arr = F.array(*[F.lit(b) for _, b in coeffs])
     ab = F.arrays_zip(a_arr.alias("a"), b_arr.alias("b"))
     init = F.array_repeat(F.lit(MINHASH_MOD).cast("long"), num_perm)
-    folded = F.aggregate(
-        hs,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, ab, lambda m, c: F.least(m, (c["a"] * h + c["b"]) % MINHASH_MOD)
-        ),
-    )
-    # no shingles -> NULL signature (callers filter), matching the
-    # explode+groupBy form which simply had no row to aggregate
-    return F.when(F.size(grams) > 0, folded).otherwise(
-        F.lit(None).cast("array<long>")
-    )
+
+    def _signature(gs: Column) -> Column:
+        hs = F.transform(gs, lambda g: _h60(g) % MINHASH_MOD)
+        # ONE fold over the shingle hashes updating all num_perm mins at
+        # once.  The naive form — num_perm separate
+        # array_min(transform(hs, ...)) — re-evaluates hs (an md5 per
+        # shingle) once PER PERMUTATION after Catalyst collapses the
+        # projections: measured 11-15 s vs ~1.5 s at sf0.1.  Here hs is
+        # an aggregate() argument, evaluated once per row.
+        folded = F.aggregate(
+            hs,
+            init,
+            lambda acc, h: F.zip_with(
+                acc, ab, lambda m, c: F.least(m, (c["a"] * h + c["b"]) % MINHASH_MOD)
+            ),
+        )
+        # no shingles -> NULL signature (callers filter), matching the
+        # explode+groupBy form which simply had no row to aggregate
+        return F.when(F.size(gs) > 0, folded).otherwise(
+            F.lit(None).cast("array<long>")
+        )
+
+    # bound: gs is read twice (fold and size guard)
+    return let(grams, _signature)
 
 
 def band_keys_expr(signature: Column, num_perm: int = 16, bands: int = 4) -> Column:

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _h60, shingle_hashes
 from .fanout import fan_out
-from .text import words
+from .text import word_ngrams, words
 
 
 def span_ownership(
@@ -190,54 +190,53 @@ def winnowing_fingerprints(
     Scale: gram hashing is map-side array code; the two windows sort once
     within each document's partition; the fingerprint set is ~2/(w+1) of
     the gram count and only 8-byte hashes ever shuffle."""
-    from pyspark.sql import Window
-
+    fp = F.when(F.col("sel"), F.col("h"))
     # fan out before the per-gram md5 pass: a single-file corpus arrives as
     # ONE scan partition and the gram hashing is the dominant map cost
-    # (measured 3.8 s -> 1.0 s at sf0.1 — r12 optimization round)
-    df = fan_out(df)
-    ws = words(F.col(text_col))
-    idx = F.when(
-        F.size(ws) >= k, F.sequence(F.lit(1), F.size(ws) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, k)))
-    posed = df.select(
-        F.col(id_col), F.posexplode(F.transform(grams, _h60)).alias("pos", "h")
-    )
-    by_pos = Window.partitionBy(id_col).orderBy("pos")
-    wmin = F.min("h").over(by_pos.rowsBetween(-(w - 1), 0))
-    sel = (
-        posed.withColumn("wmin", wmin)
-        .withColumn("selmax", F.max("wmin").over(by_pos.rowsBetween(0, w - 1)))
-        .filter(F.col("h") == F.col("selmax"))
-        .select(F.col(id_col), "h")
-    )
-    # collect_set dedups INSIDE the aggregation, and the groupBy rides the
-    # window's existing doc-id partitioning — a .distinct() here would add
-    # a second exchange on (doc_id, h) for nothing.
-    per_doc = sel.groupBy(id_col).agg(
-        F.size(F.collect_set("h")).cast("long").alias("n_fps"),
+    # (measured 3.8 s -> 1.0 s at sf0.1 — r12 optimization round).
+    # collect_set skips the nulls of unselected grams and dedups INSIDE the
+    # aggregation, and the groupBy rides the window's existing doc-id
+    # partitioning — a .distinct() here would add a second exchange on
+    # (doc_id, h) for nothing.  A document with no grams keeps its one
+    # null row, so it still gets n_fps 0 and md5('').
+    return _winnowed(fan_out(df), text_col, id_col, k, w).groupBy(id_col).agg(
+        F.max("n_grams").cast("long").alias("n_grams"),
+        F.size(F.collect_set(fp)).cast("long").alias("n_fps"),
         F.md5(
             F.array_join(
                 F.transform(
-                    F.sort_array(F.collect_set("h")), lambda x: x.cast("string")
+                    F.sort_array(F.collect_set(fp)), lambda x: x.cast("string")
                 ),
                 "|",
             )
         ).alias("fp_md5"),
     )
-    n_grams = df.select(
-        F.col(id_col),
-        F.greatest(F.size(ws) - (k - 1), F.lit(0)).cast("long").alias("n_grams"),
+
+
+def _winnowed(
+    df: DataFrame, text_col: str, id_col: str, k: int, w: int
+) -> DataFrame:
+    """Every k-gram of every document as ``(id_col, n_grams, pos, h, sel)``:
+    the document's gram count, the gram's 0-based position and 60-bit
+    hash, and whether some w-gram window selects it (the rule in
+    ``winnowing_fingerprints``' docstring).  A document with no grams
+    keeps one row with null ``pos``/``h``/``sel`` (posexplode_outer)."""
+    from pyspark.sql import Window
+
+    # grams are bound by a projection of their own: the size and the
+    # explode below then read one value instead of re-tokenizing
+    grams = df.select(
+        F.col(id_col), word_ngrams(F.col(text_col), k).alias("grams")
     )
-    return (
-        n_grams.join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            "n_grams",
-            F.coalesce(F.col("n_fps"), F.lit(0)).cast("long").alias("n_fps"),
-            F.coalesce(F.col("fp_md5"), F.md5(F.lit(""))).alias("fp_md5"),
-        )
+    posed = grams.select(
+        F.col(id_col),
+        F.size("grams").alias("n_grams"),
+        F.posexplode_outer(F.transform("grams", _h60)).alias("pos", "h"),
+    )
+    by_pos = Window.partitionBy(id_col).orderBy("pos")
+    wmin = F.min("h").over(by_pos.rowsBetween(-(w - 1), 0))
+    return posed.withColumn("wmin", wmin).withColumn(
+        "sel", F.col("h") == F.max("wmin").over(by_pos.rowsBetween(0, w - 1))
     )
 
 
@@ -305,32 +304,20 @@ def anchor_contexts(
     position.  No frequency policy here — callers apply whichever cap
     their join needs (duplicate_substrings: 2..max_df across the corpus;
     substring_anchor_index: <= max_df on the corpus side only)."""
-    from pyspark.sql import Window
-
     # same fan-out as winnowing_fingerprints: the gram-hash pass and the
     # ctx-slice join side below must not run on one core locally
     df = fan_out(df)
-    ws = words(F.col(text_col))
-    idx = F.when(
-        F.size(ws) >= k, F.sequence(F.lit(1), F.size(ws) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, k)))
-    posed = df.select(
-        F.col(id_col), F.posexplode(F.transform(grams, _h60)).alias("pos0", "h")
-    )
-    by_pos = Window.partitionBy(id_col).orderBy("pos0")
-    wmin = F.min("h").over(by_pos.rowsBetween(-(w - 1), 0))
     sel = (
-        posed.withColumn("wmin", wmin)
-        .withColumn("selmax", F.max("wmin").over(by_pos.rowsBetween(0, w - 1)))
-        .filter(F.col("h") == F.col("selmax"))
+        _winnowed(df, text_col, id_col, k, w)
+        .filter(F.col("sel"))
         # 1-based token position of the gram start, the cross-engine
         # position convention (posexplode is 0-based, the oracle 1-based)
-        .select(F.col(id_col), "h", (F.col("pos0") + 1).alias("pos1"))
+        .select(F.col(id_col), "h", (F.col("pos") + 1).alias("pos1"))
     )
     anch = sel.groupBy(id_col, "h").agg(F.min("pos1").alias("pos"))
     lo = F.greatest(F.col("pos") - ext, F.lit(1))
-    return anch.join(df.select(F.col(id_col), ws.alias("wds")), id_col).select(
+    wds = df.select(F.col(id_col), words(F.col(text_col)).alias("wds"))
+    return anch.join(wds, id_col).select(
         F.col(id_col),
         "h",
         "pos",

@@ -10,7 +10,7 @@ oracle reproduces them bit-for-bit).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +37,42 @@ BPE_TOKEN_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 def words(text: Column) -> Column:
     """Whitespace tokenization of trimmed text (empty input → empty array)."""
     return F.split(F.trim(text), r"\s+")
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` bound to a lambda variable
+    (``element_at(transform(array(value), v -> body(v)), 1)``).
+
+    Spark does not eliminate common subexpressions inside higher-order
+    lambdas: a computed array inlined into a per-element lambda is
+    re-evaluated for EVERY element (``words(text)`` inlined into a
+    per-shingle ``slice`` re-splits the document once per shingle —
+    O(len²)).  A lambda variable is a value, so the bound expression runs
+    once per row.  Any lambda that indexes into a computed array takes it
+    from here."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def word_ngrams(text: Column, n: int) -> Column:
+    """``array<string>`` of the word n-grams of ``text`` — each the
+    ``" "``-join of ``n`` consecutive ``words()`` tokens, in order, with
+    repeats.  Documents with fewer than ``n`` tokens (and null text) give
+    an empty array: the size guard is needed because ``sequence(1, 0)`` is
+    DESCENDING in Spark (``[1, 0]``), not empty.  Empty tokens (leading or
+    trailing non-space whitespace, ``""`` text) are kept, so a gram may be
+    ``""``; callers that want only real grams filter those.  The token
+    array is split once per document (see ``let``)."""
+
+    def _grams(ws: Column) -> Column:
+        return F.when(
+            F.size(ws) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+                lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return let(words(text), _grams)
 
 
 def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -99,26 +135,8 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def bigrams(text: Column) -> Column:
-    """Adjacent word pairs as 'w1 w2' strings (documents with <2 words →
-    empty array; the size guard avoids Spark's descending sequence(1, 0)).
-
-    The tokenized array is BOUND to a lambda variable (array-of-one +
-    transform) before indexing: naively inlining ``words(text)`` into the
-    per-index lambda re-evaluates the split for EVERY element — O(len²)
-    per document, measured 5.8 s -> 0.9 s on the sf0.1 corpus."""
-
-    def _pairs(ws: Column) -> Column:
-        return F.when(
-            F.size(ws) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(ws) - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(ws, i), F.element_at(ws, i + 1)
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return F.element_at(F.transform(F.array(words(text)), _pairs), 1)
+    """Adjacent word pairs as 'w1 w2' strings: ``word_ngrams(text, 2)``."""
+    return word_ngrams(text, 2)
 
 
 def repetition_scores(
@@ -167,16 +185,18 @@ def chunk_token_windows(
     """
     if not 0 < stride <= chunk_size:
         raise ValueError(f"need 0 < stride <= chunk_size, got {stride}/{chunk_size}")
-    ws = words(F.col(text_col))
-    n = F.size(ws)
-    # number of windows: 1 + ceil(max(n - chunk_size, 0) / stride)
-    n_chunks = F.lit(1) + F.ceil(
-        F.greatest(n - F.lit(chunk_size), F.lit(0)) / F.lit(stride)
-    ).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.slice(ws, i * stride + 1, chunk_size),
-    )
+
+    def _chunks(ws: Column) -> Column:
+        # number of windows: 1 + ceil(max(n - chunk_size, 0) / stride)
+        n_chunks = F.lit(1) + F.ceil(
+            F.greatest(F.size(ws) - F.lit(chunk_size), F.lit(0)) / F.lit(stride)
+        ).cast("int")
+        return F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda i: F.slice(ws, i * stride + 1, chunk_size),
+        )
+
+    chunks = let(words(F.col(text_col)), _chunks)
     return (
         df.select(F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "toks"))
         .select(
@@ -338,23 +358,31 @@ def dedup_blocks(
     sort-based O(b log b) form (zip index → array_sort → adjacent-compare)
     measured 0.74 s / 0.79 s cold — no better, more code.  Emits the
     cleaned text plus block counts so the drop rate is auditable."""
-    ws = words(F.col(text_col))
-    n = F.size(ws)
-    nb = F.ceil(n / F.lit(float(block_words))).cast("int")
-    idx = F.when(n > 0, F.sequence(F.lit(0), nb - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    blocks = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(ws, i * block_words + 1, block_words))
-    )
-    kept = F.aggregate(
-        blocks,
-        F.array().cast("array<string>"),
-        lambda seen, x: F.when(F.array_contains(seen, x), seen).otherwise(
-            F.concat(seen, F.array(x))
-        ),
-    )
-    return df.select(
+
+    def _blocks(ws: Column) -> Column:
+        n = F.size(ws)
+        nb = F.ceil(n / F.lit(float(block_words))).cast("int")
+        idx = F.when(n > 0, F.sequence(F.lit(0), nb - 1)).otherwise(
+            F.array().cast("array<int>")
+        )
+        blocks = F.transform(
+            idx,
+            lambda i: F.concat_ws(" ", F.slice(ws, i * block_words + 1, block_words)),
+        )
+        kept = F.aggregate(
+            blocks,
+            F.array().cast("array<string>"),
+            lambda seen, x: F.when(F.array_contains(seen, x), seen).otherwise(
+                F.concat(seen, F.array(x))
+            ),
+        )
+        return F.struct(nb.alias("nb"), kept.alias("kept"))
+
+    # the struct is its own projection: the outputs below read nb and kept
+    # several times, and an inlined copy would re-run the split and fold
+    b = df.select(F.col(id_col), let(words(F.col(text_col)), _blocks).alias("b"))
+    nb, kept = F.col("b.nb"), F.col("b.kept")
+    return b.select(
         F.col(id_col),
         nb.cast("long").alias("n_blocks"),
         F.size(kept).cast("long").alias("n_unique_blocks"),

@@ -6455,10 +6455,12 @@ def _shared_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _PAIR_BASE_CACHE.get(key)
     if df is None:
-        from ..operators.dedup import shingle_hashes
+        from ..operators.dedup import (
+            _unpersist_checkpoint,
+            capped_shingle_hashes,
+            shingle_overlaps,
+        )
 
-        docs = _docs(spark, sf_dir)
-        sh = shingle_hashes(docs)
         # r12 cap rollout: the shared pair base rides the same
         # NGRAM_MAX_DOC_FREQ stop-shingle cap as ngram_jaccard_pairs /
         # containment_pairs (a shingle in f docs costs f^2 join pairs —
@@ -6466,44 +6468,11 @@ def _shared_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus_dedup_cascade_audit).  Sizes are computed AFTER the cap,
         # so shared/n_a/n_b stay a consistent capped-shingle-set algebra;
         # every consumer's oracle replays the identical doc-freq filter.
-        from ..operators.dedup import NGRAM_MAX_DOC_FREQ
-
-        freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
-        hot = freq.filter(F.col("df_") > NGRAM_MAX_DOC_FREQ).select("h")
-        # pin the capped shingle table (not just the hot set): sizes and
-        # both self-join sides read it — see ngram_jaccard_pairs
-        sh = sh.join(hot, "h", "left_anti").localCheckpoint(eager=True)
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        a, b = sh.alias("a"), sh.alias("b")
-        df = (
-            a.join(
-                b,
-                (F.col("a.h") == F.col("b.h"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-            )
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
-                ),
-                "id_a",
-            )
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")
-                ),
-                "id_b",
-            )
-            .localCheckpoint(eager=True)
-        )
+        sh = capped_shingle_hashes(_docs(spark, sf_dir))
+        df = shingle_overlaps(sh).localCheckpoint(eager=True)
         # the capped-shingle pin only feeds the build above; once the pair
         # table is materialized, release it (cache discipline — without
         # this every session kept one corpus-sized (id, h) pin alive)
-        from ..operators.dedup import _unpersist_checkpoint
-
         _unpersist_checkpoint(sh)
         _PAIR_BASE_CACHE[key] = df
     return df

@@ -4,6 +4,8 @@ behavior."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +20,19 @@ from test_flink_spark.operators.similarity import cosine_topk, lsh_bucket_topk
 from test_flink_spark.schemas import load_table
 
 SF = "/root/testdata/sf0.001"
+
+# Edge cases of Spark's split(trim(text), '\s+') tokenizer (operators/text.words)
+TOKENIZER_EDGE_ROWS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, " leading and trailing spaces "),
+    (3, "\ttab\tleads and\ttrailing tab\t"),  # trim keeps \t -> empty tokens
+    (4, ""),  # -> [''] one empty token
+    (5, "   "),  # trim -> '' -> [''] too
+    (6, "nbsp\xa0inside and\u2003em-space stay single tokens"),
+    (7, None),  # null text: no output row
+    (8, "x\ny\rz\x0bw\x0cv"),  # every ASCII \s class member separates
+    (9, "unicode töken \U0001f600 emoji"),
+]
 
 
 def test_lsh_ann_recall(spark):
@@ -49,18 +64,7 @@ def test_simhash_signatures_arrow_matches_expression_reference(spark):
         simhash_signatures,
     )
 
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, " leading and trailing spaces "),
-        (3, "\ttab\tleads and\ttrailing tab\t"),  # trim keeps \t -> empty tokens
-        (4, ""),  # -> [''] one empty token
-        (5, "   "),  # trim -> '' -> [''] too
-        (6, "nbsp\xa0inside and\u2003em-space stay single tokens"),
-        (7, None),  # null text: no output row
-        (8, "x\ny\rz\x0bw\x0cv"),  # every ASCII \s class member separates
-        (9, "unicode töken \U0001f600 emoji"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    df = spark.createDataFrame(TOKENIZER_EDGE_ROWS, "doc_id LONG, text STRING")
     got = {
         r["doc_id"]: (r["simhash"], r["sh_lo"], r["sh_hi"])
         for r in simhash_signatures(df).collect()
@@ -73,6 +77,68 @@ def test_simhash_signatures_arrow_matches_expression_reference(spark):
     for doc_id, (s32, lo, hi) in got.items():
         assert s32 == ref32[doc_id], f"w32 lane diverged on doc {doc_id}"
         assert (lo, hi) == ref64[doc_id], f"w64 lanes diverged on doc {doc_id}"
+
+
+def test_word_ngrams_matches_python_tokenizer_reference(spark):
+    """word_ngrams(text, n) is the " "-join of every n consecutive tokens of
+    Spark's tokenizer: strip 0x20 only, split on the ASCII class
+    [ \\t\\n\\x0b\\f\\r]+, keep empty tokens.  Documents with fewer than n
+    tokens and null text give an empty array, as the gram operators did
+    before the helper."""
+    from test_flink_spark.operators.text import word_ngrams
+
+    rows = TOKENIZER_EDGE_ROWS + [
+        (10, "one"),
+        (11, "one two"),
+        (12, "\tone"),  # ['', 'one']
+        (13, "one two three"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    split = re.compile("[ \t\n\x0b\f\r]+").split
+    for n in (2, 3):
+        got = {
+            r["doc_id"]: r["g"]
+            for r in df.select("doc_id", word_ngrams(F.col("text"), n).alias("g")).collect()
+        }
+        for doc_id, text in rows:
+            toks = [] if text is None else split(text.strip(" "))
+            want = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+            assert got[doc_id] == want, f"n={n} doc {doc_id}: {got[doc_id]!r}"
+
+
+def test_gram_sites_tokenize_each_document_once(spark):
+    """Spark does not eliminate common subexpressions inside higher-order
+    lambdas, so words(text) inlined into a per-gram lambda re-splits the
+    document once per gram (O(len²)).  Every gram site binds the token
+    array once: one split( per plan branch that tokenizes."""
+    from test_flink_spark.operators import dedup, span_dedup, text
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h i j"), (2, "x y z w")], "doc_id LONG, text STRING"
+    )
+    col = F.col("text")
+    # expression columns are aliased: an unnamed column's name is its
+    # expression text, split( included
+    sites = {
+        "shingles": (dedup.shingles(df), 1),
+        "shingle_hashes": (dedup.shingle_hashes(df), 1),
+        "minhash_signature_expr": (
+            df.select(dedup.minhash_signature_expr(col).alias("sig")),
+            1,
+        ),
+        "winnowing_fingerprints": (span_dedup.winnowing_fingerprints(df), 1),
+        # two branches tokenize: the gram pass, and the context side of the
+        # anchor join
+        "anchor_contexts": (span_dedup.anchor_contexts(df), 2),
+        "bigrams": (df.select(text.bigrams(col).alias("bg")), 1),
+        "chunk_token_windows": (text.chunk_token_windows(df), 1),
+        "dedup_blocks": (text.dedup_blocks(df), 1),
+    }
+    got = {
+        name: d._jdf.queryExecution().executedPlan().toString().count("split(")
+        for name, (d, _) in sites.items()
+    }
+    assert got == {name: want for name, (_, want) in sites.items()}
 
 
 def test_signature_passes_preserve_id_type(spark):
