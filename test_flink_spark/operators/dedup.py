@@ -280,10 +280,14 @@ def containment_pairs(
     float crosses the engine boundary.
 
     Returns (id_a, id_b, n_a, n_b, shared, containment_bp) with
-    id_a < id_b and containment_bp >= threshold_bp.
+    id_a < id_b and containment_bp >= threshold_bp, pinned by an eager
+    ``localCheckpoint`` so the capped shingle index can be released: the
+    call leaves the result as its one pin, which the caller may release
+    with ``_unpersist_checkpoint``.
     """
-    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq)
-    return (
+    hot_handles: list = []
+    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq, hot_handles)
+    out = (
         shingle_overlaps(sh, id_col)
         .select(
             "id_a",
@@ -296,7 +300,11 @@ def containment_pairs(
             ),
         )
         .filter(F.col("containment_bp") >= threshold_bp)
+        .localCheckpoint(eager=True)
     )
+    for h in hot_handles:
+        _unpersist_checkpoint(h)
+    return out
 
 
 def minhash_signatures(
@@ -875,43 +883,41 @@ def duplicate_clusters(
     canonical-representative step after candidate pairing: keep one doc per
     cluster, drop the rest.
 
-    Algorithm: min-label propagation — labels start as own id; each round
-    every node takes min(label, neighbors' labels) until a fixed point,
-    detected as "exact decimal sum of labels unchanged" (labels only ever
-    decrease), which costs one scalar aggregate instead of a join against
-    the previous generation.  Iterations are driver-coordinated (the one
-    sanctioned driver loop: iterative graph algorithms — same structure as
-    GraphX Pregel), but all data work is one join + one aggregation per
-    round.  Near-dup clusters are clique-like, so convergence is 2-3
-    rounds; ``max_iter`` bounds pathological chains and the loop WARNS if it
-    exits un-converged (a chain longer than ``max_iter`` hops would
-    otherwise silently return partial clusters).
+    Algorithm: min-label propagation (``graph.min_label_components``).
+    Labels start as each node's smallest neighbour; each round is a
+    pointer jump then a neighbour-min, and the round in which no label
+    falls is the fixed point: then every edge has equal labels at both
+    ends.  The count of fallen labels rides the round's checkpoint job,
+    so detection costs no extra pass and no extra round.  The rounds are a
+    Python loop over Spark jobs (the one sanctioned kind: iterative graph
+    algorithms, as in GraphX Pregel).  Near-dup clusters are clique-like,
+    so one round usually converges; ``max_iter`` bounds pathological
+    chains, and the loop WARNS if it exits un-converged (a chain longer
+    than ``max_iter`` hops would otherwise silently return partial
+    clusters).
 
-    Memory discipline at scale: at most TWO label generations are persisted
-    at any moment — the ``count()`` materializes the new generation, then
-    the superseded one is unpersisted immediately.  The returned DataFrame
-    is ``localCheckpoint``-ed (lineage truncated: 15 iterations of
-    join-on-join would otherwise blow up the planner) and all intermediate
-    cache is released before return.
+    Memory discipline at scale: the edge list and at most two label
+    generations are pinned at any moment, each superseded generation is
+    released as soon as its successor is materialized, and the returned
+    DataFrame is an eager ``localCheckpoint``: the one pin a call leaves.
 
     The loop iterates ONLY over nodes incident to an edge (the duplicate
     subgraph) — singleton documents, the overwhelming majority of any real
-    corpus, never enter a propagation round; they get their own id back via
-    one left join at the end.  Per-round work is O(duplicate nodes), not
+    corpus, never enter a propagation round; they get their own id back
+    from the final aggregate.  Per-round work is O(duplicate nodes), not
     O(corpus).
     """
     from pyspark.sql.types import NumericType
 
-    # the fixed-point detector sums labels as decimal(38,0); a non-numeric
-    # id would cast to NULL, making sum() None == None on round 1 and
-    # silently declaring convergence after a single propagation — reject
-    # up front (hash string ids to BIGINT first, e.g. sampling.hash_bucket)
+    # labels are ids cast to bigint, which a string id fails (or, without
+    # ANSI casts, turns into a NULL that joins no edge) — reject up front
+    # (hash string ids to BIGINT first, e.g. sampling.hash_bucket)
     id_type = df.schema[id_col].dataType
     if not isinstance(id_type, NumericType):
         raise TypeError(
             f"duplicate_clusters requires a numeric {id_col!r} (got "
-            f"{id_type.simpleString()}): the convergence check sums labels "
-            f"exactly in decimal(38,0). Map string ids to BIGINT first "
+            f"{id_type.simpleString()}): cluster labels are ids cast to "
+            f"bigint. Map string ids to BIGINT first "
             f"(e.g. conv(substring(md5(id),1,15),16,10))."
         )
     hot_handles: list = []

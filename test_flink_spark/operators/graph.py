@@ -1,10 +1,9 @@
 """Iterative graph analytics: fixed-point PageRank over a DataFrame edge
 list, with a bit-exact unrolled-CTE DuckDB oracle.
 
-The repo already has one iterative graph operator — connected components
-via min-label propagation (operators/dedup.py, duplicate clusters).
-PageRank adds the weighted-influence shape: rank mass flows along edges,
-damped, for a FIXED number of power iterations.  Fixed iteration count is
+Besides connected components (``min_label_components``), PageRank adds
+the weighted-influence shape: rank mass flows along edges, damped, for a
+FIXED number of power iterations.  Fixed iteration count is
 the differential-testing move (the same one IVF training uses for k-means,
 ivf.py): convergence-threshold loops are float-order-sensitive, but N
 unrolled integer iterations replay exactly in SQL.
@@ -457,84 +456,78 @@ def min_label_components(
     max_iter: int = 15,
     warn_name: str = "min_label_components",
 ) -> DataFrame:
-    """Generic connected components by min-label propagation over an
-    undirected pair list ``(id_a, id_b)``: every node in ``nodes`` gets
-    ``cluster_id`` = the smallest id transitively reachable (its own id
-    if isolated).  Extracted from dedup.duplicate_clusters so any edge
-    list (near-dup graphs, k-NN item graphs) shares one implementation;
-    see that docstring for the loop discipline (two-generation
-    persistence bound, exact decimal-sum fixed-point detection,
-    localCheckpoint-ed result, and the non-convergence warning).  The
-    loop runs only over nodes incident to an edge; isolated nodes join
-    back at the end.
-
-    Each round is neighbor-min THEN pointer-jump: after the one-hop
-    ``l(v) := min over {own} ∪ {neighbors}``, a self-join on the label
-    table applies ``l(v) := min(l(v), l(l(v)))``.  Labels are always ids
-    of incident nodes (the min id reached so far), so ``l(v)`` is a key
-    of the label table and the jump is a plain equi-join on an O(nodes)
-    relation — no edge blow-up.  Remaining depth goes from d to 2d+1 per
-    round, so a diameter-D component converges in O(log D) blocking
-    rounds instead of D (a 22-node chain: 5 rounds, not 21 — measured
-    2-3× on graph_components_knn)."""
+    """Connected components by min-label propagation over an undirected
+    pair list ``(id_a, id_b)``: each row of ``nodes`` gets ``cluster_id``
+    (bigint) = the smallest id it reaches, its own if isolated; ``id_col``
+    keeps its type and rows.  One Spark job costs more than this graph's
+    data, so the plan is cut for few jobs (9 in a converging call; see
+    docs/DESIGN_DECISIONS.md on persisted-relation references):
+    - the symmetric edge list is pinned by an eager localCheckpoint, whose
+      scan adds no job (each reference to a cached relation adds one);
+    - the seed ``least(v, min(neighbours))`` is the first neighbour-min as
+      one aggregate, without a join;
+    - each round is one checkpointed plan: pointer jump
+      ``l(v) := min(l(v), l(l(v)))`` (labels are ids of incident nodes),
+      then neighbour-min.  A 40-node chain with ascending ids takes 6
+      steps, but shuffled ids on a chain may need up to one per hop.
+      An Observation counts the nodes whose label fell in the
+      neighbour-min.  At 0 every edge has equal labels at both ends, so
+      each component holds one label and its smallest node can only carry
+      its own id: the loop stops in the round that reaches the fixpoint;
+    - the result is one aggregate over ``nodes`` as ``(id, id)`` unioned
+      with the labels, so isolated nodes never enter the loop.
+    ``max_iter`` bounds the neighbour-min steps, the seed included; the
+    loop warns if it stops short of the fixpoint."""
     import warnings
 
-    edges = pairs.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-    )
-    edges = edges.unionByName(
-        edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    labels = edges.select(F.col("id_a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
+    from pyspark.sql import Observation
+
+    from .dedup import _unpersist_checkpoint
+
+    edges = symmetrize_edges(
+        pairs.select(
+            F.col("id_a").cast("long").alias("id_a"),
+            F.col("id_b").cast("long").alias("id_b"),
+        ),
+        "id_a",
+        "id_b",
+    ).localCheckpoint(eager=True)
+    # A null id joins nothing.  Filtering every read of the pin gives all
+    # references of the seed one identical subtree (no isnotnull inferred
+    # on some and not on others), so they share one exchange.
+    live = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    labels = live.groupBy(F.col("src").alias("node")).agg(
+        F.least(F.col("node"), F.min("dst")).alias("label")
     )
     cp_ids: set = set()
-    prev_sum = None
     converged = False
-    for _ in range(max_iter):
-        nbr = edges.join(labels, edges.id_b == labels.node).select(
-            F.col("id_a").alias("node"), "label"
-        )
-        one_hop = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        jump = one_hop.select(
+    for _ in range(max_iter - 1):
+        jump = labels.select(
             F.col("node").alias("jnode"), F.col("label").alias("jlabel")
         )
-        # the self-join references one_hop twice: without a lineage cut
-        # the LOGICAL plan doubles every round (exponential — plan
-        # stringification alone OOMs by round ~12), so each generation is
-        # rolling-checkpointed: constant-depth plan, two generations of
-        # blocks live, superseded ones freed (pagerank discipline)
-        #
-        # The fixed-point label sum rides the checkpoint job as an
-        # Observation (CollectMetrics): the materializing pass computes it
-        # map-side for free, replacing the separate one-job-per-round
-        # aggregate that re-scanned the fresh generation (guide §1/2:
-        # one full pass per round removed; exact decimal sum unchanged).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_labels = _rolling_checkpoint(
-            one_hop.join(jump, one_hop.label == jump.jnode, "left").select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("jlabel", "label")
-                ).alias("label"),
-            ).observe(
-                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ),
+        jumped = labels.join(jump, labels.label == jump.jnode, "left").select(
+            "node", F.least("label", F.coalesce("jlabel", "label")).alias("own")
+        )
+        nbr = live.join(jumped, live.dst == jumped.node).select(
+            F.col("src").alias("node"),
+            F.lit(None).cast("long").alias("own"),
+            F.col("own").alias("label"),
+        )
+        # the jump reads labels twice: without a lineage cut the logical
+        # plan would double every round
+        fell = Observation()
+        labels = _rolling_checkpoint(
+            jumped.select("node", "own", F.col("own").alias("label"))
+            .unionByName(nbr)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.max("own").alias("own"))
+            .observe(fell, F.count(F.when(F.col("label") < F.col("own"), 1)).alias("n"))
+            .select("node", "label"),
             cp_ids,
         )
-        label_sum = obs.get["s"]
-        labels = new_labels
-        if label_sum == prev_sum:
+        if fell.get["n"] == 0:
             converged = True
             break
-        prev_sum = label_sum
     if not converged and max_iter > 0:
         warnings.warn(
             f"{warn_name}: label propagation did not converge in "
@@ -544,22 +537,26 @@ def min_label_components(
             RuntimeWarning,
             stacklevel=2,
         )
+    id_type = nodes.schema[id_col].dataType
+    node = F.col(id_col).cast("long")
     out = (
-        nodes.select(F.col(id_col))
-        .join(labels.select(F.col("node").alias(id_col), "label"), id_col, "left")
+        nodes.select(node.alias("node"), node.alias("label"), F.lit(1).alias("rows"))
+        .unionByName(labels.select("node", "label", F.lit(0).alias("rows")))
+        .groupBy("node")
+        .agg(F.min("label").alias("cluster_id"), F.sum("rows").alias("rows"))
+        .filter(F.col("rows") > 0)  # edge endpoints outside nodes drop out
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
+            F.col("node").cast(id_type).alias(id_col),
+            "cluster_id",
+            F.explode(F.array_repeat(F.lit(0), F.col("rows").cast("int"))).alias("_rep"),
         )
+        .drop("_rep")
         .localCheckpoint(eager=True)
     )
-    edges.unpersist()
-    # out is itself checkpointed, so the final label generation's blocks
-    # can go too (cp_ids names exactly that generation)
-    jmap = edges.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for rid in cp_ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
+    # out is pinned itself, so the edge list and the last label
+    # generation go (the seed alone is no pin)
+    _unpersist_checkpoint(edges)
+    _unpersist_checkpoint(labels)
     return out
 
 

@@ -3931,10 +3931,10 @@ def graph_components_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Components come from the generic min-label propagation
     (operators/graph.py::min_label_components — the dedup_clusters loop
-    extracted over any edge list): per round one equi-join + one groupBy
-    on the catalog-bounded edge set, two-generation persistence bound,
-    exact fixed-point detection.  Output is bounded by the distinct-size
-    count."""
+    over any edge list): per round a pointer jump and a neighbour-min over
+    the catalog-bounded edge set, two-generation persistence bound, and a
+    stop in the round no label falls.  Output is bounded by the
+    distinct-size count."""
     from ..operators.graph import min_label_components
 
     items = _event_items(spark, sf_dir).select(F.col("item")).distinct()

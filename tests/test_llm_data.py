@@ -442,9 +442,9 @@ def test_duplicate_clusters_warns_on_nonconvergence(spark):
 
 
 def test_duplicate_clusters_rejects_non_numeric_id(spark):
-    """String ids would NULL out the decimal convergence sum (None == None
-    declares convergence after one round) — must raise, not silently
-    return non-transitive clusters."""
+    """String ids have no bigint label (the cast fails, or turns them into
+    NULLs that join no edge) — must raise a TypeError up front, not fail
+    deep in the loop or return wrong clusters."""
     import pytest as _pytest
 
     from test_flink_spark.operators.dedup import duplicate_clusters
@@ -1197,6 +1197,30 @@ def test_containment_flags_subsumed_doc(spark):
     assert r["containment_bp"] == 10000 and r["n_b"] == 3  # 5 words -> 3 shingles
     # and Jaccard for the same pair is 3/38 — invisible to the 0.5 bar
     assert r["shared"] == 3 and r["n_a"] == 38
+
+
+def test_containment_pairs_releases_shingle_index(spark):
+    """Each call leaves only its pinned result: the capped shingle index
+    is released, so releasing the result keeps the session's pins from
+    growing over repeated calls."""
+    from test_flink_spark.operators.dedup import (
+        _unpersist_checkpoint,
+        containment_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(i, " ".join(f"w{j}" for j in range(i, i + 12))) for i in range(20)],
+        "doc_id LONG, text STRING",
+    )
+    # compared as id sets: pins of earlier tests may be cleaned meanwhile
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(jmap().keySet().toArray())
+    for _ in range(3):
+        out = containment_pairs(df, threshold_bp=5000)
+        assert len(set(jmap().keySet().toArray()) - before) == 1
+        assert out.count() > 0
+        _unpersist_checkpoint(out)
+        assert not set(jmap().keySet().toArray()) - before
 
 
 def test_minhash_audit_candidates_have_band_floor(spark):
