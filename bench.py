@@ -99,7 +99,7 @@ def run_one(name: str, reps: int = 3) -> None:
 
     import __spark_entry__ as entry
     from test_flink_spark.plans import llm_data
-    from test_flink_spark.session import get_spark
+    from test_flink_spark.session import get_spark, pins
 
     spark = get_spark("bench-one")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -107,12 +107,13 @@ def run_one(name: str, reps: int = 3) -> None:
     best = float("inf")
     for _ in range(reps):
         for cache_attr in _OWNED_CACHES.get(name, ()):
-            # unpersists any pinned DataFrame entries before dropping
+            # releases any pinned DataFrame entries before dropping
             # (no-op for the codebook tuples _SAMPLED_BOOKS_CACHE holds)
             llm_data.release_pinned_cache(getattr(llm_data, cache_attr))
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
+        with pins():  # the query's own pins go after each rep, untimed
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            best = min(best, time.perf_counter() - t0)
     print(json.dumps({"name": name, "sec": round(best, 2)}))
 
 
@@ -182,7 +183,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entry
-    from test_flink_spark.session import get_spark
+    from test_flink_spark.session import get_spark, pins
 
     spark = get_spark("bench")
     # Warm the JVM/codegen paths once so the first measured query doesn't
@@ -260,9 +261,8 @@ def main() -> None:
 
     best = float("inf")
     for _ in range(reps):
-        # unpersist-then-clear (r12 ADVICE): a bare clear() left each
-        # superseded rep's eagerly-checkpointed pair table pinned until
-        # ContextCleaner GC
+        # release, not clear(): a bare clear() left each superseded rep's
+        # pair table pinned until a JVM GC ran the ContextCleaner
         release_pinned_cache(_PAIR_BASE_CACHE)
         t0 = time.perf_counter()
         _shared_pair_base(spark, sf_dir)  # eager localCheckpoint materializes
@@ -312,10 +312,11 @@ def main() -> None:
         fn = qs[name]
         best = float("inf")
         for _ in range(reps):
-            t0 = time.perf_counter()
-            # noop sink: full materialization of every projected column
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+            with pins():  # the query's own pins go after each rep, untimed
+                t0 = time.perf_counter()
+                # noop sink: full materialization of every projected column
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 2)
         print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
 

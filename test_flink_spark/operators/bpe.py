@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import persist, pins
 from .text import words
 
 TOKEN_RE = "^[a-z]+$"  # lowercase-ASCII word types: keeps '(.)' per-char
@@ -92,21 +93,22 @@ def bpe_learn(
     """Learn ``n_merges`` BPE merges: returns ``(merge_round, pair,
     pair_count)`` — one row per learned merge, the driver-side K-row
     report shape (corpus_vocab_coverage precedent)."""
-    types_df = _word_types(df, text_col).cache()
-    out = []
-    for r in range(1, n_merges + 1):
-        top = (
-            _pair_counts(types_df)
-            .orderBy(F.col("cnt").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        pair, cnt = top[0]["pair"], top[0]["cnt"]
-        out.append((r, pair, int(cnt)))
-        if r < n_merges:
-            types_df = _apply_merge(types_df, pair).cache()
+    with pins():
+        types_df = persist(_word_types(df, text_col))
+        out = []
+        for r in range(1, n_merges + 1):
+            top = (
+                _pair_counts(types_df)
+                .orderBy(F.col("cnt").desc(), F.col("pair").asc())
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            pair, cnt = top[0]["pair"], top[0]["cnt"]
+            out.append((r, pair, int(cnt)))
+            if r < n_merges:
+                types_df = persist(_apply_merge(types_df, pair))
     return spark.createDataFrame(
         out, "merge_round BIGINT, pair STRING, pair_count BIGINT"
     )

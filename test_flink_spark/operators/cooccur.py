@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 LIFT_SCALE = 1_000_000
 
 
@@ -170,7 +172,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     chain) is computed once, not three times, and the resulting plan is
     three scans of an O(items·k) edge table instead of a tripled lineage
     tree (graph.py discipline)."""
-    edges = edges.localCheckpoint(eager=True)
+    edges = pin(edges)
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))

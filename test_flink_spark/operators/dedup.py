@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, pins
 from .fanout import fan_out
 from .text import let, word_ngrams, words
 
@@ -65,20 +66,6 @@ MINHASH_MOD = 2147483647
 # Pass max_doc_freq=None for the exact uncapped form (audit harnesses on
 # bounded strata only).
 NGRAM_MAX_DOC_FREQ = 256
-
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Release an eager ``localCheckpoint``'s blocks (PySpark has no public
-    unpersist for them): resolve the LogicalRDD's own RDD id and unpersist
-    at the RDD level — the graph._rolling_checkpoint discipline, exposed
-    for one-shot pins like the stop-shingle hot set."""
-    try:
-        rid = df._jdf.queryExecution().analyzed().rdd().id()
-        jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
-    except Exception:  # noqa: BLE001 — internals moved; blocks stay pinned
-        pass
 
 
 def minhash_coeffs(num_perm: int) -> list[tuple[int, int]]:
@@ -151,17 +138,11 @@ def capped_shingle_hashes(
     id_col: str = "doc_id",
     n: int = 3,
     max_doc_freq: int | None = NGRAM_MAX_DOC_FREQ,
-    _hot_out: list | None = None,
 ) -> DataFrame:
     """The shingle index of the exact pair operators: ``shingle_hashes``
     minus every shingle found in more than ``max_doc_freq`` documents,
-    pinned by an eager ``localCheckpoint``.  ``max_doc_freq=None`` returns
-    the uncapped, unpinned ``shingle_hashes``.
-
-    ``_hot_out``, when given, receives the pinned table: the caller
-    releases it with ``_unpersist_checkpoint`` once its consumer has
-    materialized (a long-running service must not accumulate one pinned
-    table per call).
+    pinned (``session.pin``: the enclosing scope releases it).
+    ``max_doc_freq=None`` returns the uncapped, unpinned ``shingle_hashes``.
 
     The key is the 60-bit HASH, not the n-gram string: the inverted-index
     self-join is the dominant exchange, and an 8-byte int key shuffles
@@ -183,14 +164,9 @@ def capped_shingle_hashes(
     # materialization each branch re-runs the shingle pass, the freq
     # aggregation and the anti-join — four corpus passes per query
     # (measured: the shared dedup stage tripled when the r12 cap rollout
-    # pinned only `hot`).  The pin is O(doc-shingle rows) of 16-byte
-    # (id, hash) pairs, MEMORY_AND_DISK, and at 100 TB it is the same
-    # artifact a production pipeline persists as its shingle index table
-    # instead of re-deriving per consumer.
-    sh = sh.join(hot, "h", "left_anti").localCheckpoint(eager=True)
-    if _hot_out is not None:
-        _hot_out.append(sh)
-    return sh
+    # pinned only `hot`).  Its lifetime: docs/DESIGN_DECISIONS.md, "Pin
+    # ownership".
+    return pin(sh.join(hot, "h", "left_anti"))
 
 
 def shingle_overlaps(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -226,7 +202,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = NGRAM_MAX_DOC_FREQ,
-    _hot_out: list | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard similarity.
 
@@ -244,9 +219,9 @@ def ngram_jaccard_pairs(
     doc-frequency filter, and the cap cannot bind below sf10 on the
     certified fixtures — see the constant's docstring).  None = exact
     uncapped (bounded audit strata only; quadratic under hot shingles).
-    ``_hot_out`` is ``capped_shingle_hashes``' release handle.
+    The capped index is pinned in the caller's scope.
     """
-    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq, _hot_out)
+    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq)
     out = shingle_overlaps(sh, id_col).select(
         "id_a",
         "id_b",
@@ -280,16 +255,13 @@ def containment_pairs(
     float crosses the engine boundary.
 
     Returns (id_a, id_b, n_a, n_b, shared, containment_bp) with
-    id_a < id_b and containment_bp >= threshold_bp, pinned by an eager
-    ``localCheckpoint`` so the capped shingle index can be released: the
-    call leaves the result as its one pin, which the caller may release
-    with ``_unpersist_checkpoint``.
+    id_a < id_b and containment_bp >= threshold_bp, pinned so the capped
+    shingle index can be released: the result is the one pin the call
+    hands to its caller.
     """
-    hot_handles: list = []
-    sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq, hot_handles)
-    out = (
-        shingle_overlaps(sh, id_col)
-        .select(
+    with pins() as p:
+        sh = capped_shingle_hashes(df, text_col, id_col, n, max_doc_freq)
+        out = shingle_overlaps(sh, id_col).select(
             "id_a",
             "id_b",
             F.col("n_a").cast("long").alias("n_a"),
@@ -299,12 +271,7 @@ def containment_pairs(
                 "containment_bp"
             ),
         )
-        .filter(F.col("containment_bp") >= threshold_bp)
-        .localCheckpoint(eager=True)
-    )
-    for h in hot_handles:
-        _unpersist_checkpoint(h)
-    return out
+        return p.returning(pin(out.filter(F.col("containment_bp") >= threshold_bp)))
 
 
 def minhash_signatures(
@@ -488,12 +455,14 @@ def minhash_lsh_pairs(
     # broadcast build, so exchange reuse never fires and the shingle +
     # minhash pass ran twice — materialize once (the
     # incremental_lsh_dedup precedent)
-    banded = lsh_band_keys(
-        minhash_signatures(df, text_col, id_col, num_perm, shingle_n),
-        id_col=id_col,
-        num_perm=num_perm,
-        bands=bands,
-    ).localCheckpoint(eager=True)
+    banded = pin(
+        lsh_band_keys(
+            minhash_signatures(df, text_col, id_col, num_perm, shingle_n),
+            id_col=id_col,
+            num_perm=num_perm,
+            bands=bands,
+        )
+    )
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -539,12 +508,14 @@ def incremental_lsh_dedup(
     # consumed three times (index probe + both sides of the self-join):
     # materialize once so the shard's shingle+minhash pass runs once, not
     # three times (the triangle_counts lesson)
-    shard_bands = lsh_band_keys(
-        minhash_signatures(shard, text_col, id_col, num_perm, shingle_n),
-        id_col=id_col,
-        num_perm=num_perm,
-        bands=bands,
-    ).localCheckpoint(eager=True)
+    shard_bands = pin(
+        lsh_band_keys(
+            minhash_signatures(shard, text_col, id_col, num_perm, shingle_n),
+            id_col=id_col,
+            num_perm=num_perm,
+            bands=bands,
+        )
+    )
     s, c = shard_bands.alias("s"), corpus_index.alias("c")
     vs_corpus = s.join(
         c,
@@ -790,9 +761,8 @@ def simhash64_pairs(
             f"banding is lossy: max_hamming={max_hamming} needs "
             f"> {n_bands - 1} bands (pigeonhole)"
         )
-    sh = simhash64(df, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=True
-    )  # referenced by both sides of the band self-join
+    # referenced by both sides of the band self-join
+    sh = pin(simhash64(df, text_col=text_col, id_col=id_col))
     band_structs = F.array(
         *[
             F.struct(
@@ -858,15 +828,15 @@ def simhash_clusters_w64(
             f"banding is lossy: max_hamming={max_hamming} needs "
             f"> {n_bands - 1} bands (pigeonhole)"
         )
-    edges = simhash64_pairs(
-        df, text_col=text_col, id_col=id_col, max_hamming=max_hamming
-    )
-    return min_label_components(
-        edges,
-        df.select(F.col(id_col)),
-        id_col,
-        warn_name="simhash_clusters_w64",
-    )
+    with pins() as p:
+        edges = simhash64_pairs(
+            df, text_col=text_col, id_col=id_col, max_hamming=max_hamming
+        )
+        return p.returning(
+            min_label_components(
+                edges, df.select(F.col(id_col)), id_col, warn_name="simhash_clusters_w64"
+            )
+        )
 
 
 def duplicate_clusters(
@@ -891,15 +861,14 @@ def duplicate_clusters(
     so detection costs no extra pass and no extra round.  The rounds are a
     Python loop over Spark jobs (the one sanctioned kind: iterative graph
     algorithms, as in GraphX Pregel).  Near-dup clusters are clique-like,
-    so one round usually converges; ``max_iter`` bounds pathological
-    chains, and the loop WARNS if it exits un-converged (a chain longer
-    than ``max_iter`` hops would otherwise silently return partial
-    clusters).
+    so one round usually converges; ``max_iter`` bounds the neighbour-min
+    steps, and the loop WARNS if the labels have not reached their fixed
+    point within it (the clusters returned then are partial).  A chain
+    with shuffled ids much shorter than ``max_iter`` hops can exhaust it
+    too: the pointer jump shortcuts only along ascending ids.
 
-    Memory discipline at scale: the edge list and at most two label
-    generations are pinned at any moment, each superseded generation is
-    released as soon as its successor is materialized, and the returned
-    DataFrame is an eager ``localCheckpoint``: the one pin a call leaves.
+    The returned DataFrame is pinned: the one pin a call hands to its
+    caller.
 
     The loop iterates ONLY over nodes incident to an edge (the duplicate
     subgraph) — singleton documents, the overwhelming majority of any real
@@ -920,26 +889,21 @@ def duplicate_clusters(
             f"bigint. Map string ids to BIGINT first "
             f"(e.g. conv(substring(md5(id),1,15),16,10))."
         )
-    hot_handles: list = []
-    pairs = ngram_jaccard_pairs(
-        df, text_col, id_col, threshold=threshold, max_doc_freq=max_doc_freq,
-        _hot_out=hot_handles,
-    ).select("id_a", "id_b")
     from .graph import min_label_components
 
-    out = min_label_components(
-        pairs,
-        df.select(F.col(id_col)),
-        id_col,
-        max_iter=max_iter,
-        warn_name="duplicate_clusters",
-    )
-    # min_label_components returns an eager localCheckpoint — the hot-set
-    # pin is no longer reachable from any live plan, so release it here
-    # (the cache-discipline contract: <= 1 persistent RDD survives a call)
-    for h in hot_handles:
-        _unpersist_checkpoint(h)
-    return out
+    with pins() as p:
+        pairs = ngram_jaccard_pairs(
+            df, text_col, id_col, threshold=threshold, max_doc_freq=max_doc_freq
+        ).select("id_a", "id_b")
+        return p.returning(
+            min_label_components(
+                pairs,
+                df.select(F.col(id_col)),
+                id_col,
+                max_iter=max_iter,
+                warn_name="duplicate_clusters",
+            )
+        )
 
 
 def minhash_signature_expr(
@@ -1026,7 +990,7 @@ def simhash_clusters(
     hamming <= n_bands-1 guarantees >= 1 identical band, so banding is
     lossless for ``max_hamming`` <= n_bands-1) → XOR+bit_count verify →
     min-label connected components (operators/graph.py — pointer-jumped,
-    rolling-checkpointed).  Never all-pairs: the only join is band-key
+    one pinned generation per round).  Never all-pairs: the only join is band-key
     equality; the hash rides through the band explode so the verify
     needs no join back.  See plans/llm_data.dedup_simhash_clusters for
     the registered query + DuckDB oracle."""
@@ -1038,48 +1002,47 @@ def simhash_clusters(
             f"> {n_bands - 1} bands (pigeonhole)"
         )
     width = 32 // n_bands
-    sh = simhash(df, text_col=text_col, id_col=id_col, bits=32).localCheckpoint(
-        eager=True
-    )  # referenced by both sides of the band self-join
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(f"(simhash >> {width * b}) & {(1 << width) - 1}").alias(
-                    "key"
-                ),
+    with pins() as p:
+        # referenced by both sides of the band self-join
+        sh = pin(simhash(df, text_col=text_col, id_col=id_col, bits=32))
+        band_structs = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.expr(f"(simhash >> {width * b}) & {(1 << width) - 1}").alias(
+                        "key"
+                    ),
+                )
+                for b in range(n_bands)
+            ]
+        )
+        bands = sh.select(
+            F.col(id_col), "simhash", F.explode(band_structs).alias("bk")
+        ).select(F.col(id_col), "simhash", "bk.band", "bk.key")
+        a, b = bands.alias("a"), bands.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.key") == F.col("b.key"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
             )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sh.select(
-        F.col(id_col), "simhash", F.explode(band_structs).alias("bk")
-    ).select(F.col(id_col), "simhash", "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            .select(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+                F.col("a.simhash").alias("ha"),
+                F.col("b.simhash").alias("hb"),
+            )
+            .distinct()
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
+        edges = cand.filter(
+            F.expr(f"bit_count(ha ^ hb) <= {max_hamming}")
+        ).select("id_a", "id_b")
+        return p.returning(
+            min_label_components(
+                edges, df.select(F.col(id_col)), id_col, warn_name="simhash_clusters"
+            )
         )
-        .distinct()
-    )
-    edges = cand.filter(
-        F.expr(f"bit_count(ha ^ hb) <= {max_hamming}")
-    ).select("id_a", "id_b")
-    return min_label_components(
-        edges,
-        df.select(F.col(id_col)),
-        id_col,
-        warn_name="simhash_clusters",
-    )
 
 
 def incremental_cluster_merge(
@@ -1120,7 +1083,10 @@ def incremental_cluster_merge(
 
     la = prior.select(F.col(id_col).alias("id_a"), F.col("cluster_id").alias("la"))
     lb = prior.select(F.col(id_col).alias("id_b"), F.col("cluster_id").alias("lb"))
-    cond_edges = (
+    # the condensed graph is tiny (touched clusters + shard) but its
+    # lineage hangs off the full candidate-generation plan — cut it so
+    # the CC loop's per-round plans stay constant-size
+    cond_edges = pin(
         new_edges.select("id_a", "id_b")
         .join(la, "id_a", "left")
         .join(lb, "id_b", "left")
@@ -1130,10 +1096,6 @@ def incremental_cluster_merge(
         )
         .filter(F.col("id_a") != F.col("id_b"))
         .distinct()
-        # the condensed graph is tiny (touched clusters + shard) but its
-        # lineage hangs off the full candidate-generation plan — cut it so
-        # the CC loop's per-round plans stay constant-size
-        .localCheckpoint(eager=True)
     )
     cond_nodes = (
         cond_edges.select(F.col("id_a").alias(id_col))

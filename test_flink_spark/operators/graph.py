@@ -25,7 +25,7 @@ Scale shape (100 TB): the edge list is the big table; ranks are O(nodes).
 Each iteration is one equi-join ranks->edges on src (co-partitionable by
 bucketing both on the node key; AQE splits skewed hubs) and one groupBy
 dst with map-side partial sums.  Iterations are a fixed small constant,
-and each intermediate rank table is eagerly localCheckpoint-ed so the
+and each intermediate rank table is pinned (``session.pin``) so the
 final plan is 1 join deep, not iterations-deep (the dedup_clusters
 lineage-truncation lesson).
 """
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import persist, pin, pins
 
 SCALE = 10**12
 DAMP_NUM = 85  # damping 0.85 as an exact integer percentage
@@ -61,52 +63,6 @@ def symmetrize_edges(
     ).select(f"e.{src}", f"e.{dst}")
 
 
-def _rolling_checkpoint(df: DataFrame, prior_ids: set) -> DataFrame:
-    """Eager localCheckpoint that FREES the previous generation's blocks.
-
-    Tradeoff being bought, stated plainly (the documented Spark caveat):
-    localCheckpoint stores blocks on executors (MEMORY_AND_DISK) with NO
-    lineage fallback, so an executor loss mid-job fails the query instead
-    of recomputing.  Accepted here because a failed analytics query is
-    rerunnable, while an iterations-deep logical plan is often not even
-    plannable; jobs needing fault tolerance across executor loss should
-    use reliable checkpoint(dir) instead.
-
-    Storage bound: without cleanup every iteration's blocks accumulate
-    for the life of the session (localCheckpoint has no public unpersist
-    in PySpark).  This helper records THE CHECKPOINTED DATASET'S OWN
-    RDD id (the LogicalRDD the eager checkpoint returns), then
-    unpersists the ids recorded by the PREVIOUS call — so at most two
-    generations are live at any instant, and ``prior_ids`` (mutated in
-    place) always names the current one.  Safe because eager=True fully
-    materializes the new generation before the superseded one is
-    dropped.  Recording the owned id (not a getPersistentRDDs
-    before/after diff) matters: a lazily-registered FOREIGN cache (e.g.
-    an edges.cache() whose persistent RDD first registers while the
-    checkpoint job materializes it) would land in a diff and be
-    unpersisted by the next call — silently dropping the cached edge
-    list the iteration loop depends on (perf, not correctness: lineage
-    recompute still works).  The diff remains only as a fallback if the
-    LogicalRDD internals are unreachable.
-    """
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=True)
-    jmap = sc._jsc.getPersistentRDDs()
-    try:
-        # Dataset.localCheckpoint returns LogicalRDD(output, internalRdd)
-        # where internalRdd is exactly the persisted RDD.
-        new_ids = {out._jdf.queryExecution().analyzed().rdd().id()}
-    except Exception:  # noqa: BLE001 — internals moved; fall back to diff
-        new_ids = set(jmap.keySet().toArray()) - before
-    for rid in prior_ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
-    prior_ids.clear()
-    prior_ids.update(new_ids)
-    return out
-
-
 def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """PageRank over ``edges(src, dst)`` (pre-deduplicated, every node with
     out-degree >= 1): returns ``(node, rank_fp)`` with rank in SCALE
@@ -121,80 +77,73 @@ def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
     cache and 1.3-1.7 s with broadcast-hinted contribs — and unlike the
     broadcast hint, co-partitioning stays correct when nodes outgrow one
     executor's memory (billion-node graphs)."""
-    edges = edges.repartition(F.col("src")).cache()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).cache()
-    # Dangling check by COUNT, not anti-join: deg.src ⊆ nodes always, so
-    # |deg| == |nodes| ⇔ every node has out-degree >= 1.  Two counts over
-    # cached/tiny relations replace a left_anti join job.
-    n_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .count()
-    )
-    n_out = deg.count()
-    if n_out < n_nodes:
-        raise ValueError(
-            f"{n_nodes - n_out} node(s) have out-degree 0 — symmetrize the "
-            "edge list or add self-loops; this operator has no "
-            "dangling-mass term"
+    with pins() as p:
+        edges = persist(edges.repartition(F.col("src")))
+        deg = persist(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+        # Dangling check by COUNT, not anti-join: deg.src ⊆ nodes always, so
+        # |deg| == |nodes| ⇔ every node has out-degree >= 1.  Two counts over
+        # cached/tiny relations replace a left_anti join job.
+        n_nodes = (
+            edges.select(F.col("src").alias("node"))
+            .unionAll(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .count()
         )
-    # out-degree rides along with the rank so each iteration is ONE join
-    # against the edge list (ranks ⋈ edges on src) plus ONE join of the
-    # inflow back onto the rank table — and the init needs NO join at
-    # all: after the dangling check, deg's key set IS the node set, so
-    # deg itself seeds the rank table.
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        F.lit(SCALE).cast("long").alias("rank_fp"),
-        "deg",
-    )
-    cp_ids: set = set()
-    for _ in range(iterations):
-        # shuffle_hash hints (MEASURED, sf0.1 warm: 2.7 s vs 3.4 s for
-        # the 5-iteration loop): the cached edge relation preserves its
-        # hash PARTITIONING but not sort order, so sort-merge join would
-        # re-sort all O(edges) rows EVERY iteration; hashing the small
-        # side instead streams edges unsorted.  Scale-safe, unlike a
-        # broadcast: the build side is one shuffle partition's slice of
-        # the O(nodes) contrib table — it shrinks as partitions are
-        # added, and nothing is replicated to every executor.
-        contribs = ranks.select(
-            F.col("node").alias("src"),
-            F.expr("rank_fp div deg").alias("contrib"),
-        ).hint("shuffle_hash")
-        inbound = (
-            edges.join(contribs, "src")
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("inflow"))
-        ).hint("shuffle_hash")
-        ranks = (
-            ranks.join(inbound, ranks.node == inbound.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(BASE).cast("long")
-                    + F.expr(f"({DAMP_NUM} * coalesce(inflow, 0)) div 100")
-                ).alias("rank_fp"),
-                "deg",
+        n_out = deg.count()
+        if n_out < n_nodes:
+            raise ValueError(
+                f"{n_nodes - n_out} node(s) have out-degree 0 — symmetrize the "
+                "edge list or add self-loops; this operator has no "
+                "dangling-mass term"
             )
+        # out-degree rides along with the rank so each iteration is ONE join
+        # against the edge list (ranks ⋈ edges on src) plus ONE join of the
+        # inflow back onto the rank table — and the init needs NO join at
+        # all: after the dangling check, deg's key set IS the node set, so
+        # deg itself seeds the rank table.
+        ranks = deg.select(
+            F.col("src").alias("node"),
+            F.lit(SCALE).cast("long").alias("rank_fp"),
+            "deg",
         )
-        # eager rolling checkpoint, not cache()+count(): both materialize,
-        # but only the checkpoint truncates the LOGICAL plan — explain()
-        # on a cached iteration still prints the full nested lineage
-        # (thousands of phantom exchanges in the audit), while the
-        # checkpointed plan is 1 iteration deep for planner and reader
-        # alike.  (duplicate_clusters discipline, dedup.py:403.)  See
-        # _rolling_checkpoint for the executor-loss tradeoff + storage
-        # bound (superseded generations are unpersisted, not leaked).
-        ranks = _rolling_checkpoint(ranks, cp_ids)
-    # edges/deg caches are deliberately LEFT ALIVE: the session
-    # CacheManager serves them to any later pagerank over the same edge
-    # list (the resident-service shape bench's min-over-reps measures);
-    # storage is bounded by the edge list (deg is O(nodes), smaller), and
-    # the per-iteration checkpoint generations — the part that scales
-    # with iterations — are still rolled by _rolling_checkpoint.
-    return ranks.select("node", "rank_fp")
+        for _ in range(iterations):
+            # shuffle_hash hints (MEASURED, sf0.1 warm: 2.7 s vs 3.4 s for
+            # the 5-iteration loop): the cached edge relation preserves its
+            # hash PARTITIONING but not sort order, so sort-merge join would
+            # re-sort all O(edges) rows EVERY iteration; hashing the small
+            # side instead streams edges unsorted.  Scale-safe, unlike a
+            # broadcast: the build side is one shuffle partition's slice of
+            # the O(nodes) contrib table — it shrinks as partitions are
+            # added, and nothing is replicated to every executor.
+            contribs = ranks.select(
+                F.col("node").alias("src"),
+                F.expr("rank_fp div deg").alias("contrib"),
+            ).hint("shuffle_hash")
+            inbound = (
+                edges.join(contribs, "src")
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("inflow"))
+            ).hint("shuffle_hash")
+            ranks = (
+                ranks.join(inbound, ranks.node == inbound.dst, "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(BASE).cast("long")
+                        + F.expr(f"({DAMP_NUM} * coalesce(inflow, 0)) div 100")
+                    ).alias("rank_fp"),
+                    "deg",
+                )
+            )
+            # eager checkpoint, not cache()+count(): both materialize, but
+            # only the checkpoint truncates the LOGICAL plan — explain() on
+            # a cached iteration still prints the full nested lineage
+            # (thousands of phantom exchanges in the audit), while the
+            # checkpointed plan is 1 iteration deep for planner and reader
+            # alike.  The superseded generation is released; lifetimes:
+            # docs/DESIGN_DECISIONS.md, "Pin ownership".
+            ranks = pin(ranks, replaces=ranks)
+        return p.returning(ranks).select("node", "rank_fp")
 
 
 def pagerank_oracle_cte(edges_sql: str, iterations: int = 5) -> str:
@@ -239,42 +188,37 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     equi-join of the symmetrized edge list against the O(nodes) label
     table + one (node, label) groupBy with map-side partials + one
     per-node argmax window — all keyed on the node, co-partitionable;
-    intermediates eagerly localCheckpoint so lineage stays 1 iteration
-    deep."""
+    intermediates are pinned so lineage stays 1 iteration deep."""
     from pyspark.sql import Window
 
-    sym = (
-        edges.select(F.col("a").alias("v"), F.col("b").alias("nb"))
-        .unionAll(edges.select(F.col("b").alias("v"), F.col("a").alias("nb")))
-        .cache()
-    )
-    nodes = sym.select("v").distinct().cache()
-    labels = nodes.select("v", F.col("v").alias("community"))
-    w = Window.partitionBy("v").orderBy(
-        F.col("n").desc(), F.col("community").asc()
-    )
-    cp_ids: set = set()
-    for _ in range(iterations):
-        nb_votes = (
-            sym.join(
-                labels.select(F.col("v").alias("nb"), "community"), "nb"
-            ).select("v", "community")
+    with pins() as p:
+        sym = persist(
+            edges.select(F.col("a").alias("v"), F.col("b").alias("nb"))
+            .unionAll(edges.select(F.col("b").alias("v"), F.col("a").alias("nb")))
         )
-        votes = nb_votes.unionAll(labels.select("v", "community"))
-        counted = votes.groupBy("v", "community").agg(
-            F.count(F.lit(1)).alias("n")
+        nodes = persist(sym.select("v").distinct())
+        labels = nodes.select("v", F.col("v").alias("community"))
+        w = Window.partitionBy("v").orderBy(
+            F.col("n").desc(), F.col("community").asc()
         )
-        labels = (
-            counted.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("v", "community")
-        )
-        # eager rolling checkpoint (see pagerank / _rolling_checkpoint):
-        # truncates logical lineage AND unpersists the prior generation.
-        labels = _rolling_checkpoint(labels, cp_ids)
-    # sym/nodes caches left alive for cross-invocation reuse (see the
-    # pagerank note); checkpoint generations are the rolled part.
-    return labels.select(F.col("v").alias("node"), "community")
+        for _ in range(iterations):
+            nb_votes = (
+                sym.join(
+                    labels.select(F.col("v").alias("nb"), "community"), "nb"
+                ).select("v", "community")
+            )
+            votes = nb_votes.unionAll(labels.select("v", "community"))
+            counted = votes.groupBy("v", "community").agg(
+                F.count(F.lit(1)).alias("n")
+            )
+            labels = (
+                counted.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .select("v", "community")
+            )
+            # truncates logical lineage, releases the prior generation
+            labels = pin(labels, replaces=labels)
+        return p.returning(labels).select(F.col("v").alias("node"), "community")
 
 
 def label_propagation_oracle_cte(edges_sql: str, iterations: int = 3) -> str:
@@ -322,8 +266,8 @@ def bfs_distances(
     ``max_hops`` relaxation rounds, each ONE equi-join of the frontier
     against the edge list + a min-aggregate merge — so the oracle
     replays it as an unrolled CTE chain, and unreached nodes simply
-    don't appear (no sentinel distances).  Rolling local checkpoints
-    bound lineage and storage exactly as in pagerank.
+    don't appear (no sentinel distances).  Pinned generations bound
+    lineage exactly as in pagerank.
 
     Scale: per round the exchange carries (node, dist) pairs; the edge
     list is hash-partitioned on src once and reused (cached) across
@@ -331,28 +275,28 @@ def bfs_distances(
     distance improved) is the classic refinement — omitted here because
     the merge already prunes non-improvements and the fixed K is small;
     the plan stays one join + one groupBy per round either way."""
-    edges = edges.repartition(F.col("src")).cache()
-    dist = seeds.select(F.col("node"), F.lit(0).cast("long").alias("d"))
-    cp_ids: set = set()
-    for _ in range(max_hops):
-        # shuffle_hash for the same reason as the pagerank loop: the
-        # cached edge partitioning survives but its sort order doesn't,
-        # and hashing the O(reached-nodes) frontier slice beats
-        # re-sorting O(edges) rows every round.
-        reached = (
-            edges.join(
-                dist.withColumnRenamed("node", "src").hint("shuffle_hash"),
-                "src",
+    with pins() as p:
+        edges = persist(edges.repartition(F.col("src")))
+        dist = seeds.select(F.col("node"), F.lit(0).cast("long").alias("d"))
+        for _ in range(max_hops):
+            # shuffle_hash for the same reason as the pagerank loop: the
+            # cached edge partitioning survives but its sort order doesn't,
+            # and hashing the O(reached-nodes) frontier slice beats
+            # re-sorting O(edges) rows every round.
+            reached = (
+                edges.join(
+                    dist.withColumnRenamed("node", "src").hint("shuffle_hash"),
+                    "src",
+                )
+                .select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
             )
-            .select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-        )
-        dist = _rolling_checkpoint(dist, cp_ids)
-    return dist.select("node", F.col("d").alias("hops"))
+            dist = (
+                dist.unionByName(reached)
+                .groupBy("node")
+                .agg(F.min("d").alias("d"))
+            )
+            dist = pin(dist, replaces=dist)
+        return p.returning(dist).select("node", F.col("d").alias("hops"))
 
 
 def bfs_oracle_cte(edges_sql: str, seeds_sql: str, max_hops: int = 4) -> str:
@@ -391,44 +335,44 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     src rows — one groupBy, no union of endpoints.  Survivor filtering is
     two equi-joins against the (distinct-key) alive set: semi-join
     semantics on the shuffle-hash fast path, never a broadcast of a
-    relation that shrinks with DATA only (alive is O(nodes)).  Rolling
-    local checkpoints bound lineage exactly as in pagerank.
+    relation that shrinks with DATA only (alive is O(nodes)).  Pinned
+    generations bound lineage exactly as in pagerank.
 
     Returns (round, n_nodes, n_edges): one row per peel round, counts
     AFTER that round's peel."""
-    edges = edges.repartition(F.col("src")).cache()
-    cur = edges
-    cp_ids: set = set()
-    per_round = []
-    for i in range(1, rounds + 1):
-        alive = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
-        )
-        cur = (
-            cur.join(alive.hint("shuffle_hash"), "src")
-            .join(
-                alive.withColumnRenamed("src", "dst").hint("shuffle_hash"),
-                "dst",
+    with pins() as p:
+        edges = persist(edges.repartition(F.col("src")))
+        cur = edges
+        per_round = []
+        for i in range(1, rounds + 1):
+            alive = (
+                cur.groupBy("src")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .filter(F.col("deg") >= k)
+                .select("src")
             )
-            .select("src", "dst")
+            cur = (
+                cur.join(alive.hint("shuffle_hash"), "src")
+                .join(
+                    alive.withColumnRenamed("src", "dst").hint("shuffle_hash"),
+                    "dst",
+                )
+                .select("src", "dst")
+            )
+            cur = pin(cur, replaces=cur)
+            # Eager 1-row collect per round: each pin releases the previous
+            # generation, so a lazily-evaluated round-1 stats frame would
+            # read freed blocks at final-union time.  The counts
+            # are O(rounds) metadata — collecting them is the same bounded-
+            # collect class as the prefix-sum offset map.
+            row = cur.agg(
+                F.countDistinct("src").alias("n_nodes"),
+                F.count(F.lit(1)).alias("n_edges"),
+            ).collect()[0]
+            per_round.append((i, int(row["n_nodes"]), int(row["n_edges"])))
+        return edges.sparkSession.createDataFrame(
+            per_round, "round long, n_nodes long, n_edges long"
         )
-        cur = _rolling_checkpoint(cur, cp_ids)
-        # Eager 1-row collect per round: the rolling checkpoint frees
-        # generation i-2's blocks, so a lazily-evaluated round-1 stats
-        # frame would read freed blocks at final-union time.  The counts
-        # are O(rounds) metadata — collecting them is the same bounded-
-        # collect class as the prefix-sum offset map.
-        row = cur.agg(
-            F.countDistinct("src").alias("n_nodes"),
-            F.count(F.lit(1)).alias("n_edges"),
-        ).collect()[0]
-        per_round.append((i, int(row["n_nodes"]), int(row["n_edges"])))
-    return edges.sparkSession.createDataFrame(
-        per_round, "round long, n_nodes long, n_edges long"
-    )
 
 
 def kcore_oracle_cte(edges_sql: str, k: int = 3, rounds: int = 3) -> str:
@@ -482,82 +426,79 @@ def min_label_components(
 
     from pyspark.sql import Observation
 
-    from .dedup import _unpersist_checkpoint
-
-    edges = symmetrize_edges(
-        pairs.select(
-            F.col("id_a").cast("long").alias("id_a"),
-            F.col("id_b").cast("long").alias("id_b"),
-        ),
-        "id_a",
-        "id_b",
-    ).localCheckpoint(eager=True)
-    # A null id joins nothing.  Filtering every read of the pin gives all
-    # references of the seed one identical subtree (no isnotnull inferred
-    # on some and not on others), so they share one exchange.
-    live = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    labels = live.groupBy(F.col("src").alias("node")).agg(
-        F.least(F.col("node"), F.min("dst")).alias("label")
-    )
-    cp_ids: set = set()
-    converged = False
-    for _ in range(max_iter - 1):
-        jump = labels.select(
-            F.col("node").alias("jnode"), F.col("label").alias("jlabel")
+    with pins() as p:
+        edges = pin(
+            symmetrize_edges(
+                pairs.select(
+                    F.col("id_a").cast("long").alias("id_a"),
+                    F.col("id_b").cast("long").alias("id_b"),
+                ),
+                "id_a",
+                "id_b",
+            )
         )
-        jumped = labels.join(jump, labels.label == jump.jnode, "left").select(
-            "node", F.least("label", F.coalesce("jlabel", "label")).alias("own")
+        # A null id joins nothing.  Filtering every read of the pin gives all
+        # references of the seed one identical subtree (no isnotnull inferred
+        # on some and not on others), so they share one exchange.
+        live = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        labels = live.groupBy(F.col("src").alias("node")).agg(
+            F.least(F.col("node"), F.min("dst")).alias("label")
         )
-        nbr = live.join(jumped, live.dst == jumped.node).select(
-            F.col("src").alias("node"),
-            F.lit(None).cast("long").alias("own"),
-            F.col("own").alias("label"),
-        )
-        # the jump reads labels twice: without a lineage cut the logical
-        # plan would double every round
-        fell = Observation()
-        labels = _rolling_checkpoint(
-            jumped.select("node", "own", F.col("own").alias("label"))
-            .unionByName(nbr)
+        converged = False
+        for _ in range(max_iter - 1):
+            jump = labels.select(
+                F.col("node").alias("jnode"), F.col("label").alias("jlabel")
+            )
+            jumped = labels.join(jump, labels.label == jump.jnode, "left").select(
+                "node", F.least("label", F.coalesce("jlabel", "label")).alias("own")
+            )
+            nbr = live.join(jumped, live.dst == jumped.node).select(
+                F.col("src").alias("node"),
+                F.lit(None).cast("long").alias("own"),
+                F.col("own").alias("label"),
+            )
+            # the jump reads labels twice: without a lineage cut the logical
+            # plan would double every round
+            fell = Observation()
+            labels = pin(
+                jumped.select("node", "own", F.col("own").alias("label"))
+                .unionByName(nbr)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"), F.max("own").alias("own"))
+                .observe(fell, F.count(F.when(F.col("label") < F.col("own"), 1)).alias("n"))
+                .select("node", "label"),
+                replaces=labels,
+            )
+            if fell.get["n"] == 0:
+                converged = True
+                break
+        if not converged and max_iter > 0:
+            warnings.warn(
+                f"{warn_name}: label propagation did not converge: the labels "
+                f"did not reach their fixed point within {max_iter} "
+                f"neighbour-min steps, so returned cluster ids may not be "
+                f"transitively minimal — raise max_iter",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        id_type = nodes.schema[id_col].dataType
+        node = F.col(id_col).cast("long")
+        out = pin(
+            nodes.select(node.alias("node"), node.alias("label"), F.lit(1).alias("rows"))
+            .unionByName(labels.select("node", "label", F.lit(0).alias("rows")))
             .groupBy("node")
-            .agg(F.min("label").alias("label"), F.max("own").alias("own"))
-            .observe(fell, F.count(F.when(F.col("label") < F.col("own"), 1)).alias("n"))
-            .select("node", "label"),
-            cp_ids,
+            .agg(F.min("label").alias("cluster_id"), F.sum("rows").alias("rows"))
+            .filter(F.col("rows") > 0)  # edge endpoints outside nodes drop out
+            .select(
+                F.col("node").cast(id_type).alias(id_col),
+                "cluster_id",
+                F.explode(F.array_repeat(F.lit(0), F.col("rows").cast("int"))).alias("_rep"),
+            )
+            .drop("_rep")
         )
-        if fell.get["n"] == 0:
-            converged = True
-            break
-    if not converged and max_iter > 0:
-        warnings.warn(
-            f"{warn_name}: label propagation did not converge in "
-            f"{max_iter} iterations; a chain longer than {max_iter} hops "
-            f"exists and returned cluster ids are not transitively "
-            f"minimal — raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    id_type = nodes.schema[id_col].dataType
-    node = F.col(id_col).cast("long")
-    out = (
-        nodes.select(node.alias("node"), node.alias("label"), F.lit(1).alias("rows"))
-        .unionByName(labels.select("node", "label", F.lit(0).alias("rows")))
-        .groupBy("node")
-        .agg(F.min("label").alias("cluster_id"), F.sum("rows").alias("rows"))
-        .filter(F.col("rows") > 0)  # edge endpoints outside nodes drop out
-        .select(
-            F.col("node").cast(id_type).alias(id_col),
-            "cluster_id",
-            F.explode(F.array_repeat(F.lit(0), F.col("rows").cast("int"))).alias("_rep"),
-        )
-        .drop("_rep")
-        .localCheckpoint(eager=True)
-    )
-    # out is pinned itself, so the edge list and the last label
-    # generation go (the seed alone is no pin)
-    _unpersist_checkpoint(edges)
-    _unpersist_checkpoint(labels)
-    return out
+        # out is pinned itself, so the edge list and the last label
+        # generation go with the scope
+        return p.returning(out)
 
 
 def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
@@ -574,69 +515,67 @@ def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     int64.  The max is a 1-row aggregate broadcast back — the sanctioned
     1-row-totals shape.  Mirrors pagerank's iteration discipline:
     src-partitioned cached edge list (both joins reuse or co-locate with
-    it), shuffle_hash on the O(nodes) score side, per-generation rolling
-    localCheckpoint (constant-depth plans, two generations of blocks
-    live).  Oracle: hits_oracle_cte replays the identical integer
+    it), shuffle_hash on the O(nodes) score side, one pinned generation
+    per score table (constant-depth plans).  Oracle: hits_oracle_cte replays the identical integer
     arithmetic, so score_fp value-hashes exactly."""
-    edges = edges.repartition(F.col("src")).cache()
-    hubs = (
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("node"), F.lit(SCALE).cast("long").alias("score_fp"))
-    )
-    auth: DataFrame | None = None
-    cp_a: set = set()
-    cp_h: set = set()
-    for _ in range(iterations):
-        # the renorm plan references the raw-sum twice (main branch +
-        # max aggregate under the crossJoin) — persist it so the single
-        # checkpoint job computes the edge join ONCE and the max branch
-        # reads blocks, then drop it (generation lifetime only)
-        araw = (
-            edges.join(
-                hubs.select(F.col("node").alias("src"), "score_fp").hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.sum("score_fp").alias("raw"))
-        ).persist()
-        amax = araw.agg(F.max("raw").alias("mx"))
-        auth = _rolling_checkpoint(
-            araw.crossJoin(F.broadcast(amax)).select(
-                F.col("dst").alias("node"),
-                F.expr(f"CAST(CAST(raw AS DECIMAL(38,0)) * {SCALE} div mx AS BIGINT)").alias(
-                    "score_fp"
-                ),
-            ),
-            cp_a,
+    with pins() as p:
+        edges = persist(edges.repartition(F.col("src")))
+        hubs = (
+            edges.select("src")
+            .distinct()
+            .select(F.col("src").alias("node"), F.lit(SCALE).cast("long").alias("score_fp"))
         )
-        araw.unpersist()
-        hraw = (
-            edges.join(
-                auth.select(F.col("node").alias("dst"), "score_fp").hint(
-                    "shuffle_hash"
-                ),
-                "dst",
+        auth: DataFrame | None = None
+        for _ in range(iterations):
+            # the renorm plan references the raw-sum twice (main branch +
+            # max aggregate under the crossJoin) — persist it so the single
+            # checkpoint job computes the edge join ONCE and the max branch
+            # reads blocks, then drop it (generation lifetime only)
+            araw = persist(
+                edges.join(
+                    hubs.select(F.col("node").alias("src"), "score_fp").hint(
+                        "shuffle_hash"
+                    ),
+                    "src",
+                )
+                .groupBy("dst")
+                .agg(F.sum("score_fp").alias("raw"))
             )
-            .groupBy("src")
-            .agg(F.sum("score_fp").alias("raw"))
-        ).persist()
-        hmax = hraw.agg(F.max("raw").alias("mx"))
-        hubs = _rolling_checkpoint(
-            hraw.crossJoin(F.broadcast(hmax)).select(
-                F.col("src").alias("node"),
-                F.expr(f"CAST(CAST(raw AS DECIMAL(38,0)) * {SCALE} div mx AS BIGINT)").alias(
-                    "score_fp"
+            amax = araw.agg(F.max("raw").alias("mx"))
+            auth = pin(
+                araw.crossJoin(F.broadcast(amax)).select(
+                    F.col("dst").alias("node"),
+                    F.expr(f"CAST(CAST(raw AS DECIMAL(38,0)) * {SCALE} div mx AS BIGINT)").alias(
+                        "score_fp"
+                    ),
                 ),
-            ),
-            cp_h,
-        )
-        hraw.unpersist()
-    return hubs.select(
-        "node", F.lit("hub").alias("role"), "score_fp"
-    ).unionAll(auth.select("node", F.lit("authority").alias("role"), "score_fp"))
+                replaces=auth,
+            )
+            p.release(araw)
+            hraw = persist(
+                edges.join(
+                    auth.select(F.col("node").alias("dst"), "score_fp").hint(
+                        "shuffle_hash"
+                    ),
+                    "dst",
+                )
+                .groupBy("src")
+                .agg(F.sum("score_fp").alias("raw"))
+            )
+            hmax = hraw.agg(F.max("raw").alias("mx"))
+            hubs = pin(
+                hraw.crossJoin(F.broadcast(hmax)).select(
+                    F.col("src").alias("node"),
+                    F.expr(f"CAST(CAST(raw AS DECIMAL(38,0)) * {SCALE} div mx AS BIGINT)").alias(
+                        "score_fp"
+                    ),
+                ),
+                replaces=hubs,
+            )
+            p.release(hraw)
+        return p.returning(hubs).select(
+            "node", F.lit("hub").alias("role"), "score_fp"
+        ).unionAll(p.returning(auth).select("node", F.lit("authority").alias("role"), "score_fp"))
 
 
 def hits_oracle_cte(edges_sql: str, iterations: int = 2) -> str:
@@ -684,76 +623,76 @@ def personalized_pagerank(
 
     ``seeds`` must be a subset of the graph's nodes (checked — a seed
     with no edges would silently leak its teleport mass).  Loop shape,
-    co-partitioned edge cache, shuffle_hash hints and rolling
-    checkpoints are identical to :func:`pagerank`; the only new state is
+    co-partitioned edge cache, shuffle_hash hints and pinned
+    generations are identical to :func:`pagerank`; the only new state is
     an ``is_seed`` flag riding the rank table.  Note the int64 bound:
     base(v) = 0.15·|V|·SCALE/|S| must fit int64 — at billion-node scale
     with few seeds, drop SCALE a decade (the oracle replays whatever the
     constants are)."""
-    edges = edges.repartition(F.col("src")).cache()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).cache()
-    n_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .count()
-    )
-    n_out = deg.count()
-    if n_out < n_nodes:
-        raise ValueError(
-            f"{n_nodes - n_out} node(s) have out-degree 0 — symmetrize the "
-            "edge list or add self-loops first"
+    with pins() as p:
+        edges = persist(edges.repartition(F.col("src")))
+        deg = persist(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+        n_nodes = (
+            edges.select(F.col("src").alias("node"))
+            .unionAll(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .count()
         )
-    seed_set = seeds.select("node").distinct()
-    n_seeds = seed_set.count()
-    n_present = seed_set.join(
-        deg.select(F.col("src").alias("node")), "node", "left_semi"
-    ).count()
-    if n_present < n_seeds:
-        raise ValueError(f"{n_seeds - n_present} seed(s) are not graph nodes")
-    if n_seeds == 0:
-        raise ValueError("empty seed set")
-    base_seed = ((100 - DAMP_NUM) * n_nodes * SCALE) // (100 * n_seeds)
-    ranks = (
-        deg.select(
-            F.col("src").alias("node"),
-            F.lit(SCALE).cast("long").alias("rank_fp"),
-            "deg",
-        )
-        .join(seed_set.withColumn("is_seed", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            "rank_fp",
-            "deg",
-            F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
-        )
-    )
-    cp_ids: set = set()
-    for _ in range(iterations):
-        contribs = ranks.select(
-            F.col("node").alias("src"),
-            F.expr("rank_fp div deg").alias("contrib"),
-        ).hint("shuffle_hash")
-        inbound = (
-            edges.join(contribs, "src")
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("inflow"))
-        ).hint("shuffle_hash")
+        n_out = deg.count()
+        if n_out < n_nodes:
+            raise ValueError(
+                f"{n_nodes - n_out} node(s) have out-degree 0 — symmetrize the "
+                "edge list or add self-loops first"
+            )
+        seed_set = seeds.select("node").distinct()
+        n_seeds = seed_set.count()
+        n_present = seed_set.join(
+            deg.select(F.col("src").alias("node")), "node", "left_semi"
+        ).count()
+        if n_present < n_seeds:
+            raise ValueError(f"{n_seeds - n_present} seed(s) are not graph nodes")
+        if n_seeds == 0:
+            raise ValueError("empty seed set")
+        base_seed = ((100 - DAMP_NUM) * n_nodes * SCALE) // (100 * n_seeds)
         ranks = (
-            ranks.join(inbound, ranks.node == inbound.dst, "left")
+            deg.select(
+                F.col("src").alias("node"),
+                F.lit(SCALE).cast("long").alias("rank_fp"),
+                "deg",
+            )
+            .join(seed_set.withColumn("is_seed", F.lit(True)), "node", "left")
             .select(
                 "node",
-                (
-                    F.when(F.col("is_seed"), F.lit(base_seed).cast("long"))
-                    .otherwise(F.lit(0).cast("long"))
-                    + F.expr(f"({DAMP_NUM} * coalesce(inflow, 0)) div 100")
-                ).alias("rank_fp"),
+                "rank_fp",
                 "deg",
-                "is_seed",
+                F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
             )
         )
-        ranks = _rolling_checkpoint(ranks, cp_ids)
-    return ranks.select("node", "rank_fp")
+        for _ in range(iterations):
+            contribs = ranks.select(
+                F.col("node").alias("src"),
+                F.expr("rank_fp div deg").alias("contrib"),
+            ).hint("shuffle_hash")
+            inbound = (
+                edges.join(contribs, "src")
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("inflow"))
+            ).hint("shuffle_hash")
+            ranks = (
+                ranks.join(inbound, ranks.node == inbound.dst, "left")
+                .select(
+                    "node",
+                    (
+                        F.when(F.col("is_seed"), F.lit(base_seed).cast("long"))
+                        .otherwise(F.lit(0).cast("long"))
+                        + F.expr(f"({DAMP_NUM} * coalesce(inflow, 0)) div 100")
+                    ).alias("rank_fp"),
+                    "deg",
+                    "is_seed",
+                )
+            )
+            ranks = pin(ranks, replaces=ranks)
+        return p.returning(ranks).select("node", "rank_fp")
 
 
 def ppr_oracle_cte(edges_sql: str, seeds_sql: str, iterations: int = 5) -> str:

@@ -46,6 +46,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin, pins
+
 QUANT = 1_000_000
 
 
@@ -238,8 +240,8 @@ def ivf_train(
         q = q.filter(
             hash_bucket(F.col("vid"), f"{seed}-train") < round(train_frac * 10_000)
         )
-    q = q.localCheckpoint(eager=True)
-    try:
+    with pins():
+        q = pin(q)
         seeds = (
             q.withColumn(
                 "h", F.md5(F.concat(F.lit(f"{seed}:"), F.col("vid").cast("string")))
@@ -292,10 +294,6 @@ def ivf_train(
             # empty clusters keep their previous centroid
             centroids = [updated.get(cid, c) for cid, c in enumerate(centroids)]
         return centroids
-    finally:
-        from .dedup import _unpersist_checkpoint
-
-        _unpersist_checkpoint(q)
 
 
 def ivf_assign(
@@ -852,15 +850,17 @@ def pq_train(
         )
     inv = ivf_assign(corpus, coarse, id_col, vec_col)
     cent_lit = F.array(*[F.array(*[F.lit(int(v)) for v in c]) for c in coarse])
-    res = inv.select(
-        F.col("neighbor_id").alias("vid"),
-        F.zip_with(
-            F.col("cv"),
-            F.element_at(cent_lit, (F.col("cluster") + 1).cast("int")),
-            lambda a, b: a - b,
-        ).alias("r"),
-    ).localCheckpoint(eager=True)
-    try:
+    with pins():
+        res = pin(
+            inv.select(
+                F.col("neighbor_id").alias("vid"),
+                F.zip_with(
+                    F.col("cv"),
+                    F.element_at(cent_lit, (F.col("cluster") + 1).cast("int")),
+                    lambda a, b: a - b,
+                ).alias("r"),
+            )
+        )
         sub = res.select(
             "vid",
             F.explode(
@@ -955,10 +955,6 @@ def pq_train(
                 for s in range(m)
             ]
         return books
-    finally:
-        from .dedup import _unpersist_checkpoint
-
-        _unpersist_checkpoint(res)
 
 
 def ivfpq_ann_topk(

@@ -28,6 +28,15 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
+
+def _range_pinned(df: DataFrame, order: Sequence[Column], n_partitions: int) -> DataFrame:
+    """``df`` range-partitioned on ``order`` with its partition id as
+    ``__pid``, pinned so every job sees the same pid assignment."""
+    ranged = df.repartitionByRange(n_partitions, *order)
+    return pin(ranged.withColumn("__pid", F.spark_partition_id()))
+
 
 def partitioned_prefix_sum(
     df: DataFrame,
@@ -44,11 +53,7 @@ def partitioned_prefix_sum(
     The returned DataFrame is localCheckpoint-pinned (see module
     docstring); ``grand_total`` is a plain int for literal reuse.
     """
-    ranged = (
-        df.repartitionByRange(n_partitions, *order)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
+    ranged = _range_pinned(df, order, n_partitions)
     totals = {
         r["__pid"]: (r["t"], r["n"])
         for r in ranged.groupBy("__pid")
@@ -97,11 +102,7 @@ def partitioned_prefix_max(
     never a single-partition global window.  Offsets are the EXCLUSIVE
     prefix max of the per-partition maxima; the first partition gets a
     NULL offset (greatest() ignores it)."""
-    ranged = (
-        df.repartitionByRange(n_partitions, *order)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
+    ranged = _range_pinned(df, order, n_partitions)
     maxima = {
         r["__pid"]: r["m"]
         for r in ranged.groupBy("__pid")
@@ -147,11 +148,7 @@ def partitioned_prefix_sums(
     value column plus ``__rank``; returns ``(df, grand_totals)`` with
     one total per column.  Consumer: events_ks_drift_test (two-sample
     CDFs over the merged support)."""
-    ranged = (
-        df.repartitionByRange(n_partitions, *order)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
+    ranged = _range_pinned(df, order, n_partitions)
     aggs = [F.sum(c).alias(f"t_{c}") for c in value_cols] + [
         F.count(F.lit(1)).alias("__n")
     ]

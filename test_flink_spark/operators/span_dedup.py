@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .dedup import _h60, shingle_hashes
 from .fanout import fan_out
 from .text import word_ngrams, words
@@ -716,9 +717,11 @@ def duplicate_span_coverage(
     # branches, n_spans, and the merge) and Spark shares no subplans —
     # without the checkpoint the whole anchor/extension pipeline ran 4x
     # (plan audit: 72 exchanges / 25 scans; with it, one derivation)
-    spans = duplicate_substrings(
-        df, text_col, id_col, k, w, ext, max_df, min_len, per_pair_best=False
-    ).localCheckpoint(eager=True)
+    spans = pin(
+        duplicate_substrings(
+            df, text_col, id_col, k, w, ext, max_df, min_len, per_pair_best=False
+        )
+    )
     iv = spans.select(
         F.col("id_a").alias(id_col),
         F.col("start_a").alias("s"),

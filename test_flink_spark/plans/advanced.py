@@ -16,6 +16,7 @@ from ..operators import bpe
 from ..operators import graph as gr
 from ..operators import layout, prefix, sampling
 from ..operators import sketch as sk
+from ..session import persist, pin
 from .relational import _t
 
 # ---------------------------------------------------------------------------
@@ -1817,13 +1818,12 @@ def orders_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = _t(spark, sf_dir, "lineitem")
     pt = _t(spark, sf_dir, "part")
-    baskets = (
+    # referenced by totals, marginals, and both sides of the pair
+    # self-join — checkpoint once instead of 4 scans of lineitem
+    baskets = pin(
         li.join(pt, li.l_partkey == pt.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        # referenced by totals, marginals, and both sides of the pair
-        # self-join — checkpoint once instead of 4 scans of lineitem
-        .localCheckpoint(eager=True)
     )
     totals = baskets.groupBy().agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_orders")
@@ -2309,8 +2309,8 @@ def graph_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     — decimal(38) renorm product, floor-div back to int64 SCALE units);
     the oracle unrolls the identical arithmetic (hits_oracle_cte), so
     score_fp value-hashes exactly.  Iteration shape matches pagerank:
-    src-partitioned cached edges, shuffle_hash score side, rolling
-    checkpoints."""
+    src-partitioned cached edges, shuffle_hash score side, pinned
+    generations."""
     li = _t(spark, sf_dir, "lineitem")
     od = _t(spark, sf_dir, "orders")
     edges = (
@@ -2944,15 +2944,15 @@ def stats_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tie (interleaved A/B: one-scan 2.77-4.21 s vs multi-scan
     # 2.94-8.27 s); at sf1 the one-scan form wins 8.03 -> 6.53 s
     # (min-of-3, the r12-rejection retry the verdict asked for), and at
-    # 100 TB it is 1 fact-table read instead of 16.  persist(), not
-    # localCheckpoint: lineage survives, so the cache can be dropped or
-    # evicted safely at any point; left alive for the session
-    # (the pagerank edge-cache discipline — bounded by the 9-column
-    # projection, reused by later invocations over the same table).
-    proj = li.select(
-        shard.alias("shard"),
-        *[F.expr(sexpr).alias(f"c_{i}") for i, (_, sexpr, _) in enumerate(_SMR_COLS)],
-    ).persist()
+    # 100 TB it is 1 fact-table read instead of 16.  persist(), not a
+    # pin: lineage survives, so the returned plan stays valid after the
+    # caller's scope drops it (docs/DESIGN_DECISIONS.md, "Pin ownership").
+    proj = persist(
+        li.select(
+            shard.alias("shard"),
+            *[F.expr(sexpr).alias(f"c_{i}") for i, (_, sexpr, _) in enumerate(_SMR_COLS)],
+        )
+    )
     out = None
     for i, (name, _, _) in enumerate(_SMR_COLS):
         vals = proj.select("shard", F.col(f"c_{i}").alias("v"))

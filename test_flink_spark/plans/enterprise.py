@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..operators import cooccur, linkage, sequence, timeseries
 from ..operators.cdc import cdc_latest, scd2_history, snapshot_diff
+from ..session import pin
 from .relational import _t
 
 # ---------------------------------------------------------------------------
@@ -3432,7 +3433,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         _event_items(spark, sf_dir), "user_id", "item", _COOC_CAP,
         with_lift=False,
     )
-    edges = cooccur.knn_edges(pairs, k=_KNN_K).localCheckpoint(eager=True)
+    edges = pin(cooccur.knn_edges(pairs, k=_KNN_K))
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))
@@ -3519,11 +3520,10 @@ def reco_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ui = _event_items(spark, sf_dir)
     capped_src = ui.select(F.col("user_id").alias("u"), F.col("item").alias("i")).distinct()
     w = Window.partitionBy("u").orderBy(F.col("i").asc())
-    capped = (
+    capped = pin(
         capped_src.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= _COOC_CAP)
         .drop("__rn")
-        .localCheckpoint(eager=True)
     )
     # item_pairs dedups+caps internally and capping is idempotent, so the
     # checkpointed capped basket feeds it too — one events scan total
@@ -3728,7 +3728,7 @@ def events_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataF
     # chains/ends via seq, plus conv_groups and touched_groups) and AQE
     # exchange reuse only caches the shuffle below the windows — each
     # branch re-ran the per-group sorts (guide §2.4; r12: 2.50 -> 1.9 s)
-    e3 = e2.withColumn(
+    e3 = pin(e2.withColumn(
         "fp_eid",
         F.min(
             F.when(
@@ -3737,7 +3737,7 @@ def events_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataF
                 F.col("event_id"),
             )
         ).over(wpd),
-    ).localCheckpoint(eager=True)
+    ))
     kept = e3.filter(F.col("event_type") != "purchase").filter(
         F.col("fp_ms").isNull()
         | (F.col("ms") < F.col("fp_ms"))
@@ -3747,9 +3747,9 @@ def events_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataF
         F.col("prev").isNull() | (F.col("prev") != F.col("event_type"))
     )
     # same rationale: three branches (starts/chains/ends) read seq
-    seq = coll.withColumn("nxt", F.lead("event_type").over(w)).withColumn(
+    seq = pin(coll.withColumn("nxt", F.lead("event_type").over(w)).withColumn(
         "rn", F.row_number().over(w)
-    ).localCheckpoint(eager=True)
+    ))
     starts = seq.filter(F.col("rn") == 1).select(
         F.lit("START").alias("from_s"), F.col("event_type").alias("to_s")
     )
@@ -3942,7 +3942,8 @@ def graph_components_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _event_items(spark, sf_dir), "user_id", "item", _COOC_CAP,
         with_lift=False,
     )
-    edges0 = (
+    # referenced 3× (hist, total, filter)
+    edges0 = pin(
         cooccur._ranked_sym(pairs, [], _KNN_K)
         .select(
             F.least("item", "neighbor").alias("a"),
@@ -3950,7 +3951,6 @@ def graph_components_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_co",
         )
         .distinct()
-        .localCheckpoint(eager=True)  # referenced 3× (hist, total, filter)
     )
     vh = edges0.groupBy("n_co").agg(F.count(F.lit(1)).alias("cnt"))
     # global window over the value histogram: bounded by distinct support
@@ -4083,7 +4083,10 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")
     )  # 1-row broadcast: the split point is data-derived, not a constant
-    per_user = (
+    # two consumers (pooled + per_variant) — without the pin each
+    # re-ran the full events scan and per-user aggregate (guide
+    # §2.4); the pin is the O(users) moment table
+    per_user = pin(
         ev.crossJoin(F.broadcast(bounds))
         .withColumn("mid", F.expr("d0 + (d1 - d0) div 2"))
         .groupBy("user_id")
@@ -4106,10 +4109,6 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(hash_bucket(F.col("user_id"), "cuped") < 5000, F.lit("A"))
             .otherwise(F.lit("B")),
         )
-        # two consumers (pooled + per_variant) — without the pin each
-        # re-ran the full events scan and per-user aggregate (guide
-        # §2.4); the pin is the O(users) moment table
-        .localCheckpoint(eager=True)
     )
     pooled = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -29,7 +29,8 @@ from ..operators.similarity import (
 from ..operators.text import fingerprint, language_id, quality_scores, token_stats
 from ..operators.fanout import fan_out
 from ..schemas import load_table
-from ..session import apply_runtime_confs
+# release_pinned_cache is re-exported: callers drain the caches below by it
+from ..session import apply_runtime_confs, pin, pins, register, release_pinned_cache  # noqa: F401
 
 EMB_DIM = 64
 
@@ -301,10 +302,11 @@ def _shard_corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _docs(spark, sf_dir)
         srcn = F.substring("source", 4, 10).cast("int")
         corpus = docs.filter(srcn < _SHARD_MIN_SRC)
-        df = lsh_band_keys(
-            minhash_signatures(corpus, num_perm=16, shingle_n=3)
-        ).localCheckpoint(eager=True)
-        _SHARD_INDEX_CACHE[key] = df
+        df = register(
+            _SHARD_INDEX_CACHE,
+            key,
+            pin(lsh_band_keys(minhash_signatures(corpus, num_perm=16, shingle_n=3))),
+        )
     return df
 
 
@@ -1454,13 +1456,16 @@ def _shared_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -
         # runs once per session instead of once per shared stage; the
         # bench prices the base on its own dedup_pair_base_build line and
         # this stage as the marginal CC propagation.
-        df = min_label_components(
-            _pair_base_jaccard(spark, sf_dir, threshold=threshold),
-            _docs(spark, sf_dir).select("doc_id"),
-            "doc_id",
-            warn_name="duplicate_clusters",
+        df = register(
+            _CLUSTERS_CACHE,
+            key,
+            min_label_components(
+                _pair_base_jaccard(spark, sf_dir, threshold=threshold),
+                _docs(spark, sf_dir).select("doc_id"),
+                "doc_id",
+                warn_name="duplicate_clusters",
+            ),
         )
-        _CLUSTERS_CACHE[key] = df
     return df
 
 
@@ -3175,7 +3180,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree up to three times per execution (8 parquet scans in the
     # plan).  The pinned table is O(docs x num_perm) ints — the persisted
     # signature artifact a production audit would read (guide §2.4/§5).
-    sigs = minhash_signatures(docs, num_perm=16).localCheckpoint(eager=True)
+    sigs = pin(minhash_signatures(docs, num_perm=16))
     banded = lsh_band_keys(sigs, num_perm=16, bands=4)
     ba, bb = banded.alias("a"), banded.alias("b")
     cand = (
@@ -3730,7 +3735,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the dim²-row Gram before mirroring: both union branches (and
     # both iterations) reference it, and without the checkpoint each
     # reference re-runs the full corpus pair-product pass.
-    g = embedding_gram_matrix(spark, sf_dir).localCheckpoint(eager=True)
+    g = pin(embedding_gram_matrix(spark, sf_dir))
     full = g.unionByName(
         g.filter(F.col("i") != F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "gram_fp"
@@ -3746,10 +3751,12 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i")
         .agg(F.sum(F.expr("gram_fp * v1")).alias("u2"))
     )
-    w = u2.select(
-        "i",
-        F.expr(f"(u2 - (u2 % {_PI_RESCALE})) div {_PI_RESCALE}").alias("w"),
-    ).localCheckpoint(eager=True)
+    w = pin(
+        u2.select(
+            "i",
+            F.expr(f"(u2 - (u2 % {_PI_RESCALE})) div {_PI_RESCALE}").alias("w"),
+        )
+    )
     m = max(
         int(w.agg(F.max(F.abs(F.col("w"))).alias("m")).collect()[0]["m"] or 0),
         1,
@@ -4257,14 +4264,13 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import lsh_band_keys, minhash_signatures
 
     docs = _docs(spark, sf_dir)
-    exact = (
+    exact = pin(
         _pair_base_jaccard(spark, sf_dir, threshold=0.5)
         .select("id_a", "id_b")
         .withColumn("in_e", F.lit(1))
-        .localCheckpoint(eager=True)
     )
     n_exact = max(exact.count(), 1)
-    sig = minhash_signatures(docs, num_perm=16).localCheckpoint(eager=True)
+    sig = pin(minhash_signatures(docs, num_perm=16))
     outs = []
     for b in (2, 4, 8):
         banded = lsh_band_keys(sig, num_perm=16, bands=b)
@@ -4567,10 +4573,9 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the vocab-bounded unigram table: N, the w1 branch and the w2
     # branch all read it — unpinned, each is its own full tokenize pass
     # (measured 5.0 s -> 3.0 s at sf0.1)
-    uni = (
+    uni = pin(
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     n_tokens = uni.agg(F.sum("c")).collect()[0][0]  # scalar, no extra scan
     bic = (
@@ -5292,7 +5297,8 @@ def embedding_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).withColumn("probe_rank", (F.col("probe_idx") + 1).cast("long"))
     inv = ivf_assign(emb, centroids)
-    scored = (
+    # four legs read it
+    scored = pin(
         inv.join(F.broadcast(probes), "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -5301,7 +5307,6 @@ def embedding_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_rank",
             sq_dist(F.col("qv"), F.col("cv")).alias("dist"),
         )
-        .localCheckpoint(eager=True)  # four legs read it
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("neighbor_id").asc()
@@ -5596,7 +5601,7 @@ def embedding_random_projection_audit(spark: SparkSession, sf_dir: str) -> DataF
     ]
     # the projected table feeds BOTH sides of the consecutive-id join:
     # checkpoint once or the scan+quantize+project chain runs twice
-    pv = q.select("vec_id", "codes", *proj).localCheckpoint(eager=True)
+    pv = pin(q.select("vec_id", "codes", *proj))
     a = pv.alias("a")
     b = pv.alias("b")
     d2_orig = " + ".join(
@@ -5765,8 +5770,8 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure composition of existing engine pieces: operators/text.bigrams
     (codegen array expr, O(len) per doc) builds pairs, operators/graph.
-    pagerank (int64 fixed-point, co-partitioned cached edges, rolling
-    checkpoint) ranks them, and the oracle replays the identical
+    pagerank (int64 fixed-point, co-partitioned cached edges, pinned
+    generations) ranks them, and the oracle replays the identical
     fixed-point arithmetic via pagerank_oracle_cte — the DuckDB CTE and
     the Spark loop agree bit-for-bit, so rank_fp is value-hashed, not
     tolerance-compared.  Edge count is O(vocab²) worst case but
@@ -6201,9 +6206,8 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fa = flags.select(F.col("doc_id").alias("id_a"), F.col("is_shard").alias("sa"))
     fb = flags.select(F.col("doc_id").alias("id_b"), F.col("is_shard").alias("sb"))
-    tagged = pairs.join(fa, "id_a").join(fb, "id_b").localCheckpoint(
-        eager=True
-    )  # prior CC and the merge both read it
+    # prior CC and the merge both read it
+    tagged = pin(pairs.join(fa, "id_a").join(fb, "id_b"))
     prior_edges = tagged.filter(~F.col("sa") & ~F.col("sb")).select("id_a", "id_b")
     new_edges = tagged.filter(F.col("sa") | F.col("sb")).select("id_a", "id_b")
     # persisted state in production; recomputed here so the query is
@@ -6436,30 +6440,11 @@ ORACLES["embedding_pq_distortion_audit"] = _pq_distortion_sql()
 _PAIR_BASE_CACHE: dict[tuple, DataFrame] = {}
 
 
-def release_pinned_cache(cache: dict) -> None:
-    """Unpersist every eagerly-localCheckpointed DataFrame held by a
-    session-memo cache (``_PAIR_BASE_CACHE`` / ``_CLUSTERS_CACHE`` /
-    ``_SHARD_INDEX_CACHE``), then drop the entries — the explicit release
-    path for long-lived sessions touching many corpora (r12 ADVICE: a
-    bare ``.clear()`` drops the reference but leaves the pinned blocks to
-    ContextCleaner GC, one pair table per corpus forever)."""
-    from ..operators.dedup import _unpersist_checkpoint
-
-    for df in cache.values():
-        if isinstance(df, DataFrame):
-            _unpersist_checkpoint(df)
-    cache.clear()
-
-
 def _shared_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _PAIR_BASE_CACHE.get(key)
     if df is None:
-        from ..operators.dedup import (
-            _unpersist_checkpoint,
-            capped_shingle_hashes,
-            shingle_overlaps,
-        )
+        from ..operators.dedup import capped_shingle_hashes, shingle_overlaps
 
         # r12 cap rollout: the shared pair base rides the same
         # NGRAM_MAX_DOC_FREQ stop-shingle cap as ngram_jaccard_pairs /
@@ -6468,13 +6453,11 @@ def _shared_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus_dedup_cascade_audit).  Sizes are computed AFTER the cap,
         # so shared/n_a/n_b stay a consistent capped-shingle-set algebra;
         # every consumer's oracle replays the identical doc-freq filter.
-        sh = capped_shingle_hashes(_docs(spark, sf_dir))
-        df = shingle_overlaps(sh).localCheckpoint(eager=True)
-        # the capped-shingle pin only feeds the build above; once the pair
-        # table is materialized, release it (cache discipline — without
-        # this every session kept one corpus-sized (id, h) pin alive)
-        _unpersist_checkpoint(sh)
-        _PAIR_BASE_CACHE[key] = df
+        # the capped-shingle pin only feeds the pair table: the scope
+        # releases it once the registered table is materialized
+        with pins():
+            sh = capped_shingle_hashes(_docs(spark, sf_dir))
+            df = register(_PAIR_BASE_CACHE, key, pin(shingle_overlaps(sh)))
     return df
 
 
@@ -6569,7 +6552,7 @@ def corpus_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four detector legs (fp groupBy, both capped pair cuts, the simhash
     # band join) re-executed per consumer (guide §2.4); the pin is the
     # O(flagged docs x stages) slim flag table
-    flags = flags.localCheckpoint(eager=True)
+    flags = pin(flags)
     # explicit stage dimension: a detector that flags NOTHING still owns a
     # funnel row (flagged=0), otherwise the report silently shrinks
     dim = spark.createDataFrame(
@@ -6585,7 +6568,9 @@ def corpus_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("stage")
         .agg(F.count(F.lit(1)).cast("long").alias("new_flags"))
     )
-    joined = (
+    # 4 rows; both sides of the running-sum self-join read it — the
+    # pin keeps the funnel aggregation single-pass over the flag pin
+    joined = pin(
         dim.join(per_stage, "stage", "left")
         .join(new_per_stage, "stage", "left")
         .select(
@@ -6594,9 +6579,6 @@ def corpus_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("flagged", F.lit(0)).cast("long").alias("flagged"),
             F.coalesce("new_flags", F.lit(0)).cast("long").alias("new_flags"),
         )
-        # 4 rows; both sides of the running-sum self-join read it — the
-        # pin keeps the funnel aggregation single-pass over the flag pin
-        .localCheckpoint(eager=True)
     )
     # running sum over 4 rows via inequality self-join (no global window)
     cum_src = joined.select(
@@ -6809,7 +6791,8 @@ def embedding_ivfpq_refine_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     wa = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc()
     )
-    scored = (
+    # every sweep leg + truth read it
+    scored = pin(
         cands.select(
             "query_id",
             "neighbor_id",
@@ -6817,7 +6800,6 @@ def embedding_ivfpq_refine_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             sq_dist(F.col("qv"), F.col("cv2")).alias("dist"),
         )
         .withColumn("arank", F.row_number().over(wa))
-        .localCheckpoint(eager=True)  # every sweep leg + truth read it
     )
     wd = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("neighbor_id").asc()
@@ -7158,12 +7140,11 @@ def embedding_ivfpq_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame
     # partial top-5 (r13, guide §3/§4.2) — replaces the 20×-corpus
     # broadcast-NLJ + full rank window; row-identical (exactness argument
     # on operators/ivf.exact_sq_topk; oracle unchanged)
-    exact5 = (
+    # three consumers (n_ex, hits_s, hits_f) — without the pin the
+    # exact pass re-executes per consumer (guide §2.4); the pin is
+    # <= 100 (query_id, neighbor_id) rows
+    exact5 = pin(
         exact_sq_topk(emb, queries, k=5)
-        # three consumers (n_ex, hits_s, hits_f) — without the pin the
-        # exact pass re-executes per consumer (guide §2.4); the pin is
-        # <= 100 (query_id, neighbor_id) rows
-        .localCheckpoint(eager=True)
     )
     n_ex = exact5.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
@@ -7278,10 +7259,11 @@ def _shared_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _SPAN_COVERAGE_CACHE.get(key)
     if df is None:
-        df = duplicate_span_coverage(
-            _docs(spark, sf_dir), k=3, w=4, ext=10, max_df=8
-        ).localCheckpoint(eager=True)
-        _SPAN_COVERAGE_CACHE[key] = df
+        df = register(
+            _SPAN_COVERAGE_CACHE,
+            key,
+            pin(duplicate_span_coverage(_docs(spark, sf_dir), k=3, w=4, ext=10, max_df=8)),
+        )
     return df
 
 
@@ -7920,18 +7902,17 @@ def embedding_filtered_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     # 20×-corpus broadcast-NLJ + full rank window; row-identical
     # (exactness argument on operators/ivf.exact_sq_topk; oracle
     # unchanged)
-    exact5 = (
+    # three consumers (n_ex, h2, h4) — without the pin the exact
+    # pass re-executes per consumer (guide §2.4); the pin is <= 100
+    # (query_id, neighbor_id) rows
+    exact5 = pin(
         exact_sq_topk(emb, queries, k=5, label_col="label")
-        # three consumers (n_ex, h2, h4) — without the pin the exact
-        # pass re-executes per consumer (guide §2.4); the pin is <= 100
-        # (query_id, neighbor_id) rows
-        .localCheckpoint(eager=True)
     )
     # both nprobe legs probe the SAME labeled inverted file — encode the
-    # corpus once (localCheckpoint: the pin IS the persisted IVF index a
-    # production deployment reads; intra-query, priced inside this
-    # query's own bench line) instead of once per leg (r13, guide §2.4)
-    inv = _filtered_ann_inv(spark, sf_dir).localCheckpoint(eager=True)
+    # corpus once (the pin IS the persisted IVF index a production
+    # deployment reads; the query's scope releases it) instead of once
+    # per leg (r13, guide §2.4)
+    inv = pin(_filtered_ann_inv(spark, sf_dir))
     np2 = _filtered_ann(spark, sf_dir, nprobe=2, inv=inv).select(
         "query_id", "neighbor_id"
     )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join, broadcast_dim_join, range_join
 from ..schemas import load_table
-from ..session import apply_runtime_confs
+from ..session import apply_runtime_confs, persist, pins
 from .money import cents_sum, cents_sum_sql, revenue_exact, revenue_exact_sql
 
 
@@ -1455,15 +1455,10 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the staged frames are |users| rows but each embeds the previous
     # stage's aggregation in its lineage — without persist, counting buys
     # re-executes views/clicks and the events scan runs ~6x instead of 3x
-    views = views.persist()
-    clicks = clicks.persist()
-    try:
-        n_view = views.count()
-        n_click = clicks.count()
+    with pins():
+        n_view = persist(views).count()
+        n_click = persist(clicks).count()
         n_buy = buys.count()
-    finally:
-        views.unpersist()
-        clicks.unpersist()
     rows = [
         (1, "view", n_view, 1.0),
         (2, "click_after_view", n_click, _r4(n_click / n_view) if n_view else 0.0),

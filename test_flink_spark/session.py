@@ -12,8 +12,10 @@ partition count change; nothing in the operator library assumes local mode.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime confs applied per-session even when we are handed an existing
 # SparkSession (e.g. by the verification driver).  Only runtime-settable
@@ -148,3 +150,143 @@ def ship_package(sc) -> None:
         base_dir="test_flink_spark",
     )
     sc.addPyFile(path)
+
+
+# ---------------------------------------------------------------------------
+# Pins: who releases an eager localCheckpoint or a persisted relation.
+#
+# The rule: no pin outlives its call, except a registered session-cache
+# entry.  ``with pins() as p:`` releases, on exit, every pin taken inside
+# it; ``pin``/``persist`` record into the innermost open scope of the
+# calling thread, and with no scope open the caller owns the pin.  A call
+# that returns a pinned result hands that one pin to the enclosing scope
+# (``p.returning``).  Session-cache entries (``register``) belong to no
+# scope: queries share them, so only ``release_pinned_cache`` frees them.
+# ---------------------------------------------------------------------------
+
+class _Scopes(threading.local):
+    def __init__(self):
+        self.stack: list[Pins] = []  # this thread's open scopes
+
+
+_SCOPES = _Scopes()
+# (SparkContext, rdd id) of every registered session-cache entry
+_CACHED: set[tuple] = set()
+
+
+def _rdd_key(df: DataFrame) -> tuple:
+    """``(SparkContext, id)`` of an eager localCheckpoint's persisted RDD:
+    ``Dataset.localCheckpoint`` returns a LogicalRDD over exactly it."""
+    return df.sparkSession.sparkContext, df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _unpin(df: DataFrame, key: tuple | None) -> None:
+    """The one release primitive.  A checkpoint goes through
+    ``SparkContext.unpersistRDD``, the call the ContextCleaner makes:
+    ``RDD.unpersist`` on a local checkpoint logs "cannot be recomputed
+    after unpersisting" on every call."""
+    if key is None:
+        df.unpersist()
+    elif key not in _CACHED:
+        key[0]._jsc.sc().unpersistRDD(key[1], False)
+
+
+class Pins:
+    """The pins of one ``pins()`` scope, released in reverse order on exit."""
+
+    def __init__(self, parent: Pins | None):
+        self._parent, self._held = parent, []
+
+    def _pop(self, df: DataFrame) -> tuple | None:
+        for i, entry in enumerate(self._held):
+            if entry[0] is df:
+                return self._held.pop(i)
+        return None
+
+    def release(self, df: DataFrame) -> None:
+        """Release ``df`` now if this scope holds it."""
+        entry = self._pop(df)
+        if entry:
+            _unpin(*entry)
+
+    def returning(self, df: DataFrame) -> DataFrame:
+        """Hand ``df``'s pin to the enclosing scope (with none, to the
+        caller): the result a call returns outlives the call's scope."""
+        entry = self._pop(df)
+        if entry and self._parent:
+            self._parent._held.append(entry)
+        return df
+
+
+def _innermost() -> Pins | None:
+    return _SCOPES.stack[-1] if _SCOPES.stack else None
+
+
+@contextmanager
+def pins():
+    """A scope that releases every pin taken inside it on exit."""
+    scope = Pins(_innermost())
+    _SCOPES.stack.append(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPES.stack.pop()
+        while scope._held:
+            _unpin(*scope._held.pop())
+
+
+def pin(df: DataFrame, replaces: DataFrame | None = None) -> DataFrame:
+    """``df`` materialized by an eager ``localCheckpoint``, owned by the
+    innermost open scope.  ``replaces`` (a superseded generation of an
+    iterative loop) is released once the new one is materialized.
+
+    localCheckpoint keeps blocks on executors (MEMORY_AND_DISK) with no
+    lineage fallback: an executor loss fails the query instead of
+    recomputing it.  Accepted because a failed analytics query can be
+    rerun, while an iterations-deep plan often cannot even be planned."""
+    out = df.localCheckpoint(eager=True)
+    scope = _innermost()
+    if scope:
+        scope._held.append((out, _rdd_key(out)))
+        if replaces is not None:
+            scope.release(replaces)
+    return out
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` owned by the innermost open scope: for relations
+    that must keep their hash partitioning or their lineage."""
+    out, scope = df.persist(), _innermost()
+    if scope:
+        scope._held.append((out, None))
+    return out
+
+
+def scoped(batch_fn, *args, **kwargs):
+    """A ``foreachBatch`` body: ``batch_fn(batch_df, *args, batch_id=...,
+    **kwargs)`` inside its own ``pins()`` scope, so every pin of a
+    micro-batch ends with it."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        with pins():
+            batch_fn(batch_df, *args, batch_id=batch_id, **kwargs)
+
+    return run
+
+
+def register(cache: dict, key, df: DataFrame) -> DataFrame:
+    """Memoize a pinned ``df`` in a session cache.  No scope releases it
+    (the next query reads it); ``release_pinned_cache`` does."""
+    _CACHED.add(_rdd_key(df))
+    cache[key] = df
+    return df
+
+
+def release_pinned_cache(cache: dict) -> None:
+    """Release every pinned DataFrame entry of a session cache, then
+    drop the entries (other values are only dropped)."""
+    for df in cache.values():
+        if isinstance(df, DataFrame):
+            _CACHED.discard(key := _rdd_key(df))
+            _unpin(df, key)
+    cache.clear()

@@ -49,6 +49,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, version_of, write_snapshot
 
 _RULES_SCHEMA = (
@@ -76,12 +77,11 @@ def rules_ingest_batch(
         F.col("min_value_cents").desc(),
         F.col("enabled").asc(),
     )
-    merged = (
+    merged = pin(
         prior.unionByName(batch_df.select(*prior.columns))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .localCheckpoint(eager=True)
     )
     write_snapshot(merged, state_dir, "rules", version)
     return merged
@@ -110,7 +110,7 @@ def apply_rules_batch(
     path, rules_all = read_latest(spark, state_dir, "rules")
     if path is None:
         return
-    rules_all = rules_all.localCheckpoint(eager=True)
+    rules_all = pin(rules_all)
     version = version_of(path)
     rules = rules_all.filter(F.col("enabled"))
     flagged = (
@@ -141,16 +141,14 @@ def streaming_broadcast_rules(
     micro-batch against the latest snapshot.  Returns (rules_query,
     events_query)."""
     rq = (
-        rules_stream.writeStream.foreachBatch(
-            lambda df, bid: rules_ingest_batch(df, state_dir, batch_id=bid)
-        )
+        rules_stream.writeStream.foreachBatch(scoped(rules_ingest_batch, state_dir))
         .queryName("broadcast_rules_fold")
         .option("checkpointLocation", os.path.join(checkpoint_dir, "rules"))
         .start()
     )
     eq = (
         events_stream.writeStream.foreachBatch(
-            lambda df, bid: apply_rules_batch(df, state_dir, out_dir, bid)
+            scoped(apply_rules_batch, state_dir, out_dir)
         )
         .queryName("broadcast_rules_apply")
         .option("checkpointLocation", os.path.join(checkpoint_dir, "events"))

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, write_snapshot
 
 _LABELS_SCHEMA = "doc_id LONG, cluster_id LONG"
@@ -103,17 +104,13 @@ def cluster_ingest_batch(
         prior_sh = spark.createDataFrame([], _SHINGLE_SCHEMA)
     # cut lineage before the state overwrite below: the merge must not
     # lazily re-read directories this batch is about to rewrite
-    new_sh = shingle_hashes(batch_df, "text", "doc_id", n).localCheckpoint(
-        eager=True
-    )
+    new_sh = pin(shingle_hashes(batch_df, "text", "doc_id", n))
     union_sh = prior_sh.unionByName(new_sh)
     if max_doc_freq is not None:
         # current-view stop-shingle cap (see docstring): anti-join against
         # the small HOT set, mirroring ngram_jaccard_pairs' geometry
         freq = union_sh.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
-        hot = freq.filter(F.col("df_") > max_doc_freq).select(
-            "h"
-        ).localCheckpoint(eager=True)
+        hot = pin(freq.filter(F.col("df_") > max_doc_freq).select("h"))
         union_sh = union_sh.join(hot, "h", "left_anti")
     sizes = union_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     # inverted-index probe: batch side only on the left, so every
@@ -161,9 +158,7 @@ def cluster_ingest_batch(
         .unionByName(batch_df.select("doc_id"))
         .distinct()
     )
-    merged = incremental_cluster_merge(prior, edges, all_nodes).localCheckpoint(
-        eager=True
-    )
+    merged = pin(incremental_cluster_merge(prior, edges, all_nodes))
     # shingles FIRST, labels second: the labels snapshot is the commit
     # point, so its presence implies the shard exists.  A crash between
     # the two leaves only an orphan shard, which the version-derived
@@ -190,19 +185,16 @@ def streaming_cluster_ingest(
     text)`` rows via ``foreachBatch`` — after every micro-batch,
     ``{state_dir}/labels_v{batch_id}`` holds cluster labels identical to
     the batch connected-components over every document seen so far."""
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cluster_ingest_batch(
-            batch_df,
-            state_dir,
-            batch_id=batch_id,
-            n=n,
-            threshold=threshold,
-            max_doc_freq=max_doc_freq,
-        )
-
     return (
-        docs.writeStream.foreachBatch(_on_batch)
+        docs.writeStream.foreachBatch(
+            scoped(
+                cluster_ingest_batch,
+                state_dir,
+                n=n,
+                threshold=threshold,
+                max_doc_freq=max_doc_freq,
+            )
+        )
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -77,6 +77,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, write_snapshot
 
 _GDPR_MOD = 32  # must match plans/advanced.py's erasure cohort
@@ -116,7 +117,7 @@ def gdpr_ingest_batch(
     version = resolve_version(prior_path, batch_id)
     if prior is None:
         prior = spark.createDataFrame([], _STATE_SCHEMA)
-    batch_df = batch_df.localCheckpoint(eager=True)  # read once, reuse 4x
+    batch_df = pin(batch_df)  # read once, reuse 4x
 
     # --- stateless cohort legs -------------------------------------------
     cust = batch_df.filter((F.col("src") == "customer") & _in_cohort("k1"))
@@ -136,11 +137,10 @@ def gdpr_ingest_batch(
         F.col("k1").alias("k"),
         F.col("k2").alias("v"),
     ).dropDuplicates(["k"])
-    omap_all = (
+    omap_all = pin(
         prior.filter(F.col("kind") == "omap")
         .unionByName(omap_new)
         .dropDuplicates(["k"])  # an orderkey maps to one custkey
-        .localCheckpoint(eager=True)
     )
     # seen tombstones for NON-cohort orders (r11 ADVICE): a lineitem whose
     # order is known non-cohort is discarded, not parked — without this,
@@ -152,11 +152,10 @@ def gdpr_ingest_batch(
         F.col("k1").alias("k"),
         F.lit(0).cast("long").alias("v"),
     ).dropDuplicates(["k"])
-    seen_all = (
+    seen_all = pin(
         prior.filter(F.col("kind") == "seen")
         .unionByName(seen_new)
         .dropDuplicates(["k"])
-        .localCheckpoint(eager=True)
     )
 
     # --- lineitem enrichment with pending re-match ------------------------
@@ -211,11 +210,10 @@ def gdpr_ingest_batch(
     counts_folded = counts_all.groupBy("kind", "table_name", "k").agg(
         F.sum("v").cast("long").alias("v")
     )
-    snapshot = (
+    snapshot = pin(
         counts_folded.unionByName(omap_all)
         .unionByName(seen_all)
         .unionByName(pending_new)
-        .localCheckpoint(eager=True)
     )
     write_snapshot(snapshot, state_dir, _PREFIX, version)
     return snapshot
@@ -244,9 +242,7 @@ def streaming_gdpr_audit(
 ) -> StreamingQuery:
     """Wire the fold as a foreachBatch streaming query."""
     return (
-        cdc_stream.writeStream.foreachBatch(
-            lambda df, bid: gdpr_ingest_batch(df, state_dir, batch_id=bid)
-        )
+        cdc_stream.writeStream.foreachBatch(scoped(gdpr_ingest_batch, state_dir))
         .queryName("gdpr_erasure_fold")
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, scoped
 from .snapshots import (
     read_latest,
     read_sidecar,
@@ -75,7 +76,7 @@ def late_update_batch(
     else:
         prior = spark.createDataFrame([], _WIN_SCHEMA)
         prior_wm = -(1 << 62)
-    batch = batch_df.localCheckpoint(eager=True)
+    batch = pin(batch_df)
     batch_max = batch.agg(F.max("ts_ms")).collect()[0][0]
     watermark = max(prior_wm, batch_max if batch_max is not None else prior_wm)
     # a window [s, s+W) is still updatable while s + W + L > watermark;
@@ -98,11 +99,10 @@ def late_update_batch(
     delta = allowed.groupBy("event_type", "win_start").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    merged = (
+    merged = pin(
         prior.unionByName(delta)
         .groupBy("event_type", "win_start")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     write_snapshot(
         merged,
@@ -127,10 +127,9 @@ def streaming_late_updates(
     ``(event_type, ts_ms)`` rows."""
     return (
         events.writeStream.foreachBatch(
-            lambda df, bid: late_update_batch(
-                df,
+            scoped(
+                late_update_batch,
                 state_dir,
-                batch_id=bid,
                 window_ms=window_ms,
                 allowed_lateness_ms=allowed_lateness_ms,
                 late_dir=late_dir,

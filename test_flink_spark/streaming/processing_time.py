@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, write_snapshot
 
 _PTW_SCHEMA = "win_id LONG, event_type STRING, cnt LONG"
@@ -62,11 +63,10 @@ def processing_time_batch(
         "event_type",
         "cnt",
     )
-    merged = (
+    merged = pin(
         prior.unionByName(delta)
         .groupBy("win_id", "event_type")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     write_snapshot(merged, state_dir, "ptwin", version)
     return merged
@@ -83,10 +83,9 @@ def streaming_processing_time(
     """foreachBatch wiring of :func:`processing_time_batch`."""
     return (
         events.writeStream.foreachBatch(
-            lambda df, bid: processing_time_batch(
-                df,
+            scoped(
+                processing_time_batch,
                 state_dir,
-                batch_id=bid,
                 win_batches=win_batches,
                 type_col=type_col,
             )

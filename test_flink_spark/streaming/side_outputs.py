@@ -36,6 +36,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, scoped
+
 REST_TAG = "rest"
 
 
@@ -55,7 +57,7 @@ def split_batch(
         raise ValueError(f"unknown mode {mode!r}")
     if REST_TAG in routes:
         raise ValueError(f"tag {REST_TAG!r} is reserved for unmatched rows")
-    batch = batch_df.localCheckpoint(eager=True)
+    batch = pin(batch_df)
     counts: dict[str, int] = {}
     preds = list(routes.items())
     for i, (tag, pred) in enumerate(preds):
@@ -90,7 +92,7 @@ def streaming_side_outputs(
     """foreachBatch wiring of :func:`split_batch` over a stream."""
     return (
         stream.writeStream.foreachBatch(
-            lambda df, bid: split_batch(df, out_dir, bid, routes, mode=mode)
+            scoped(split_batch, out_dir, routes=routes, mode=mode)
         )
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)

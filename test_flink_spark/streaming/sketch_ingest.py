@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import sketch as sk
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, write_snapshot
 
 _REG_SCHEMA = "grp STRING, reg LONG, m_rank LONG"
@@ -66,12 +67,11 @@ def sketch_ingest_batch(
     new_regs = sk.hll_registers(batch_df, value_col, [group_col]).withColumnRenamed(
         group_col, "grp"
     )
-    merged = (
+    # cut lineage before overwriting directories this plan read from
+    merged = pin(
         prior.unionByName(new_regs)
         .groupBy("grp", "reg")
         .agg(F.max("m_rank").alias("m_rank"))
-        # cut lineage before overwriting directories this plan read from
-        .localCheckpoint(eager=True)
     )
     write_snapshot(merged, state_dir, "registers", version)
     return merged
@@ -107,18 +107,12 @@ def streaming_sketch_ingest(
     — after every micro-batch, ``{state_dir}/registers_v{batch_id}``
     holds the register table identical to the batch sketch over every
     row seen so far."""
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sketch_ingest_batch(
-            batch_df,
-            state_dir,
-            batch_id=batch_id,
-            value_col=value_col,
-            group_col=group_col,
-        )
-
     return (
-        events.writeStream.foreachBatch(_on_batch)
+        events.writeStream.foreachBatch(
+            scoped(
+                sketch_ingest_batch, state_dir, value_col=value_col, group_col=group_col
+            )
+        )
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import sketch as sk
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, write_snapshot
 
 _STATS_SCHEMA = (
@@ -112,7 +113,7 @@ def stats_ingest_batch(
     version = resolve_version(prior_path, batch_id)
     if prior is None:
         prior = spark.createDataFrame([], _STATS_SCHEMA)
-    merged = _fold(prior, _partials(batch_df, columns)).localCheckpoint(eager=True)
+    merged = pin(_fold(prior, _partials(batch_df, columns)))
     write_snapshot(merged, state_dir, "stats", version)
     return merged
 
@@ -150,12 +151,8 @@ def streaming_stats_ingest(
     """Run :func:`stats_ingest_batch` over a STREAM via ``foreachBatch``
     — after every micro-batch, ``{state_dir}/stats_v{batch_id}`` serves
     column stats over every row seen so far."""
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stats_ingest_batch(batch_df, state_dir, columns, batch_id=batch_id)
-
     return (
-        rows.writeStream.foreachBatch(_on_batch)
+        rows.writeStream.foreachBatch(scoped(stats_ingest_batch, state_dir, columns))
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .start()

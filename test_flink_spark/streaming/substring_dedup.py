@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import pin, scoped
+
 
 def _check_index_params(anchors_dir: str, k: int, w: int, ext: int) -> None:
     """Anchor ctx slices and offsets are baked at index-build time, so a
@@ -81,9 +83,7 @@ def substring_ingest_batch(
             if int(p.rsplit("=", 1)[1]) < batch_id
         ]
     )
-    new_anch = anchor_contexts(batch_df, "text", "doc_id", k, w, ext).localCheckpoint(
-        eager=True
-    )
+    new_anch = pin(anchor_contexts(batch_df, "text", "doc_id", k, w, ext))
     if have_prior:
         raw = (
             spark.read.parquet(anchors_dir)
@@ -124,21 +124,18 @@ def streaming_substring_check(
     text)`` rows: after each micro-batch, ``{state_dir}/hits/`` holds
     every (arriving doc, corpus doc) longest-duplicated-substring match
     and the anchor index has grown by the batch's own shard."""
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        substring_ingest_batch(
-            batch_df,
-            state_dir,
-            batch_id,
-            k=k,
-            w=w,
-            ext=ext,
-            max_df=max_df,
-            min_len=min_len,
-        )
-
     return (
-        docs.writeStream.foreachBatch(_on_batch)
+        docs.writeStream.foreachBatch(
+            scoped(
+                substring_ingest_batch,
+                state_dir,
+                k=k,
+                w=w,
+                ext=ext,
+                max_df=max_df,
+                min_len=min_len,
+            )
+        )
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import pin, scoped
 from .snapshots import read_latest, resolve_version, version_of, write_snapshot
 
 _INTERVALS_SCHEMA = "doc_id LONG, s INT, e INT, h LONG"
@@ -103,14 +104,14 @@ def verdict_ingest_batch(
         spark, state_dir, "verdicts", before=batch_id
     )
     version = resolve_version(prior_path, batch_id)
-    new_anch = anchor_contexts(batch_df, "text", "doc_id", k, w, ext).localCheckpoint(
-        eager=True
+    new_anch = pin(anchor_contexts(batch_df, "text", "doc_id", k, w, ext))
+    new_meta = pin(
+        batch_df.select(
+            "doc_id",
+            F.md5(F.array_join(words(F.col("text")), " ")).alias("fp"),
+            F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
+        )
     )
-    new_meta = batch_df.select(
-        "doc_id",
-        F.md5(F.array_join(words(F.col("text")), " ")).alias("fp"),
-        F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
-    ).localCheckpoint(eager=True)
     if prior_path is not None:
         prior_anch = (
             spark.read.parquet(anchors_dir)
@@ -176,11 +177,10 @@ def verdict_ingest_batch(
     # provenance-exact maintenance: drop every row a now-dead hash
     # contributed; a span also reachable through a live hash keeps its
     # surviving row — the batch detector's exact answer
-    iv_state = (
+    iv_state = pin(
         prior_iv.join(dead, "h", "left_anti")
         .unionByName(new_iv)
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     union_meta = prior_meta.unionByName(new_meta)
@@ -189,13 +189,12 @@ def verdict_ingest_batch(
     fp_touched = union_meta.join(
         new_meta.select("fp").distinct(), "fp"
     ).select("doc_id")
-    touched = (
+    touched = pin(
         new_meta.select("doc_id")
         .unionByName(new_iv.select("doc_id"))
         .unionByName(removed)
         .unionByName(fp_touched)
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     canon = union_meta.groupBy("fp").agg(F.min("doc_id").alias("canonical_id"))
@@ -240,7 +239,7 @@ def verdict_ingest_batch(
         )
     else:
         snapshot = recomputed
-    snapshot = snapshot.localCheckpoint(eager=True)
+    snapshot = pin(snapshot)
 
     # shards and interval state first, the verdict snapshot LAST: its
     # presence implies everything it was derived from exists
@@ -273,23 +272,20 @@ def streaming_dedup_verdicts(
     ``{state_dir}/verdicts_v{batch_id}`` holds retention verdicts
     identical to the batch retention_verdicts over every document seen
     so far."""
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        verdict_ingest_batch(
-            batch_df,
-            state_dir,
-            batch_id=batch_id,
-            k=k,
-            w=w,
-            ext=ext,
-            max_df=max_df,
-            min_len=min_len,
-            drop_bp=drop_bp,
-            trim_bp=trim_bp,
-        )
-
     return (
-        docs.writeStream.foreachBatch(_on_batch)
+        docs.writeStream.foreachBatch(
+            scoped(
+                verdict_ingest_batch,
+                state_dir,
+                k=k,
+                w=w,
+                ext=ext,
+                max_df=max_df,
+                min_len=min_len,
+                drop_bp=drop_bp,
+                trim_bp=trim_bp,
+            )
+        )
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .start()

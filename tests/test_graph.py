@@ -75,33 +75,36 @@ def test_label_propagation_deterministic_tiebreak(spark):
         assert out[1] == 1  # sees {2} + self {1}: tie -> 1
 
 
-def test_rolling_checkpoint_spares_foreign_caches(spark):
-    """_rolling_checkpoint must unpersist ONLY its own prior generation.
-    It records the checkpointed Dataset's own RDD id; a before/after
-    getPersistentRDDs diff would instead attribute any cache that
-    happens to register during the checkpoint job (e.g. a lazy
-    edges.cache() first materialized by it) and silently drop it on the
-    next call."""
+def test_pins_scope_spares_foreign_caches(spark):
+    """A scope releases ONLY the pins taken through it: each pin records
+    its checkpointed Dataset's own RDD id, so a cache that registers
+    during a checkpoint job (a lazy ``.cache()`` first materialized by
+    it) is not taken, and survives both a superseded generation's release
+    and the scope's exit."""
     from pyspark.sql import functions as F
 
-    from test_flink_spark.operators.graph import _rolling_checkpoint
+    from test_flink_spark.session import pin, pins
 
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
     foreign = spark.range(100).select(F.col("id").alias("n")).cache()
-    gen: set = set()
-    out1 = _rolling_checkpoint(spark.range(1000).toDF("id"), gen)
-    assert len(gen) == 1, "must record exactly the checkpointed RDD"
-    gen1 = set(gen)
-    foreign.count()  # foreign cache registers between generations
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    foreign_ids = set(jmap.keySet().toArray()) - gen1
-    assert foreign_ids, "foreign cache should be registered"
-    out2 = _rolling_checkpoint(out1.withColumn("v", F.col("id") + 1), gen)
-    assert out2.count() == 1000
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    live = set(jmap.keySet().toArray())
-    assert foreign_ids <= live, "foreign cache was stolen by the rolling diff"
-    assert not (gen1 & live), "prior generation must be freed"
-    assert gen and gen.isdisjoint(gen1)
+    with pins():
+        before = set(jmap().keySet().toArray())
+        out1 = pin(spark.range(1000).toDF("id"))
+        gen1 = set(jmap().keySet().toArray()) - before
+        assert len(gen1) == 1, "must record exactly the checkpointed RDD"
+        foreign.count()  # foreign cache registers between generations
+        foreign_ids = set(jmap().keySet().toArray()) - before - gen1
+        assert foreign_ids, "foreign cache should be registered"
+        out2 = pin(out1.withColumn("v", F.col("id") + 1), replaces=out1)
+        assert out2.count() == 1000
+        live = set(jmap().keySet().toArray())
+        assert foreign_ids <= live, "foreign cache was taken by the scope"
+        assert not (gen1 & live), "prior generation must be freed"
+        gen2 = live - before - foreign_ids
+        assert len(gen2) == 1 and gen2.isdisjoint(gen1)
+    live = set(jmap().keySet().toArray())
+    assert foreign_ids <= live, "foreign cache was released by the scope"
+    assert not (gen2 & live), "the scope must release its pins on exit"
     foreign.unpersist()
 
 

@@ -461,13 +461,13 @@ def test_shared_clusters_memoized_per_session_and_input(spark):
     propagation result per (application, sf_dir, threshold)."""
     from test_flink_spark.plans import llm_data
 
-    llm_data._CLUSTERS_CACHE.clear()
+    llm_data.release_pinned_cache(llm_data._CLUSTERS_CACHE)
     a = llm_data._shared_clusters(spark, SF, threshold=0.5)
     b = llm_data._shared_clusters(spark, SF, threshold=0.5)
     assert a is b
     c = llm_data._shared_clusters(spark, SF, threshold=0.7)
     assert c is not a
-    llm_data._CLUSTERS_CACHE.clear()
+    llm_data.release_pinned_cache(llm_data._CLUSTERS_CACHE)
 
 
 def test_near_dup_blocked_equals_brute(spark):
@@ -1203,10 +1203,8 @@ def test_containment_pairs_releases_shingle_index(spark):
     """Each call leaves only its pinned result: the capped shingle index
     is released, so releasing the result keeps the session's pins from
     growing over repeated calls."""
-    from test_flink_spark.operators.dedup import (
-        _unpersist_checkpoint,
-        containment_pairs,
-    )
+    from test_flink_spark.operators.dedup import containment_pairs
+    from test_flink_spark.session import pins
 
     df = spark.createDataFrame(
         [(i, " ".join(f"w{j}" for j in range(i, i + 12))) for i in range(20)],
@@ -1216,10 +1214,10 @@ def test_containment_pairs_releases_shingle_index(spark):
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     before = set(jmap().keySet().toArray())
     for _ in range(3):
-        out = containment_pairs(df, threshold_bp=5000)
-        assert len(set(jmap().keySet().toArray()) - before) == 1
-        assert out.count() > 0
-        _unpersist_checkpoint(out)
+        with pins():
+            out = containment_pairs(df, threshold_bp=5000)
+            assert len(set(jmap().keySet().toArray()) - before) == 1
+            assert out.count() > 0
         assert not set(jmap().keySet().toArray()) - before
 
 

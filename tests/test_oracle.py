@@ -27,8 +27,18 @@ def con():
     c.close()
 
 
+def _live_pins(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.fixture(scope="module")
+def pins_before(spark):
+    """The session's pins before the first query of this module ran."""
+    return _live_pins(spark)
+
+
 @pytest.mark.parametrize("name", sorted(entry.queries()))
-def test_query_matches_oracle(spark, con, name):
+def test_query_matches_oracle(spark, con, pins_before, name):
     assert check_query(spark, con, name) == []
 
 
@@ -48,3 +58,14 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     )
     assert run.returncode == 0, run.stdout[-3000:] + run.stderr[-3000:]
     assert "OK    multimodal_image_phash" in run.stdout
+
+
+def test_oracle_run_leaves_only_cache_pins(spark, pins_before):
+    """Each check builds its query inside a pins() scope, so after the
+    whole registry ran, every pin it left is a registered session-cache
+    entry (those are shared across queries and released only by
+    release_pinned_cache)."""
+    from test_flink_spark.session import _CACHED
+
+    cached = {rid for sc, rid in _CACHED if sc is spark.sparkContext}
+    assert _live_pins(spark) - pins_before - cached == set()

@@ -3646,3 +3646,215 @@ def test_gdpr_ingest_runs_as_streaming_query(spark, tmpdirs):
         for r in audit(spark, str(state)).collect()
     }
     assert got == _gdpr_python_audit(rows)
+
+
+# ---------------------------------------------------------------------------
+# Pins stay constant: every streaming/ module that pins runs its wiring
+# over three micro-batches, and the session holds no pin after a batch
+# that it did not hold before the stream started.
+# ---------------------------------------------------------------------------
+
+
+def _live_pins(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _doc_rows(i):
+    # overlapping word runs: every batch shares shingles and anchors with
+    # the earlier ones, so the pair, interval and merge paths all run
+    return [
+        {"doc_id": 10 * i + j, "text": " ".join(f"t{w}" for w in range(j, j + 14))}
+        for j in range(4)
+    ]
+
+
+def _broadcast_rules(fed):
+    """Start both broadcast_rules queries and feed the one named by
+    ``fed``; the event query is fed after a rules snapshot exists."""
+
+    def start(stream, tmp):
+        import json
+
+        from test_flink_spark.streaming.broadcast_rules import streaming_broadcast_rules
+
+        spark, other = stream.sparkSession, tmp / "other"
+        other.mkdir()
+        if fed == "rules":
+            rules, events = stream, spark.readStream.schema(_EV_SCHEMA).json(str(other))
+        else:
+            rule = {"rule_id": 1, "event_type": "view", "min_value_cents": 100,
+                    "enabled": True, "seq": 1}
+            _write_lines(other, "r0.json", [json.dumps(rule)])
+            rules, events = spark.readStream.schema(_RULES_SCHEMA).json(str(other)), stream
+        rq, eq = streaming_broadcast_rules(
+            rules, events, str(tmp / "state"), str(tmp / "out"), str(tmp / "ckpt")
+        )
+        rq.processAllAvailable()
+        return [rq, eq] if fed == "rules" else [eq, rq]
+
+    return start
+
+
+_RULES_SCHEMA = (
+    "rule_id LONG, event_type STRING, min_value_cents LONG, enabled BOOLEAN, seq LONG"
+)
+_EV_SCHEMA = "event_id LONG, event_type STRING, value DOUBLE"
+_DOCS_SCHEMA = "doc_id LONG, text STRING"
+
+
+def _pin_stream_cases():
+    """name -> (schema, rows of micro-batch i, start(stream, tmp) -> the
+    started queries, the fed one first)."""
+    from test_flink_spark.streaming import (
+        cluster_ingest,
+        gdpr_ingest,
+        late_updates,
+        processing_time,
+        side_outputs,
+        sketch_ingest,
+        stats_ingest,
+        substring_dedup,
+        verdict_ingest,
+    )
+
+    def dirs(tmp):
+        return str(tmp / "state"), str(tmp / "ckpt")
+
+    return {
+        "broadcast_rules_apply": (
+            _EV_SCHEMA,
+            lambda i: [{"event_id": 10 * i + j, "event_type": "view", "value": 0.5 + j}
+                       for j in range(3)],
+            _broadcast_rules("events"),
+        ),
+        "broadcast_rules_fold": (
+            _RULES_SCHEMA,
+            lambda i: [{"rule_id": j, "event_type": "view", "min_value_cents": 100 * i,
+                        "enabled": True, "seq": i} for j in range(2)],
+            _broadcast_rules("rules"),
+        ),
+        "cluster_ingest": (
+            _DOCS_SCHEMA,
+            _doc_rows,
+            lambda s, t: [cluster_ingest.streaming_cluster_ingest(s, *dirs(t))],
+        ),
+        "gdpr_ingest": (
+            "src STRING, k1 LONG, k2 LONG",
+            lambda i: [{"src": "customer", "k1": 17, "k2": None},
+                       {"src": "orders", "k1": 70 + i, "k2": 17},
+                       {"src": "lineitem", "k1": 70 + i, "k2": None},
+                       {"src": "lineitem", "k1": 90 + i, "k2": None},
+                       {"src": "events", "k1": 17, "k2": None}],
+            lambda s, t: [gdpr_ingest.streaming_gdpr_audit(s, *dirs(t))],
+        ),
+        "late_updates": (
+            "event_type STRING, ts_ms LONG",
+            # the last batch's first row lies beyond the allowed lateness
+            lambda i: [{"event_type": "view", "ts_ms": 300_000 * i - 290_000 * (i == 2)},
+                       {"event_type": "cart", "ts_ms": 300_000 * i + 1}],
+            lambda s, t: [late_updates.streaming_late_updates(
+                s, str(t / "state"), str(t / "late"), str(t / "ckpt"))],
+        ),
+        "processing_time": (
+            "event_type STRING",
+            lambda i: [{"event_type": "view"}, {"event_type": f"e{i}"}],
+            lambda s, t: [processing_time.streaming_processing_time(
+                s, *dirs(t), win_batches=2)],
+        ),
+        "side_outputs": (
+            "k LONG, v LONG",
+            lambda i: [{"k": j, "v": i + j} for j in range(3)],
+            lambda s, t: [side_outputs.streaming_side_outputs(
+                s, *dirs(t), {"big": "v > 1", "odd": "k % 2 = 1"})],
+        ),
+        "sketch_ingest": (
+            "user_id LONG, event_type STRING",
+            lambda i: [{"user_id": 10 * i + j, "event_type": "view"} for j in range(4)],
+            lambda s, t: [sketch_ingest.streaming_sketch_ingest(s, *dirs(t))],
+        ),
+        "stats_ingest": (
+            "user_id LONG, value_cents LONG",
+            lambda i: [{"user_id": i, "value_cents": 100 * i}, {"user_id": None,
+                                                                 "value_cents": 5}],
+            lambda s, t: [stats_ingest.streaming_stats_ingest(
+                s, *dirs(t), {"user_id": "user_id", "value_cents": "value_cents"})],
+        ),
+        "substring_dedup": (
+            _DOCS_SCHEMA,
+            _doc_rows,
+            lambda s, t: [substring_dedup.streaming_substring_check(s, *dirs(t))],
+        ),
+        "verdict_ingest": (
+            _DOCS_SCHEMA,
+            _doc_rows,
+            lambda s, t: [verdict_ingest.streaming_dedup_verdicts(s, *dirs(t))],
+        ),
+    }
+
+
+def _corpus_jobs(spark, tmp, check):
+    """Three corpus_curation_pipeline jobs on their own shards, each
+    followed by the benchmark's two session-cache releases."""
+    from test_flink_spark.plans import llm_data
+    from test_flink_spark.sinks.files import write_parquet
+
+    for i in range(3):
+        shard = tmp / f"shard{i}"
+        shard.mkdir()
+        shutil.copy("/root/testdata/sf0.001/documents.parquet", shard)
+        write_parquet(
+            llm_data.corpus_curation_pipeline(spark, str(shard)), str(tmp / f"out{i}")
+        )
+        llm_data.release_pinned_cache(llm_data._CLUSTERS_CACHE)
+        llm_data.release_pinned_cache(llm_data._PAIR_BASE_CACHE)
+        check()
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "broadcast_rules_apply",
+        "broadcast_rules_fold",
+        "cluster_ingest",
+        "gdpr_ingest",
+        "late_updates",
+        "processing_time",
+        "side_outputs",
+        "sketch_ingest",
+        "stats_ingest",
+        "substring_dedup",
+        "verdict_ingest",
+        "corpus_curation",
+    ],
+)
+def test_pins_constant_across_batches(spark, tmpdirs, case):
+    """A long-lived session does not grow its pinned RDDs: after each
+    micro-batch (or corpus job) the live persistent-RDD ids are within
+    the set live before the stream started.  Compared as id sets: pins of
+    earlier tests may be cleaned meanwhile, but no new one may stay."""
+    import json
+
+    before = _live_pins(spark)
+
+    def check():
+        assert _live_pins(spark) - before == set()
+
+    if case == "corpus_curation":
+        _corpus_jobs(spark, tmpdirs, check)
+        return
+    schema, rows, start = _pin_stream_cases()[case]
+    src = tmpdirs / "src"
+    src.mkdir()
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
+    )
+    queries = start(stream, tmpdirs)
+    try:
+        check()
+        for i in range(3):
+            _write_lines(src, f"b{i}.json", [json.dumps(r) for r in rows(i)])
+            queries[0].processAllAvailable()
+            check()
+    finally:
+        for q in queries:
+            q.stop()

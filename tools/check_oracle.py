@@ -57,18 +57,22 @@ def connect(sf_dir: str = SF_DIR):
 
 def check_query(spark, con, name: str, sf_dir: str = SF_DIR) -> list[str]:
     """Differences between query ``name`` and its DuckDB oracle; empty when
-    they agree.  Spark or DuckDB errors propagate to the caller."""
+    they agree.  Spark or DuckDB errors propagate to the caller.  The query
+    is built and collected inside one ``pins()`` scope, which releases
+    every pin it took (session-cache entries excepted)."""
     import numpy as np
     import pandas as pd
 
     import __spark_entry__ as entry
+    from test_flink_spark.session import pins
 
-    df = entry.queries()[name](spark, sf_dir)
     oracle = entry.oracle_sql().get(name)
     if oracle is None:
         return ["no oracle SQL registered"]
-    spark_dtypes = dict(df.dtypes)
-    s = normalize(df.toPandas())
+    with pins():
+        df = entry.queries()[name](spark, sf_dir)
+        spark_dtypes = dict(df.dtypes)
+        s = normalize(df.toPandas())
     arrow = con.execute(oracle).fetch_arrow_table()
     o = normalize(arrow.to_pandas())
 
