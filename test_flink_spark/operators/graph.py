@@ -124,7 +124,14 @@ def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
                 .groupBy("dst")
                 .agg(F.sum("contrib").alias("inflow"))
             ).hint("shuffle_hash")
-            ranks = (
+            # eager checkpoint, not cache()+count(): both materialize, but
+            # only the checkpoint truncates the LOGICAL plan — explain() on
+            # a cached iteration still prints the full nested lineage
+            # (thousands of phantom exchanges in the audit), while the
+            # checkpointed plan is 1 iteration deep for planner and reader
+            # alike.  The superseded generation is released; lifetimes:
+            # docs/DESIGN_DECISIONS.md, "Pin ownership".
+            prev, ranks = ranks, pin(
                 ranks.join(inbound, ranks.node == inbound.dst, "left")
                 .select(
                     "node",
@@ -135,14 +142,7 @@ def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
                     "deg",
                 )
             )
-            # eager checkpoint, not cache()+count(): both materialize, but
-            # only the checkpoint truncates the LOGICAL plan — explain() on
-            # a cached iteration still prints the full nested lineage
-            # (thousands of phantom exchanges in the audit), while the
-            # checkpointed plan is 1 iteration deep for planner and reader
-            # alike.  The superseded generation is released; lifetimes:
-            # docs/DESIGN_DECISIONS.md, "Pin ownership".
-            ranks = pin(ranks, replaces=ranks)
+            p.release(prev)
         return p.returning(ranks).select("node", "rank_fp")
 
 
@@ -211,13 +211,13 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
             counted = votes.groupBy("v", "community").agg(
                 F.count(F.lit(1)).alias("n")
             )
-            labels = (
+            # the pin truncates logical lineage
+            prev, labels = labels, pin(
                 counted.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
                 .select("v", "community")
             )
-            # truncates logical lineage, releases the prior generation
-            labels = pin(labels, replaces=labels)
+            p.release(prev)
         return p.returning(labels).select(F.col("v").alias("node"), "community")
 
 
@@ -290,12 +290,12 @@ def bfs_distances(
                 )
                 .select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
             )
-            dist = (
+            prev, dist = dist, pin(
                 dist.unionByName(reached)
                 .groupBy("node")
                 .agg(F.min("d").alias("d"))
             )
-            dist = pin(dist, replaces=dist)
+            p.release(prev)
         return p.returning(dist).select("node", F.col("d").alias("hops"))
 
 
@@ -351,7 +351,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
                 .filter(F.col("deg") >= k)
                 .select("src")
             )
-            cur = (
+            prev, cur = cur, pin(
                 cur.join(alive.hint("shuffle_hash"), "src")
                 .join(
                     alive.withColumnRenamed("src", "dst").hint("shuffle_hash"),
@@ -359,9 +359,9 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
                 )
                 .select("src", "dst")
             )
-            cur = pin(cur, replaces=cur)
-            # Eager 1-row collect per round: each pin releases the previous
-            # generation, so a lazily-evaluated round-1 stats frame would
+            p.release(prev)
+            # Eager 1-row collect per round: the previous generation is
+            # released above, so a lazily-evaluated round-1 stats frame would
             # read freed blocks at final-union time.  The counts
             # are O(rounds) metadata — collecting them is the same bounded-
             # collect class as the prefix-sum offset map.
@@ -460,15 +460,15 @@ def min_label_components(
             # the jump reads labels twice: without a lineage cut the logical
             # plan would double every round
             fell = Observation()
-            labels = pin(
+            prev, labels = labels, pin(
                 jumped.select("node", "own", F.col("own").alias("label"))
                 .unionByName(nbr)
                 .groupBy("node")
                 .agg(F.min("label").alias("label"), F.max("own").alias("own"))
                 .observe(fell, F.count(F.when(F.col("label") < F.col("own"), 1)).alias("n"))
-                .select("node", "label"),
-                replaces=labels,
+                .select("node", "label")
             )
+            p.release(prev)
             if fell.get["n"] == 0:
                 converged = True
                 break
@@ -542,15 +542,15 @@ def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
                 .agg(F.sum("score_fp").alias("raw"))
             )
             amax = araw.agg(F.max("raw").alias("mx"))
-            auth = pin(
+            prev, auth = auth, pin(
                 araw.crossJoin(F.broadcast(amax)).select(
                     F.col("dst").alias("node"),
                     F.expr(f"CAST(CAST(raw AS DECIMAL(38,0)) * {SCALE} div mx AS BIGINT)").alias(
                         "score_fp"
                     ),
-                ),
-                replaces=auth,
+                )
             )
+            p.release(prev)
             p.release(araw)
             hraw = persist(
                 edges.join(
@@ -563,15 +563,15 @@ def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
                 .agg(F.sum("score_fp").alias("raw"))
             )
             hmax = hraw.agg(F.max("raw").alias("mx"))
-            hubs = pin(
+            prev, hubs = hubs, pin(
                 hraw.crossJoin(F.broadcast(hmax)).select(
                     F.col("src").alias("node"),
                     F.expr(f"CAST(CAST(raw AS DECIMAL(38,0)) * {SCALE} div mx AS BIGINT)").alias(
                         "score_fp"
                     ),
-                ),
-                replaces=hubs,
+                )
             )
+            p.release(prev)
             p.release(hraw)
         return p.returning(hubs).select(
             "node", F.lit("hub").alias("role"), "score_fp"
@@ -678,7 +678,7 @@ def personalized_pagerank(
                 .groupBy("dst")
                 .agg(F.sum("contrib").alias("inflow"))
             ).hint("shuffle_hash")
-            ranks = (
+            prev, ranks = ranks, pin(
                 ranks.join(inbound, ranks.node == inbound.dst, "left")
                 .select(
                     "node",
@@ -691,7 +691,7 @@ def personalized_pagerank(
                     "is_seed",
                 )
             )
-            ranks = pin(ranks, replaces=ranks)
+            p.release(prev)
         return p.returning(ranks).select("node", "rank_fp")
 
 

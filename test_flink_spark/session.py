@@ -235,10 +235,10 @@ def pins():
             _unpin(*scope._held.pop())
 
 
-def pin(df: DataFrame, replaces: DataFrame | None = None) -> DataFrame:
+def pin(df: DataFrame) -> DataFrame:
     """``df`` materialized by an eager ``localCheckpoint``, owned by the
-    innermost open scope.  ``replaces`` (a superseded generation of an
-    iterative loop) is released once the new one is materialized.
+    innermost open scope.  An iterative loop frees the superseded
+    generation with ``p.release(prev)`` once the new one is pinned.
 
     localCheckpoint keeps blocks on executors (MEMORY_AND_DISK) with no
     lineage fallback: an executor loss fails the query instead of
@@ -248,8 +248,6 @@ def pin(df: DataFrame, replaces: DataFrame | None = None) -> DataFrame:
     scope = _innermost()
     if scope:
         scope._held.append((out, _rdd_key(out)))
-        if replaces is not None:
-            scope.release(replaces)
     return out
 
 

@@ -87,7 +87,7 @@ def test_pins_scope_spares_foreign_caches(spark):
 
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     foreign = spark.range(100).select(F.col("id").alias("n")).cache()
-    with pins():
+    with pins() as p:
         before = set(jmap().keySet().toArray())
         out1 = pin(spark.range(1000).toDF("id"))
         gen1 = set(jmap().keySet().toArray()) - before
@@ -95,7 +95,8 @@ def test_pins_scope_spares_foreign_caches(spark):
         foreign.count()  # foreign cache registers between generations
         foreign_ids = set(jmap().keySet().toArray()) - before - gen1
         assert foreign_ids, "foreign cache should be registered"
-        out2 = pin(out1.withColumn("v", F.col("id") + 1), replaces=out1)
+        out2 = pin(out1.withColumn("v", F.col("id") + 1))
+        p.release(out1)
         assert out2.count() == 1000
         live = set(jmap().keySet().toArray())
         assert foreign_ids <= live, "foreign cache was taken by the scope"
@@ -106,6 +107,86 @@ def test_pins_scope_spares_foreign_caches(spark):
     assert foreign_ids <= live, "foreign cache was released by the scope"
     assert not (gen2 & live), "the scope must release its pins on exit"
     foreign.unpersist()
+
+
+def _ring(spark, n):
+    """Directed ring both ways: every node has out-degree 2."""
+    pairs = []
+    for i in range(n):
+        pairs += [(i, (i + 1) % n), ((i + 1) % n, i)]
+    return spark.createDataFrame(pairs, "src LONG, dst LONG")
+
+
+_CHAIN = [5, 2, 7, 0, 8, 3, 6, 1, 4]  # shuffled ids: several label rounds
+
+
+@pytest.mark.parametrize(
+    "name, run, bound",
+    [
+        ("pagerank", lambda s: gr.pagerank(_ring(s, 6), iterations=5), 2),
+        (
+            "personalized_pagerank",
+            lambda s: gr.personalized_pagerank(
+                _ring(s, 6), s.createDataFrame([(0,)], "node LONG"), iterations=5
+            ),
+            2,
+        ),
+        (
+            "label_propagation",
+            lambda s: gr.label_propagation(
+                _ring(s, 6).toDF("a", "b"), iterations=4
+            ),
+            2,
+        ),
+        (
+            "bfs_distances",
+            lambda s: gr.bfs_distances(
+                _ring(s, 12), s.createDataFrame([(0,)], "node LONG"), max_hops=4
+            ),
+            2,
+        ),
+        ("kcore_peel", lambda s: gr.kcore_peel(_ring(s, 6), k=2, rounds=4), 2),
+        # two score tables: the other table's live generation rides along
+        ("hits", lambda s: gr.hits(_ring(s, 6), iterations=3), 3),
+        # the pinned edge list stays live through every round
+        (
+            "min_label_components",
+            lambda s: gr.min_label_components(
+                s.createDataFrame(
+                    list(zip(_CHAIN, _CHAIN[1:])), "id_a LONG, id_b LONG"
+                ),
+                s.range(9).toDF("id"),
+                "id",
+                max_iter=8,
+            ),
+            3,
+        ),
+    ],
+)
+def test_iterative_loops_hold_two_generations(spark, monkeypatch, name, run, bound):
+    """Each loop releases its superseded generation once the next one is
+    pinned, so the pins live at any time stay constant in the number of
+    rounds: 2 generations of a rank/label/distance/edge table (3 where a
+    second pinned table is live alongside)."""
+    from test_flink_spark import session
+
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    taken, peak = [], [0]
+
+    def counting_pin(df):
+        out = session.pin(df)
+        taken.append(session._rdd_key(out)[1])
+        live = set(jmap().keySet().toArray())
+        peak[0] = max(peak[0], sum(i in live for i in taken))
+        return out
+
+    monkeypatch.setattr(gr, "pin", counting_pin)
+    with session.pins():
+        run(spark).collect()
+    assert len(taken) >= 3, f"{name}: expected one pin per round"
+    assert peak[0] <= bound, (
+        f"{name}: {peak[0]} of its {len(taken)} pins were live at once"
+    )
 
 
 def test_supplier_jaccard_exact_on_tiny_graph(spark, tmp_path):
