@@ -54,17 +54,17 @@ ISOLATED_TOP = [
     # the LIGHTEST line, never the heaviest (the r6 failure: the iso
     # budget went to a 1.35 s line while the 7.99 s line went unmeasured).
     # embedding_ivfpq_sampled_search is the PRODUCTION sampled-train
-    # IVF-PQ line (r9 split the recall-vs-truth audit out into
-    # embedding_ivfpq_sampled_train, which shares this query's memoized
-    # codebooks and therefore stays OUT of this list — the same
-    # memoized-consumer exclusion as corpus_dup_span_coverage below);
+    # IVF-PQ line (the recall-vs-truth audit embedding_ivfpq_sampled_train
+    # shares this query's memoized codebooks and therefore stays OUT of
+    # this list — the same memoized-consumer exclusion as
+    # corpus_dup_span_coverage below);
     # dedup_simhash_clusters is the w64 implementation since r8 (the
     # retired w32 form led this list).
     # corpus_dup_span_coverage is EXCLUDED despite its 6.1 s in-sweep
     # cost: its coverage table is session-memoized, so --one's min-of-3
-    # reads the first rep's cache and reports ~0.04 s — a shared-stage
-    # accounting line, not an isolatable one (the in-sweep number is the
-    # honest cost; same exclusion rule as r7's shared dedup stages).
+    # reads the first rep's memo entry and reports ~0.04 s — a
+    # shared-stage accounting line, not an isolatable one (the in-sweep
+    # number is the honest cost; same rule as the shared dedup stages).
     "embedding_ivfpq_sampled_search",
     "corpus_dedup_cascade_audit",
     "dedup_clusters_incremental",
@@ -76,12 +76,11 @@ ISOLATED_TOP = [
 ]
 
 
-# Session memo caches a query OWNS for pricing purposes: --one clears
-# these between reps so min-of-3 includes the owned work every rep.
-# Without this, rep 1 trains and reps 2-3 read the memo — the min prices
-# a TRAINING operator as if codebooks were free (the r9 split of
-# embedding_ivfpq_sampled_search exists precisely to surface training
-# cost).  Caches NOT listed stay warm by design: they model persisted
+# Session memos (docs/DESIGN_DECISIONS.md, "Pin ownership") a query OWNS
+# for pricing purposes: --one releases these between reps so min-of-3
+# includes the owned work every rep.  Without this, rep 1 trains and reps
+# 2-3 read the memo — the min prices a TRAINING operator as if codebooks
+# were free.  Memos NOT listed stay warm by design: they model persisted
 # artifacts the operator reads, not work it performs (e.g. the audit
 # query reads the production codebooks; _shared_clusters consumers pay
 # marginal cost — the sweep prices those stages as their own lines).
@@ -107,8 +106,6 @@ def run_one(name: str, reps: int = 3) -> None:
     best = float("inf")
     for _ in range(reps):
         for cache_attr in _OWNED_CACHES.get(name, ()):
-            # releases any pinned DataFrame entries before dropping
-            # (no-op for the codebook tuples _SAMPLED_BOOKS_CACHE holds)
             llm_data.release_pinned_cache(getattr(llm_data, cache_attr))
         with pins():  # the query's own pins go after each rep, untimed
             t0 = time.perf_counter()
@@ -245,68 +242,34 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     timings: dict[str, float] = {}
 
-    # One-time capped pair base (the localCheckpointed inverted-index
-    # self-join every exact-Jaccard/containment consumer reads —
-    # _shared_pair_base), timed as its OWN line (r12: previously SIX
-    # queries each re-ran the identical shingle pass + doc-frequency cap +
-    # self-join; now the build runs once per session and consumers report
-    # marginal cost, the production accounting — a pipeline persists its
-    # pair table per ingest).  Measured FIRST so the shared-clusters line
-    # below prices the CC propagation, not the pair join.
-    from test_flink_spark.plans.llm_data import (
-        _PAIR_BASE_CACHE,
-        _shared_pair_base,
-        release_pinned_cache,
-    )
+    # The shared stages, each timed as its OWN line (a memo entry, built
+    # once per input: docs/DESIGN_DECISIONS.md, "Pin ownership"), so their
+    # consumers below report marginal cost, the production accounting (a
+    # pipeline persists its dedup stages per ingest).  Without these lines
+    # the full price landed on whichever consumer ran first.  Each rep
+    # releases the memo, so each rep rebuilds it.
+    # - dedup_pair_base_build: the capped inverted-index self-join every
+    #   exact-Jaccard/containment consumer reads; FIRST, so the next line
+    #   prices the CC propagation, not the pair join
+    # - dedup_shared_stage: the connected components dedup_clusters and
+    #   the curation/build queries read
+    # - dedup_index_build: the incremental-dedup corpus band index, so
+    #   dedup_incremental_shard reports marginal ingest cost
+    from test_flink_spark.plans import llm_data
 
-    best = float("inf")
-    for _ in range(reps):
-        # release, not clear(): a bare clear() left each superseded rep's
-        # pair table pinned until a JVM GC ran the ContextCleaner
-        release_pinned_cache(_PAIR_BASE_CACHE)
-        t0 = time.perf_counter()
-        _shared_pair_base(spark, sf_dir)  # eager localCheckpoint materializes
-        best = min(best, time.perf_counter() - t0)
-    timings["dedup_pair_base_build"] = round(best, 2)
-    print(
-        f"# dedup_pair_base_build: {timings['dedup_pair_base_build']:.2f}s",
-        file=sys.stderr,
-    )
-
-    # One-time shared dedup stage (the localCheckpointed connected-components
-    # result consumed by dedup_clusters + the curation/build queries), timed
-    # as its OWN line: previously the full propagation price landed on
-    # whichever consumer ran first, making dedup_clusters look regressed
-    # while every other consumer looked free.  Consumers below now report
-    # marginal cost, the production accounting (a pipeline computes its
-    # dedup stage once; downstream queries read it).
-    from test_flink_spark.plans.llm_data import _CLUSTERS_CACHE, _shared_clusters
-
-    best = float("inf")
-    for _ in range(reps):
-        release_pinned_cache(_CLUSTERS_CACHE)
-        t0 = time.perf_counter()
-        _shared_clusters(spark, sf_dir)  # eager localCheckpoint materializes
-        best = min(best, time.perf_counter() - t0)
-    timings["dedup_shared_stage"] = round(best, 2)
-    print(f"# dedup_shared_stage: {timings['dedup_shared_stage']:.2f}s", file=sys.stderr)
-
-    # Same accounting for the incremental-dedup corpus band index (the
-    # persisted artifact an ingest pipeline reads, not rebuilds): its own
-    # line; dedup_incremental_shard below reports marginal ingest cost.
-    from test_flink_spark.plans.llm_data import (
-        _SHARD_INDEX_CACHE,
-        _shard_corpus_index,
-    )
-
-    best = float("inf")
-    for _ in range(reps):
-        release_pinned_cache(_SHARD_INDEX_CACHE)
-        t0 = time.perf_counter()
-        _shard_corpus_index(spark, sf_dir)
-        best = min(best, time.perf_counter() - t0)
-    timings["dedup_index_build"] = round(best, 2)
-    print(f"# dedup_index_build: {timings['dedup_index_build']:.2f}s", file=sys.stderr)
+    for line, memo, build in (
+        ("dedup_pair_base_build", llm_data._PAIR_BASE_CACHE, llm_data._shared_pair_base),
+        ("dedup_shared_stage", llm_data._CLUSTERS_CACHE, llm_data._shared_clusters),
+        ("dedup_index_build", llm_data._SHARD_INDEX_CACHE, llm_data._shard_corpus_index),
+    ):
+        best = float("inf")
+        for _ in range(reps):
+            llm_data.release_pinned_cache(memo)
+            t0 = time.perf_counter()
+            build(spark, sf_dir)  # eager localCheckpoint materializes
+            best = min(best, time.perf_counter() - t0)
+        timings[line] = round(best, 2)
+        print(f"# {line}: {timings[line]:.2f}s", file=sys.stderr)
 
     for name in names:
         fn = qs[name]

@@ -16,7 +16,7 @@ from ..operators import bpe
 from ..operators import graph as gr
 from ..operators import layout, prefix, sampling
 from ..operators import sketch as sk
-from ..session import persist, pin
+from ..session import Memo, persist, pin
 from .relational import _t
 
 # ---------------------------------------------------------------------------
@@ -180,21 +180,20 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_SQL = bpe.bpe_oracle_sql("documents", "text", _BPE_MERGES)
 
-# learned merges memoized per (application, sf_dir): the merge table is the
-# tokenizer's persisted artifact — training it once and encoding many is
-# the production shape (the _shared_clusters accounting discipline)
-_BPE_LEARNED_CACHE: dict[tuple, list[str]] = {}
+# learned merges memoized per input: the merge table is the tokenizer's
+# persisted artifact — training it once and encoding many is the
+# production shape (docs/DESIGN_DECISIONS.md, "Pin ownership")
+_BPE_LEARNED_CACHE = Memo()
 
 
 def _learned_merges(spark: SparkSession, sf_dir: str) -> list[str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _BPE_LEARNED_CACHE.get(key)
-    if pairs is None:
-        docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
+
+    def learn():
         rows = bpe.bpe_learn(spark, docs, "text", _BPE_MERGES).collect()
-        pairs = [r["pair"] for r in sorted(rows, key=lambda r: r["merge_round"])]
-        _BPE_LEARNED_CACHE[key] = pairs
-    return pairs
+        return [r["pair"] for r in sorted(rows, key=lambda r: r["merge_round"])]
+
+    return _BPE_LEARNED_CACHE.get(spark, [docs], (), learn)
 
 
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .session import _listing
+
 # ---------------------------------------------------------------------------
 # Reference record types
 # ---------------------------------------------------------------------------
@@ -165,9 +167,11 @@ TESTDATA_TABLES = (
 # manifest; guide §6 recommends exactly this via
 # filesourcePartitionFileCacheSize for catalog tables), not once per
 # query.  The session object rides in the value so a GC'd session's id
-# can never alias a live one.  Assumes the table directory is immutable
-# for the session's lifetime (true for the SF testdata; a mutable-table
-# deployment reads through a catalog that owns snapshot semantics).
+# can never alias a live one.  The value also holds the listing its scan
+# was planned on (session.Memo's key): a handle planned on an older file
+# at the same path reads that file's byte ranges from the new one (a
+# 50k-row file landed over a 100-row one counted 0 rows), so a changed
+# listing re-reads the table.
 _TABLE_MEMO: dict[tuple, tuple] = {}
 
 
@@ -181,7 +185,7 @@ def load_table(spark, sf_dir: str, name: str):
     """
     key = (id(spark), sf_dir, name)
     hit = _TABLE_MEMO.get(key)
-    if hit is not None:
+    if hit is not None and hit[2] == _listing(spark, [hit[1]]):
         return hit[1]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -196,5 +200,5 @@ def load_table(spark, sf_dir: str, name: str):
         # driver session): normalize NTZ → session-tz (UTC) timestamp so
         # epoch functions apply; wall-clock fields are unchanged.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_MEMO[key] = (spark, df)
+    _TABLE_MEMO[key] = (spark, df, _listing(spark, [df]))
     return df

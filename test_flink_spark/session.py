@@ -155,13 +155,13 @@ def ship_package(sc) -> None:
 # ---------------------------------------------------------------------------
 # Pins: who releases an eager localCheckpoint or a persisted relation.
 #
-# The rule: no pin outlives its call, except a registered session-cache
-# entry.  ``with pins() as p:`` releases, on exit, every pin taken inside
-# it; ``pin``/``persist`` record into the innermost open scope of the
-# calling thread, and with no scope open the caller owns the pin.  A call
-# that returns a pinned result hands that one pin to the enclosing scope
-# (``p.returning``).  Session-cache entries (``register``) belong to no
-# scope: queries share them, so only ``release_pinned_cache`` frees them.
+# The rule: no pin outlives its call, except a memo entry.  ``with pins()
+# as p:`` releases, on exit, every pin taken inside it; ``pin``/``persist``
+# record into the innermost open scope of the calling thread, and with no
+# scope open the caller owns the pin.  A call that returns a pinned result
+# hands that one pin to the enclosing scope (``p.returning``).  A memo
+# entry (``Memo``) belongs to no scope: queries share it, and the memo
+# releases it when a new key replaces it or ``release_pinned_cache`` runs.
 # ---------------------------------------------------------------------------
 
 class _Scopes(threading.local):
@@ -170,8 +170,6 @@ class _Scopes(threading.local):
 
 
 _SCOPES = _Scopes()
-# (SparkContext, rdd id) of every registered session-cache entry
-_CACHED: set[tuple] = set()
 
 
 def _rdd_key(df: DataFrame) -> tuple:
@@ -187,7 +185,7 @@ def _unpin(df: DataFrame, key: tuple | None) -> None:
     after unpersisting" on every call."""
     if key is None:
         df.unpersist()
-    elif key not in _CACHED:
+    elif key[0]._jsc is not None:  # a stopped context holds no blocks
         key[0]._jsc.sc().unpersistRDD(key[1], False)
 
 
@@ -272,19 +270,63 @@ def scoped(batch_fn, *args, **kwargs):
     return run
 
 
-def register(cache: dict, key, df: DataFrame) -> DataFrame:
-    """Memoize a pinned ``df`` in a session cache.  No scope releases it
-    (the next query reads it); ``release_pinned_cache`` does."""
-    _CACHED.add(_rdd_key(df))
-    cache[key] = df
-    return df
+class Memo:
+    """One shared stage's session memo, holding at most one entry.
+
+    An entry is keyed by the session's ``applicationId``, the stage's
+    ``params`` and the listing of every file its ``inputs`` read: path,
+    length and modification time from the Hadoop ``FileSystem``, a
+    driver-side call with no Spark job.  A new shard landed at an old path
+    is a new key.  A new key releases the old entry before computing its
+    own: a pinned DataFrame is unpinned, any other value goes to ``drop``
+    (or is just dropped).  ``compute`` runs in its own ``pins()`` scope;
+    a DataFrame it returns must be a pin it took, which then leaves every
+    scope, so the next query can read it."""
+
+    def __init__(self, drop=None):
+        self._drop = drop
+        # the entry: its key, its value and, for a pin, (df, rdd key)
+        self._key = self._value = self._pin = None
+
+    def get(self, spark: SparkSession, inputs, params, compute):
+        key = (spark.sparkContext.applicationId, params, _listing(spark, inputs))
+        if key == self._key:
+            return self._value
+        self.release()
+        with pins() as p:
+            value = compute()
+            pinned = p._pop(value) if isinstance(value, DataFrame) else None
+        self._key, self._value, self._pin = key, value, pinned
+        return value
+
+    def release(self) -> None:
+        """Release the entry now; the next ``get`` recomputes it."""
+        key, value, pinned = self._key, self._value, self._pin
+        self._key = self._value = self._pin = None
+        if pinned:
+            _unpin(*pinned)
+        elif key is not None and self._drop:
+            self._drop(value)
 
 
-def release_pinned_cache(cache: dict) -> None:
-    """Release every pinned DataFrame entry of a session cache, then
-    drop the entries (other values are only dropped)."""
-    for df in cache.values():
-        if isinstance(df, DataFrame):
-            _CACHED.discard(key := _rdd_key(df))
-            _unpin(df, key)
-    cache.clear()
+def _listing(spark: SparkSession, inputs) -> tuple:
+    """``(path, length, modification time)`` of every file ``inputs`` read
+    (``-1``s for a file gone since the scan was planned)."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm, conf = spark._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+    out = []
+    for df in inputs:
+        for f in sorted(df.inputFiles()):
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            try:
+                st = path.getFileSystem(conf).getFileStatus(path)
+                out.append((f, st.getLen(), st.getModificationTime()))
+            except Py4JJavaError:
+                out.append((f, -1, -1))
+    return tuple(out)
+
+
+def release_pinned_cache(memo: Memo) -> None:
+    """Release ``memo``'s entry now (its pin, if it holds one)."""
+    memo.release()

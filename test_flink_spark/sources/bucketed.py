@@ -28,10 +28,14 @@ is pinned by ``tests/test_joins.py::test_bucketed_join_is_shuffle_free``.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import Memo
 
 
 def write_bucketed(
@@ -58,49 +62,37 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-# one bucketed copy of (lineitem, orders) per (application, sf_dir) — the
-# write-once/join-many amortization this layout exists for
-_BUCKETED_CACHE: dict[tuple, tuple[str, str]] = {}
+def _drop_tables(entry: tuple) -> None:
+    spark, base = entry
+    if spark.sparkContext._jsc is not None:  # a stopped session has no catalog
+        for t in ("li_bucketed", "orders_bucketed"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+# one bucketed copy of (lineitem, orders) per input — the write-once/
+# join-many amortization this layout exists for; a new input drops the
+# old copy's tables and files
+_BUCKETED_CACHE = Memo(drop=_drop_tables)
 
 
 def bucketed_lineitem_orders(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> tuple[DataFrame, DataFrame]:
     """Return (lineitem, orders) read from bucketed tables co-partitioned
-    on the order key, writing them on first use per session."""
+    on the order key, writing them on first use per input."""
     from ..schemas import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
-    names = _BUCKETED_CACHE.get(key)
-    if names is None:
-        # stable digest, NOT builtin hash(): PYTHONHASHSEED randomizes
-        # hash() per process, which would mint fresh table/dir names every
-        # run (DROP TABLE / overwrite never reclaims earlier copies) and a
-        # cross-key collision could silently alias two different datasets
-        import hashlib
+    li, orders = load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
 
-        suffix = hashlib.md5(repr(key).encode()).hexdigest()[:8]
-        li_name = f"li_bucketed_{suffix}"
-        o_name = f"orders_bucketed_{suffix}"
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_bucketed",
-            spark.sparkContext.applicationId,
-        )
-        write_bucketed(
-            load_table(spark, sf_dir, "lineitem"),
-            li_name,
-            "l_orderkey",
-            n_buckets,
-            path=os.path.join(base, li_name),
-        )
-        write_bucketed(
-            load_table(spark, sf_dir, "orders"),
-            o_name,
-            "o_orderkey",
-            n_buckets,
-            path=os.path.join(base, o_name),
-        )
-        names = (li_name, o_name)
-        _BUCKETED_CACHE[key] = names
-    return spark.table(names[0]), spark.table(names[1])
+    def write() -> tuple:
+        base = tempfile.mkdtemp(prefix="spark_graft_bucketed-")
+        atexit.register(shutil.rmtree, base, True)  # the entry live at exit
+        write_bucketed(li, "li_bucketed", "l_orderkey", n_buckets,
+                       path=os.path.join(base, "li_bucketed"))
+        write_bucketed(orders, "orders_bucketed", "o_orderkey", n_buckets,
+                       path=os.path.join(base, "orders_bucketed"))
+        return spark, base
+
+    _BUCKETED_CACHE.get(spark, [li, orders], n_buckets, write)
+    return spark.table("li_bucketed"), spark.table("orders_bucketed")

@@ -18,3 +18,25 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def memo_pins(spark):
+    """A function returning the RDD ids that the session's memo entries
+    pin now (session.Memo, the only session cache)."""
+    from test_flink_spark.plans import advanced, llm_data
+    from test_flink_spark.session import Memo
+    from test_flink_spark.sources import bucketed
+
+    memos = [
+        v for m in (llm_data, advanced, bucketed) for v in vars(m).values()
+        if isinstance(v, Memo)
+    ]
+
+    def now() -> set:
+        return {
+            m._pin[1][1] for m in memos
+            if m._pin and m._pin[1][0] is spark.sparkContext
+        }
+
+    return now

@@ -458,7 +458,8 @@ def test_duplicate_clusters_rejects_non_numeric_id(spark):
 
 def test_shared_clusters_memoized_per_session_and_input(spark):
     """The curation queries and dedup_clusters must reuse ONE checkpointed
-    propagation result per (application, sf_dir, threshold)."""
+    propagation result per (application, input files, threshold); the
+    memo holds one entry, so another threshold replaces it."""
     from test_flink_spark.plans import llm_data
 
     llm_data.release_pinned_cache(llm_data._CLUSTERS_CACHE)
@@ -467,6 +468,7 @@ def test_shared_clusters_memoized_per_session_and_input(spark):
     assert a is b
     c = llm_data._shared_clusters(spark, SF, threshold=0.7)
     assert c is not a
+    assert llm_data._shared_clusters(spark, SF, threshold=0.5) is not a
     llm_data.release_pinned_cache(llm_data._CLUSTERS_CACHE)
 
 

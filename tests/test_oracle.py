@@ -60,12 +60,8 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     assert "OK    multimodal_image_phash" in run.stdout
 
 
-def test_oracle_run_leaves_only_cache_pins(spark, pins_before):
+def test_oracle_run_leaves_only_cache_pins(spark, pins_before, memo_pins):
     """Each check builds its query inside a pins() scope, so after the
-    whole registry ran, every pin it left is a registered session-cache
-    entry (those are shared across queries and released only by
-    release_pinned_cache)."""
-    from test_flink_spark.session import _CACHED
-
-    cached = {rid for sc, rid in _CACHED if sc is spark.sparkContext}
-    assert _live_pins(spark) - pins_before - cached == set()
+    whole registry ran, every pin it left is a session memo entry (shared
+    across queries; a new input or release_pinned_cache releases it)."""
+    assert _live_pins(spark) - pins_before - memo_pins() == set()
