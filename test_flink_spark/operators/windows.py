@@ -73,112 +73,15 @@ def sliding_count(
     size: str = "1 hour",
     slide: str = "5 minutes",
     count_as: str = "cnt",
-    strategy: str = "direct",
 ) -> DataFrame:
     """WIN2+A1+A3: count per key per sliding window.
 
     Replica of the HotItemAnalysis aggregation (HotItemAnalysis.java:104-106):
-    keyBy(itemId) → 1 h / 5 min sliding → count.
-
-    ``strategy``:
-    - ``direct``  (default): native sliding ``window()`` — one shuffle;
-      map-side partial aggregation bounds shuffle volume to distinct
-      (key, window) groups.
-    - ``two_level``: tumbling count per slide bucket FIRST, then each bucket
-      count expands to the size/slide windows containing it and is summed.
-      Identical results (a sliding count is the sum of its slide-bucket
-      counts); costs a second shuffle.
-    - ``auto``: measure, don't guess — one narrow approx-count-distinct scan
-      estimates the direct plan's aggregation-hash cardinality
-      (distinct (key, bucket) × fan-out) and routes on it.
-
-    What actually separates the strategies (measured local[32], 2M events,
-    40 buckets, fan-out 12): the winner is decided by the SIZE OF THE
-    MAP-SIDE HASH TABLE, not by events-per-bucket density —
-
-        keys×buckets=2M  (hash entries 24M): direct 5.05 s  two_level 4.07 s
-        keys×buckets=200k (entries 2.4M):    direct 0.65 s  two_level 1.18 s
-        keys×buckets=20k  (entries 240k):    direct 0.52 s  two_level 0.60 s
-
-      With many distinct groups, direct's 12× pre-agg fan-out hammers a
-      hash table that no longer fits cache (and eventually spills) — the
-      two-level form updates a 12× smaller table and only then fans out
-      collapsed counts.  With few groups both tables are cache-resident
-      and two_level just pays its extra exchange.  (This CORRECTS an
-      earlier note that keyed density was the decision variable: the r1
-      measurement conflated low density with low cardinality.)
-    Streaming always uses ``direct`` (chaining two stateful aggs is
-    restricted in Structured Streaming).
+    keyBy(itemId) → 1 h / 5 min sliding → count.  Native sliding
+    ``window()``: one shuffle; map-side partial aggregation bounds shuffle
+    volume to distinct (key, window) groups.
     """
-    if df.isStreaming or strategy == "direct":
-        return windowed_agg(df, ts_col, keys, [F.count(F.lit(1)).alias(count_as)], size, slide)
-
-    size_ms = _interval_ms(df, size)
-    slide_ms = _interval_ms(df, slide)
-    if size_ms % slide_ms != 0:
-        return windowed_agg(df, ts_col, keys, [F.count(F.lit(1)).alias(count_as)], size, slide)
-    n_windows = size_ms // slide_ms
-
-    if strategy == "auto":
-        strategy = choose_sliding_strategy(df, ts_col, keys, slide_ms, n_windows)
-    if strategy == "direct":
-        return windowed_agg(df, ts_col, keys, [F.count(F.lit(1)).alias(count_as)], size, slide)
-
-    bucket = (F.unix_millis(F.col(ts_col).cast("timestamp")) / slide_ms).cast("long")
-    partial = df.groupBy(*[F.col(k) for k in keys], bucket.alias("__bucket")).agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    ends = F.transform(
-        F.sequence(F.lit(1), F.lit(n_windows)),
-        lambda j: (F.col("__bucket") + j) * slide_ms,
-    )
-    expanded = partial.select(
-        *[F.col(k) for k in keys], F.explode(ends).alias("window_end"), F.col("__c")
-    )
-    return expanded.groupBy(*[F.col(k) for k in keys], F.col("window_end")).agg(
-        F.sum("__c").alias(count_as)
-    )
-
-
-# Direct sliding agg hash entries (distinct groups × fan-out) above which
-# the two-level strategy wins — geometric midpoint of the measured 2.4M
-# (direct wins) and 24M (two_level wins) points in the sliding_count table.
-AUTO_HASH_ENTRIES_CUTOFF = 8_000_000
-
-
-def choose_sliding_strategy(
-    df: DataFrame,
-    ts_col: str,
-    keys: Sequence[str],
-    slide_ms: int,
-    n_windows: int,
-    cutoff: int = AUTO_HASH_ENTRIES_CUTOFF,
-) -> str:
-    """Route direct-vs-two_level from data, not folklore: estimate distinct
-    (key, slide-bucket) groups with one approx_count_distinct scan (narrow
-    projection, partial HLL merge — no shuffle of data rows) and compare the
-    implied direct-plan hash cardinality (groups × fan-out) to the measured
-    cutoff.  EAGER: runs that one estimation job when called."""
-    bucket = (F.unix_millis(F.col(ts_col).cast("timestamp")) / slide_ms).cast("long")
-    est = df.select(
-        F.approx_count_distinct(F.struct(*[F.col(k) for k in keys], bucket), rsd=0.05)
-    ).first()[0]
-    return "two_level" if est * n_windows > cutoff else "direct"
-
-
-def _interval_ms(df: DataFrame, interval: str) -> int:
-    """Resolve a Spark interval string to milliseconds via timestamp
-    arithmetic (epoch + interval), constant-folded on the driver — no data
-    scan.  NOTE: casting a day-time interval to long yields the value in
-    the interval's OWN leading unit ('1 hour' → 1), which silently broke an
-    earlier version of this function; epoch addition is unit-exact."""
-    row = df.sparkSession.range(1).select(
-        F.unix_millis(F.expr(f"timestamp_millis(0) + INTERVAL {interval}")).alias("ms")
-    ).first()
-    ms = int(row["ms"])
-    if ms <= 0:
-        raise ValueError(f"non-positive interval: {interval!r}")
-    return ms
+    return windowed_agg(df, ts_col, keys, [F.count(F.lit(1)).alias(count_as)], size, slide)
 
 
 def session_count(

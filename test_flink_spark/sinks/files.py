@@ -1,9 +1,22 @@
-"""Batch file sinks: parquet/csv/json writers with the partitioning knobs
-that matter at 100 TB (partitionBy for pruning, maxRecordsPerFile against
-giant files, explicit compression)."""
+"""File sinks: batch parquet/csv/json/orc writers, and the one commit
+protocol of every ``foreachBatch`` file writer.
+
+A commit root holds ``data/batch-N/`` and a ``_committed/batch-N`` marker
+per micro-batch:
+
+1. A batch's data and sidecars are written under a name no reader lists,
+   renamed into place, and only then marked.  Readers see marked batches
+   only.
+2. A marked batch is never rewritten.  Its replay writes nothing, but it
+   still executes its input.
+3. The fold for batch N reads only marked batches below N.
+
+docs/DESIGN_DECISIONS.md, "Commit protocol", says why and which test
+covers which crash point."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from collections.abc import Sequence
@@ -90,37 +103,34 @@ def start_parquet_matview(
     checkpoint: str,
     query_name: str = "matview",
 ):
-    """Streaming materialized view over parquet: maintain a keyed snapshot
-    table that always holds the LATEST aggregate row per key — the
-    file-based form of the JDBC staged upsert (same merge semantics, no
-    database).  ``df`` must be an UPDATE-mode streaming aggregation whose
-    grouping keys are ``key_cols``; every micro-batch carries the keys
-    whose aggregates changed, and the view converges to exactly the batch
-    aggregation over all data seen (pinned by test).
+    """Streaming materialized view over parquet: ``path`` is one parquet
+    dataset holding the LATEST aggregate row per key, the file form of
+    the JDBC staged upsert.  ``df`` must be an UPDATE-mode streaming
+    aggregation whose grouping keys are ``key_cols``; every micro-batch
+    carries the keys whose aggregates changed, and the view converges to
+    the batch aggregation over all data seen (pinned by test).
 
-    Per batch: anti-join the current snapshot against the batch's keys,
-    union the fresh rows, write to a temp dir, swap.  The swap is the
-    local-FS stand-in for a transactional table-format commit (Delta/
-    Iceberg snapshot swap); merge idempotence makes micro-batch REPLAY
-    safe (at-least-once delivery + idempotent upsert = effectively-once
-    view contents), which is the actual exactly-once story of every
-    foreachBatch sink.  Scale: the exchange is one join keyed on the view
-    key per batch — the snapshot is aggregate-sized, never event-sized."""
-    import os
+    Batch N anti-joins the view of the newest marked batch below N
+    against its keys, unions the fresh rows and commits the result to
+    ``{path}.__batches``.  ``path`` is then a symbolic link to the newest
+    marked view, swapped by one rename; the view before it is kept for a
+    reader that resolved the old link, older ones are removed."""
+    root = f"{path}.__batches"
 
     def _apply(batch_df, batch_id):
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates(list(key_cols))
-        if os.path.exists(path):
-            cur = spark.read.parquet(path)
-            merged = cur.join(
-                batch.select(*key_cols), list(key_cols), "left_anti"
-            ).unionByName(batch)
+        prior, _ = fold_target(root, batch_id)
+        if prior is not None:
+            merged = (
+                read_batch(spark, root, prior)
+                .join(batch.select(*key_cols), list(key_cols), "left_anti")
+                .unionByName(batch)
+            )
         else:
             merged = batch
-        tmp = f"{path}.__tmp_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_publish(tmp, path)
+        commit(merged, root, batch_id)
+        _publish(path, root)
 
     return (
         df.writeStream.outputMode("update")
@@ -129,6 +139,21 @@ def start_parquet_matview(
         .foreachBatch(_apply)
         .start()
     )
+
+
+def _publish(path: str, root: str) -> None:
+    """Point the link ``path`` at the newest marked batch of ``root`` and
+    remove the marked batches before the one it replaced."""
+    ids = marked(root)
+    link = f"{path}.__link"
+    if os.path.lexists(link):  # debris from a crashed publish
+        os.remove(link)
+    target = batch_dir(root, ids[-1])
+    os.symlink(os.path.relpath(target, os.path.dirname(os.path.abspath(path))), link)
+    os.replace(link, path)
+    for b in ids[:-2]:
+        os.remove(_marker(root, b))
+        shutil.rmtree(batch_dir(root, b))
 
 
 def compact_parquet(
@@ -147,9 +172,9 @@ def compact_parquet(
     and every downstream scan then pays one task + one open per file
     (plus NameNode/listing pressure).  Rewrite is ONE round-robin
     repartition to the target file count — no sort, no skew sensitivity
-    — then the same write-and-swap used by the streaming matview (the
-    local-FS stand-in for a table-format transactional rewrite; on
-    Delta/Iceberg this is OPTIMIZE/rewriteDataFiles).  Readers racing
+    — then a write-and-swap (the local-FS stand-in for a table-format
+    transactional rewrite; on Delta/Iceberg this is
+    OPTIMIZE/rewriteDataFiles).  Readers racing
     the swap re-list on retry; the two-rename swap (_swap_publish)
     bounds the not-found window to two rename() metadata ops — see its
     docstring for the honest non-transactional caveat.
@@ -214,7 +239,7 @@ def apply_deletes(
 ) -> tuple[int, int]:
     """Propagate deletions into a parquet dataset: rewrite ``path`` minus
     every row whose ``key_cols`` tuple appears in ``tombstones``, with the
-    compaction/matview write-and-swap.  Returns (rows_before, rows_after).
+    compaction's write-and-swap.  Returns (rows_before, rows_after).
 
     The GDPR/right-to-be-forgotten primitive: deletion arrives as a keyed
     tombstone list, the dataset is rewritten with ONE left-anti hash join
@@ -244,62 +269,109 @@ def apply_deletes(
     return rows_before, rows_after
 
 
+def batch_dir(root: str, batch_id: int) -> str:
+    """Where batch ``batch_id`` of the commit root ``root`` lives."""
+    return os.path.join(root, "data", f"batch-{batch_id}")
+
+
+def _marker(root: str, batch_id: int) -> str:
+    return os.path.join(root, "_committed", f"batch-{batch_id}")
+
+
+def marked(root: str, before: int | None = None) -> list[int]:
+    """Marked batch ids of ``root`` in ascending order, only those below
+    ``before`` when it is given."""
+    try:
+        names = os.listdir(os.path.join(root, "_committed"))
+    except FileNotFoundError:
+        return []
+    ids = sorted(int(n.split("-", 1)[1]) for n in names)
+    return [b for b in ids if before is None or b < before]
+
+
+def latest(root: str, before: int | None = None) -> int | None:
+    """The newest marked batch of ``root`` (below ``before``), or None."""
+    ids = marked(root, before)
+    return ids[-1] if ids else None
+
+
+def fold_target(root: str, batch_id: int | None) -> tuple[int | None, int]:
+    """``(prior, batch)`` for a fold that commits to ``root``: the batch
+    it writes and the newest marked batch below it, the only one it may
+    read (rule 3).  A stream's call writes its own batch id; a direct
+    call (backfill, or the retry of one that crashed) writes one past the
+    newest marked batch."""
+    prior = latest(root, before=batch_id)
+    if batch_id is None:
+        batch_id = 0 if prior is None else prior + 1
+    return prior, batch_id
+
+
+def commit(
+    df: DataFrame,
+    root: str,
+    batch_id: int,
+    sidecars: dict[str, dict] | None = None,
+) -> None:
+    """Commit ``df`` (and JSON ``sidecars``) as batch ``batch_id`` of
+    ``root``.  When that batch is already marked, nothing is written, but
+    ``df`` still runs, into Spark's ``noop`` sink: a stateful upstream
+    (the hot-items window count) commits its state store only when every
+    partition executes, and a skipped batch fails with
+    STATE_STORE_COMMIT_VALIDATION_FAILED."""
+    marker = _marker(root, batch_id)
+    if os.path.exists(marker):
+        df.write.format("noop").mode("overwrite").save()
+        return
+    final = batch_dir(root, batch_id)
+    tmp = final + ".__tmp"
+    df.write.mode("overwrite").parquet(tmp)
+    for name, payload in (sidecars or {}).items():
+        with open(os.path.join(tmp, name), "w") as fh:
+            json.dump(payload, fh)
+    if os.path.exists(final):  # crashed between rename and marker
+        shutil.rmtree(final)
+    os.rename(tmp, final)
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(marker, "w"):
+        pass
+
+
+def read_batch(spark, root: str, batch_id: int | None, schema: str = "") -> DataFrame:
+    """Batch ``batch_id`` of ``root``; for None, an empty ``schema`` frame."""
+    if batch_id is None:
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(batch_dir(root, batch_id))
+
+
+def read_marked(spark, root: str, before: int | None = None) -> DataFrame | None:
+    """Every marked batch of ``root`` (below ``before``) as one DataFrame,
+    or None when there is none."""
+    dirs = [batch_dir(root, b) for b in marked(root, before)]
+    return spark.read.parquet(*dirs) if dirs else None
+
+
+def read_sidecar(root: str, batch_id: int, name: str) -> dict:
+    with open(os.path.join(batch_dir(root, batch_id), name)) as fh:
+        return json.load(fh)
+
+
 def idempotent_batch_sink(path: str):
-    """Exactly-once ``foreachBatch`` parquet sink: effectively-once file
-    output under the at-least-once replay foreachBatch delivers after a
-    crash (the Structured Streaming docs' own caveat — batchId is the
-    documented dedup key).
-
-    Layout: ``path/data/batch-<id>/`` holds each micro-batch's parquet;
-    ``path/_committed/batch-<id>`` is a marker created ONLY after the
-    data directory is complete and atomically renamed into place.
-    A replayed (batchId, data) is detected by its marker and not written
-    again (it is still executed, into Spark's ``noop`` sink), so re-running
-    a failed batch never duplicates rows; a batch that
-    crashed mid-write left only an orphan tmp dir (never read — readers
-    go through ``read_committed``).  Write order is the crash-safety
-    proof: data rename FIRST, marker create SECOND — every marker
-    therefore points at complete data, and incomplete data has no
-    marker.
-
-    At scale this is the manifest-commit pattern every table format
-    (Iceberg/Delta/Hudi) formalizes; the per-batch directory keeps the
-    sink append-only so no reader ever observes a partial file.
-    """
-    data_root = os.path.join(path, "data")
-    commit_root = os.path.join(path, "_committed")
-    os.makedirs(data_root, exist_ok=True)
-    os.makedirs(commit_root, exist_ok=True)
+    """Exactly-once ``foreachBatch`` parquet sink: each micro-batch is
+    committed as a batch of the root ``path``.  Read it with
+    :func:`read_committed`."""
+    os.makedirs(os.path.join(path, "data"), exist_ok=True)
+    os.makedirs(os.path.join(path, "_committed"), exist_ok=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(commit_root, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            # replay of a committed batch: write nothing, but still run it.
-            # A stateful upstream (the hot-items window count) commits its
-            # state store only when every partition executes; a skipped
-            # batch fails with STATE_STORE_COMMIT_VALIDATION_FAILED.
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
-        final = os.path.join(data_root, f"batch-{batch_id}")
-        tmp = final + ".__tmp"
-        batch_df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(final):  # crashed between rename and marker
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-        with open(marker, "w") as fh:
-            fh.write("")
+        commit(batch_df, path, batch_id)
 
     return sink
 
 
 def read_committed(spark, path: str) -> DataFrame:
-    """Read ONLY committed batches of an ``idempotent_batch_sink`` dir —
-    orphaned tmp/uncommitted data is invisible, so readers always see an
-    exactly-once view."""
-    commit_root = os.path.join(path, "_committed")
-    data_root = os.path.join(path, "data")
-    batches = sorted(os.listdir(commit_root)) if os.path.isdir(commit_root) else []
-    dirs = [os.path.join(data_root, b) for b in batches]
-    if not dirs:
+    """Every marked batch of an ``idempotent_batch_sink`` root."""
+    df = read_marked(spark, path)
+    if df is None:
         raise ValueError(f"no committed batches under {path}")
-    return spark.read.parquet(*dirs)
+    return df

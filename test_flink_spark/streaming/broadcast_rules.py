@@ -13,23 +13,22 @@ foreachBatch queries sharing a versioned rules snapshot on disk:
 
 1. **Rules fold** (:func:`rules_ingest_batch`) — each rules micro-batch
    (rule_id, event_type, min_value_cents, enabled, seq) is upserted into
-   ``rules_v{N}/`` by last-writer-wins per rule_id (ordered by the
-   monotonic ``seq``, rule updates and disables both being ordinary
-   rows).  A batch OVERWRITES its own batch-keyed directory and reads
-   only snapshots with version < its own — the same retry-idempotence
-   discipline as cluster_ingest/sketch_ingest.
+   the snapshot committed as batch N of ``{state_dir}/rules`` by
+   last-writer-wins per rule_id (ordered by the monotonic ``seq``, rule
+   updates and disables both being ordinary rows), through
+   sinks/files.py's commit protocol.
 2. **Event evaluation** (:func:`apply_rules_batch`) — each event
    micro-batch equi-joins the LATEST rules snapshot on event_type,
-   keeps rows meeting the rule's threshold, and appends verdicts to the
-   output table.  The join side is the rules snapshot: tiny by
+   keeps rows meeting the rule's threshold, and commits its verdicts as
+   batch N of the output root.  The join side is the rules snapshot: tiny by
    construction (it is the broadcast state), so Spark's planner
    broadcasts it — exactly the data flow Flink implements with
    broadcast state, with the snapshot version recorded per verdict so
    the processing-time semantics are auditable after the fact.
 
 Semantics note (pinned by the differential test): like Flink, a rule
-update is NOT retroactive — events evaluated under rules_v0 keep their
-v0 verdicts when rules_v1 lands.  A batch recomputation over the union
+update is NOT retroactive — events evaluated under rules snapshot 0 keep
+their verdicts when snapshot 1 lands.  A batch recomputation over the union
 would re-verdict everything under the FINAL rules; the twin test pins
 both (per-batch verdicts replay under the per-batch snapshot, and the
 final snapshot equals the last-writer-wins fold of all rule rows).
@@ -50,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, version_of, write_snapshot
+from ..sinks.files import commit, fold_target, latest, read_batch
 
 _RULES_SCHEMA = (
     "rule_id LONG, event_type STRING, min_value_cents LONG, enabled BOOLEAN,"
@@ -66,10 +65,9 @@ def rules_ingest_batch(
     row broken by larger min_value_cents then enabled=false — a total
     order so retries are deterministic).  Returns the new snapshot."""
     spark = batch_df.sparkSession
-    prior_path, prior = read_latest(spark, state_dir, "rules", before=batch_id)
-    version = resolve_version(prior_path, batch_id)
-    if prior is None:
-        prior = spark.createDataFrame([], _RULES_SCHEMA)
+    root = os.path.join(state_dir, "rules")
+    prior_id, version = fold_target(root, batch_id)
+    prior = read_batch(spark, root, prior_id, _RULES_SCHEMA)
     from pyspark.sql import Window
 
     w = Window.partitionBy("rule_id").orderBy(
@@ -83,7 +81,7 @@ def rules_ingest_batch(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    write_snapshot(merged, state_dir, "rules", version)
+    commit(merged, root, version)
     return merged
 
 
@@ -92,26 +90,20 @@ def apply_rules_batch(
 ) -> None:
     """Evaluate ONE event micro-batch against the LATEST rules snapshot
     (processing-time semantics: whatever is in 'broadcast state' now) and
-    append verdicts ``(event_id, rule_id, rules_version)`` to out_dir.
-    Events with no enabled matching rule produce no row — the Flink
-    side-output-less variant.
+    commit verdicts ``(event_id, rule_id, rules_version)`` as batch
+    ``batch_id`` of ``out_dir``.  Events with no enabled matching rule
+    produce no row — the Flink side-output-less variant.
 
-    Runs concurrently with the rules fold.  latest_snapshot only returns
-    committed versions, and write_snapshot publishes by rename (never
-    deleting a committed dir in place), so a mid-write or mid-retry
-    rules_v{N} is invisible and this batch evaluates against the previous
-    committed snapshot — the "whatever is in broadcast state right now"
-    semantics Flink gives.  One residual (narrow) race remains: between a
-    retry's two renames the resolved path is briefly absent, so the read
-    re-resolves once on failure rather than claiming atomicity — since
-    r12 that guard lives in snapshots.read_latest and EVERY snapshot
-    consumer rides it (r11 ADVICE), not just this one."""
+    Runs concurrently with the rules fold.  Only marked snapshots are
+    read, and a marked snapshot is never rewritten, so this batch
+    evaluates against the newest committed snapshot — the "whatever is
+    in broadcast state right now" semantics Flink gives."""
     spark = events_df.sparkSession
-    path, rules_all = read_latest(spark, state_dir, "rules")
-    if path is None:
+    root = os.path.join(state_dir, "rules")
+    version = latest(root)
+    if version is None:
         return
-    rules_all = pin(rules_all)
-    version = version_of(path)
+    rules_all = pin(read_batch(spark, root, version))
     rules = rules_all.filter(F.col("enabled"))
     flagged = (
         events_df.join(rules, "event_type")
@@ -124,9 +116,7 @@ def apply_rules_batch(
             F.lit(version).cast("long").alias("rules_version"),
         )
     )
-    flagged.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"verdicts_b{batch_id}")
-    )
+    commit(flagged, out_dir, batch_id)
 
 
 def streaming_broadcast_rules(

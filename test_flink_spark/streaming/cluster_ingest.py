@@ -1,17 +1,15 @@
 """Streaming incremental near-dup CLUSTERING — per-micro-batch cluster
-label maintenance on ingest (r7 verdict item 5).
+label maintenance on ingest.
 
 ``operators/dedup.py::incremental_cluster_merge`` proves one shard can be
 folded into existing cluster labels on the condensed graph (O(shard +
 touched clusters), corpus text never re-read).  This module is that
 operator's streaming composition, the daily-ingest shape run continuously:
 
-1. **Persisted state** — two tables under ``state_dir``:
-   ``shingles/batch=N/`` (append-only per-batch shingle-index shards,
-   partition-discovered on read) and ``labels_vN/`` (the (doc_id,
-   cluster_id) snapshot after batch N).  Both writes are idempotent under
-   foreachBatch retries: each batch OVERWRITES its own batch-keyed
-   directory, never appends to a shared one.
+1. **Persisted state** — two commit roots under ``state_dir``
+   (sinks/files.py's commit protocol): ``shingles`` (one shingle-index
+   shard per batch) and ``labels`` (the (doc_id, cluster_id) snapshot
+   after batch N).  Batch N commits its shard, then its labels.
 2. **Per-batch edge derivation** — arriving docs' shingles equi-join the
    UNION index (prior shards + this batch) on the 60-bit shingle hash,
    exactly ``ngram_jaccard_pairs``'s inverted-index shape restricted to
@@ -49,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, write_snapshot
+from ..sinks.files import commit, fold_target, read_batch, read_marked
 
 _LABELS_SCHEMA = "doc_id LONG, cluster_id LONG"
 _SHINGLE_SCHEMA = "doc_id LONG, h LONG"
@@ -86,24 +84,13 @@ def cluster_ingest_batch(
     from ..operators.dedup import incremental_cluster_merge, shingle_hashes
 
     spark = batch_df.sparkSession
-    sh_dir = os.path.join(state_dir, "shingles")
-    # resolve the version BEFORE reading state so the shard filter below
-    # can exclude an ORPHAN shard (this version's shingles written by a
-    # call that crashed before its labels snapshot): labels presence is
-    # the commit point, so prior state is exactly shards < version
-    prior_path, prior = read_latest(spark, state_dir, "labels", before=batch_id)
-    version = resolve_version(prior_path, batch_id)
-    if prior_path is not None:
-        prior_sh = (
-            spark.read.parquet(sh_dir)
-            .filter(F.col("batch") < F.lit(version))
-            .select("doc_id", "h")
-        )
-    else:
-        prior = spark.createDataFrame([], _LABELS_SCHEMA)
+    sh_root = os.path.join(state_dir, "shingles")
+    labels_root = os.path.join(state_dir, "labels")
+    prior_id, version = fold_target(labels_root, batch_id)
+    prior = read_batch(spark, labels_root, prior_id, _LABELS_SCHEMA)
+    prior_sh = read_marked(spark, sh_root, before=version)
+    if prior_sh is None:
         prior_sh = spark.createDataFrame([], _SHINGLE_SCHEMA)
-    # cut lineage before the state overwrite below: the merge must not
-    # lazily re-read directories this batch is about to rewrite
     new_sh = pin(shingle_hashes(batch_df, "text", "doc_id", n))
     union_sh = prior_sh.unionByName(new_sh)
     if max_doc_freq is not None:
@@ -159,16 +146,10 @@ def cluster_ingest_batch(
         .distinct()
     )
     merged = pin(incremental_cluster_merge(prior, edges, all_nodes))
-    # shingles FIRST, labels second: the labels snapshot is the commit
-    # point, so its presence implies the shard exists.  A crash between
-    # the two leaves only an orphan shard, which the version-derived
-    # filter above ignores and the retry overwrites idempotently; the
-    # old order (labels first) left labels AHEAD of shingles and the
-    # next backfill call permanently skipped the lost shard.
-    new_sh.write.mode("overwrite").parquet(
-        os.path.join(sh_dir, f"batch={version}")
-    )
-    write_snapshot(merged, state_dir, "labels", version)
+    # shard first, labels second: a direct call resumes at the batch
+    # after the newest labels, so labels must never run ahead of a shard
+    commit(new_sh, sh_root, version)
+    commit(merged, labels_root, version)
     return merged
 
 
@@ -182,9 +163,9 @@ def streaming_cluster_ingest(
     max_doc_freq: int | None = None,
 ) -> StreamingQuery:
     """Run :func:`cluster_ingest_batch` over a STREAM of ``(doc_id,
-    text)`` rows via ``foreachBatch`` — after every micro-batch,
-    ``{state_dir}/labels_v{batch_id}`` holds cluster labels identical to
-    the batch connected-components over every document seen so far."""
+    text)`` rows via ``foreachBatch`` — after every micro-batch, batch
+    ``batch_id`` of ``{state_dir}/labels`` holds cluster labels identical
+    to the batch connected-components over every document seen so far."""
     return (
         docs.writeStream.foreachBatch(
             scoped(

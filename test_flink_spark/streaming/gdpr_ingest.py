@@ -1,5 +1,5 @@
 """Streaming incremental GDPR erasure-audit — the governance family's
-streaming twin (r10 verdict item 6; fold shape proven by stats_ingest).
+streaming twin (fold shape proven by stats_ingest).
 
 ``gdpr_erasure_audit`` (plans/advanced.py) prices the blast radius of
 erasing the 1/32 md5 customer cohort as a BATCH scan: rows to delete and
@@ -14,9 +14,9 @@ continuously over a unified CDC stream of row-arrival records
       lineitem: k1 = l_orderkey
       events:   k1 = user_id
 
-folded per micro-batch into ONE versioned snapshot (the shared
-streaming/snapshots.py discipline: batch-keyed overwrite, read-before,
-stage-then-rename commit), a single uniformly-foldable table:
+folded per micro-batch into ONE snapshot, committed as batch N of
+``{state_dir}/gdpr`` (sinks/files.py's commit protocol), a single
+uniformly-foldable table:
 
     kind STRING, table_name STRING, k LONG, v LONG
       counts:  per-(table, subject) cohort row counts   (k=subject, v=n)
@@ -37,8 +37,8 @@ Design notes, scale-first:
   with explicit, bounded state, Flink's keyed-state enrichment
   re-expressed as a snapshot fold).  Without the ``seen`` tombstones,
   the ~31/32 of lineitems referencing non-cohort orders would re-queue
-  into pending on every batch forever (r11 ADVICE): pending would scale
-  with total ingested lineitems, not with in-flight orphans.
+  into pending on every batch forever: pending would scale with total
+  ingested lineitems, not with in-flight orphans.
 * State is O(cohort + orderkeys seen): counts keys are cohort subjects
   x 4 tables, omap is cohort orders, ``seen`` is a key-only set over
   non-cohort orders (the price of EXACT orphan semantics under
@@ -73,12 +73,14 @@ surface the LLM-data pipeline needs.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, write_snapshot
+from ..sinks.files import commit, fold_target, latest, read_batch
 
 _GDPR_MOD = 32  # must match plans/advanced.py's erasure cohort
 
@@ -113,10 +115,9 @@ def gdpr_ingest_batch(
     """Fold ONE micro-batch of CDC row-arrival records into the audit
     snapshot.  Returns the new snapshot DataFrame."""
     spark = batch_df.sparkSession
-    prior_path, prior = read_latest(spark, state_dir, _PREFIX, before=batch_id)
-    version = resolve_version(prior_path, batch_id)
-    if prior is None:
-        prior = spark.createDataFrame([], _STATE_SCHEMA)
+    root = os.path.join(state_dir, _PREFIX)
+    prior_id, version = fold_target(root, batch_id)
+    prior = read_batch(spark, root, prior_id, _STATE_SCHEMA)
     batch_df = pin(batch_df)  # read once, reuse 4x
 
     # --- stateless cohort legs -------------------------------------------
@@ -142,7 +143,7 @@ def gdpr_ingest_batch(
         .unionByName(omap_new)
         .dropDuplicates(["k"])  # an orderkey maps to one custkey
     )
-    # seen tombstones for NON-cohort orders (r11 ADVICE): a lineitem whose
+    # seen tombstones for NON-cohort orders: a lineitem whose
     # order is known non-cohort is discarded, not parked — without this,
     # pending re-queues ~31/32 of all lineitems every batch forever.
     # Key-only set: v is a constant 0.
@@ -215,20 +216,22 @@ def gdpr_ingest_batch(
         .unionByName(seen_all)
         .unionByName(pending_new)
     )
-    write_snapshot(snapshot, state_dir, _PREFIX, version)
+    commit(snapshot, root, version)
     return snapshot
 
 
 def audit(spark, state_dir: str) -> DataFrame:
     """Read-side: the blast-radius audit over everything ingested so far —
     same output columns as plans.advanced.gdpr_erasure_audit."""
-    path, snap = read_latest(spark, state_dir, _PREFIX)
-    if path is None:
+    root = os.path.join(state_dir, _PREFIX)
+    b = latest(root)
+    if b is None:
         return spark.createDataFrame(
             [], "table_name STRING, n_rows LONG, n_subjects LONG"
         )
     return (
-        snap.filter(F.col("kind") == "counts")
+        read_batch(spark, root, b)
+        .filter(F.col("kind") == "counts")
         .groupBy("table_name")
         .agg(
             F.sum("v").cast("long").alias("n_rows"),

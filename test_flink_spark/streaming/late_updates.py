@@ -15,9 +15,9 @@ versioned-accumulator shape (cluster_ingest / verdict_ingest precedent):
    allowed to create or UPDATE a window) vs the ``rest`` sink (beyond
    allowed lateness — Flink's late side output, captured not dropped).
 3. Allowed rows fold into the per-window count table by += upsert,
-   written as a batch-keyed snapshot ``windows_v{N}`` (overwrite own
-   version; retries idempotent because the fold reads only versions
-   < batch_id).
+   committed with its watermark sidecar as batch N of
+   ``{state_dir}/windows``; the late rows are batch N of ``late_dir``
+   (sinks/files.py's commit protocol).
 
 Differential (pinned in tests/test_streaming.py): after any batch
 sequence, the snapshot equals the batch tumbling-window counts over
@@ -38,20 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import pin, scoped
-from .snapshots import (
-    read_latest,
-    read_sidecar,
-    resolve_version,
-    write_snapshot,
-)
+from ..sinks.files import commit, fold_target, read_batch, read_sidecar
 
 _WIN_SCHEMA = "event_type STRING, win_start LONG, cnt LONG"
-
-# the watermark sidecar is part of the commit: a snapshot without it
-# (crash between parquet commit and sidecar write) is treated as
-# nonexistent, so the retry resolves the previous version and repairs
-# the orphan by overwrite instead of wedging on a missing file
-_SIDECARS = ("_WATERMARK.json",)
 
 
 def late_update_batch(
@@ -67,15 +56,14 @@ def late_update_batch(
     semantics; rows beyond the bound are written to ``late_dir`` (the
     side output) and excluded from the fold.  Returns the new snapshot."""
     spark = batch_df.sparkSession
-    prior_path, prior = read_latest(
-        spark, state_dir, "windows", before=batch_id, sidecars=_SIDECARS
+    root = os.path.join(state_dir, "windows")
+    prior_id, version = fold_target(root, batch_id)
+    prior = read_batch(spark, root, prior_id, _WIN_SCHEMA)
+    prior_wm = (
+        read_sidecar(root, prior_id, "_WATERMARK.json")["watermark_ms"]
+        if prior_id is not None
+        else -(1 << 62)
     )
-    version = resolve_version(prior_path, batch_id)
-    if prior_path is not None:
-        prior_wm = read_sidecar(prior_path, "_WATERMARK.json")["watermark_ms"]
-    else:
-        prior = spark.createDataFrame([], _WIN_SCHEMA)
-        prior_wm = -(1 << 62)
     batch = pin(batch_df)
     batch_max = batch.agg(F.max("ts_ms")).collect()[0][0]
     watermark = max(prior_wm, batch_max if batch_max is not None else prior_wm)
@@ -93,9 +81,7 @@ def late_update_batch(
     allowed = tagged.filter(F.col("win_start") >= F.lit(cutoff))
     late = tagged.filter(F.col("win_start") < F.lit(cutoff))
     if late_dir is not None:
-        late.write.mode("overwrite").parquet(
-            os.path.join(late_dir, f"b{version}")
-        )
+        commit(late, late_dir, version)
     delta = allowed.groupBy("event_type", "win_start").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
@@ -104,13 +90,7 @@ def late_update_batch(
         .groupBy("event_type", "win_start")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    write_snapshot(
-        merged,
-        state_dir,
-        "windows",
-        version,
-        sidecars={"_WATERMARK.json": {"watermark_ms": watermark}},
-    )
+    commit(merged, root, version, {"_WATERMARK.json": {"watermark_ms": watermark}})
     return merged
 
 

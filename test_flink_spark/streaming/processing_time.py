@@ -1,8 +1,7 @@
 """Processing-time tumbling windows — the Flink TimeCharacteristic the
 reference imports (HotMediaTrack.java:53 pulls the enum whose
 ProcessingTime / IngestionTime members its jobs don't select) and the
-one time dimension the engine's event-time surface left unexposed
-(r9 verdict item 7).
+one time dimension the engine's event-time surface left unexposed.
 
 Flink's processing-time window assigns each element to a window by the
 WALL CLOCK at the moment the operator sees it.  Wall clocks don't
@@ -21,8 +20,8 @@ query (plans/enterprise.py::events_processing_time_tumbling) replays:
   watermarked event-time operators (streaming/watermarks.py).
 
 Per micro-batch the fold adds the batch's per-type counts into the
-``ptwin_v{N}`` snapshot (shared streaming/snapshots.py discipline:
-batch-keyed overwrite, read-before, _SUCCESS-gated visibility).  The
+snapshot committed as batch N of ``{state_dir}/ptwin`` (sinks/files.py's
+commit protocol).  The
 differential test feeds the sf events table in (ts, event_id) arrival
 order at _PT_BATCH rows per trigger and pins the final snapshot equal
 to the batch query's output — the replay/backfill contract.
@@ -30,12 +29,14 @@ to the batch query's output — the replay/backfill contract.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, write_snapshot
+from ..sinks.files import commit, fold_target, read_batch
 
 _PTW_SCHEMA = "win_id LONG, event_type STRING, cnt LONG"
 
@@ -52,10 +53,9 @@ def processing_time_batch(
     is the trigger id, not the row's event time).  Returns the new
     snapshot."""
     spark = batch_df.sparkSession
-    prior_path, prior = read_latest(spark, state_dir, "ptwin", before=batch_id)
-    version = resolve_version(prior_path, batch_id)
-    if prior is None:
-        prior = spark.createDataFrame([], _PTW_SCHEMA)
+    root = os.path.join(state_dir, "ptwin")
+    prior_id, version = fold_target(root, batch_id)
+    prior = read_batch(spark, root, prior_id, _PTW_SCHEMA)
     delta = batch_df.groupBy(F.col(type_col).alias("event_type")).agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     ).select(
@@ -68,7 +68,7 @@ def processing_time_batch(
         .groupBy("win_id", "event_type")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    write_snapshot(merged, state_dir, "ptwin", version)
+    commit(merged, root, version)
     return merged
 
 

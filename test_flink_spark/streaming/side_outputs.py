@@ -18,9 +18,9 @@ element in hand) and routes rows to per-tag parquet sinks:
   actual side-output semantics (an element can be tagged any number of
   times); unmatched rows still fall through to ``rest``.
 
-Writes are per-(tag, batch) directories in overwrite mode, so a
-foreachBatch retry reproduces identical state (the discipline shared
-with cluster_ingest / sketch_ingest / broadcast_rules).
+Each tag is a commit root under the output directory, and batch N of
+each is committed through sinks/files.py's commit protocol, so a
+foreachBatch retry writes nothing twice.
 
 Reference parity: the reference drops non-matching rows on its filters
 (HotItemAnalysis.java:103); this is the §2.10 superset that KEEPS them,
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import pin, scoped
+from ..sinks.files import commit
 
 REST_TAG = "rest"
 
@@ -50,7 +51,7 @@ def split_batch(
 ) -> dict[str, int]:
     """Route ONE micro-batch to per-tag parquet sinks.  ``routes`` maps
     tag -> SQL predicate (evaluated in route-declaration order for
-    ``exclusive`` mode).  Returns {tag: rows written} for observability.
+    ``exclusive`` mode).  Returns {tag: rows routed} for observability.
     The batch is materialized once; each route is a filter over the
     checkpointed result, never a re-read of the source."""
     if mode not in ("exclusive", "multi"):
@@ -66,17 +67,14 @@ def split_batch(
             for _, earlier in preds[:i]:
                 cond = cond & ~F.coalesce(F.expr(earlier), F.lit(False))
         routed = batch.filter(F.coalesce(cond, F.lit(False)))
-        path = os.path.join(out_dir, tag, f"b{batch_id}")
-        routed.write.mode("overwrite").parquet(path)
+        commit(routed, os.path.join(out_dir, tag), batch_id)
         counts[tag] = routed.count()
     none_matched = None
     for _, pred in preds:
         m = F.coalesce(F.expr(pred), F.lit(False))
         none_matched = ~m if none_matched is None else none_matched & ~m
     rest = batch.filter(none_matched if none_matched is not None else F.lit(True))
-    rest.write.mode("overwrite").parquet(
-        os.path.join(out_dir, REST_TAG, f"b{batch_id}")
-    )
+    commit(rest, os.path.join(out_dir, REST_TAG), batch_id)
     counts[REST_TAG] = rest.count()
     return counts
 

@@ -10,13 +10,13 @@ table maintained across micro-batches, which is exactly how a 100 TB
 deployment serves "distinct users per type, so far today" without ever
 re-scanning history:
 
-1. **Persisted state** — one register snapshot ``registers_v{N}/`` per
-   micro-batch under ``state_dir``.  A batch OVERWRITES its own
-   batch-keyed directory (idempotent under foreachBatch retries) and
-   reads the latest snapshot with version < its own, so a retried batch
-   never double-merges itself (max would forgive it anyway — idempotence
-   is the point of HLL — but the version discipline matches the other
-   ingest twins and keeps the crash-recovery story uniform).
+1. **Persisted state** — one register snapshot per micro-batch,
+   committed as batch N of ``{state_dir}/registers`` (sinks/files.py's
+   commit protocol).  The fold for batch N reads the newest committed
+   snapshot below N, so a retried batch never double-merges itself (max
+   would forgive it anyway — idempotence is the point of HLL — but the
+   protocol matches the other ingest twins and keeps the crash-recovery
+   story uniform).
 2. **Per-batch fold** — compute the batch's register table (bounded:
    |groups| x 256 rows) and max-merge with the prior snapshot.  Work per
    batch is O(batch rows) map-side + a bounded-aggregate shuffle.
@@ -36,13 +36,15 @@ analytics — the §2.10 superset path.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import sketch as sk
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, write_snapshot
+from ..sinks.files import commit, fold_target, latest, read_batch
 
 _REG_SCHEMA = "grp STRING, reg LONG, m_rank LONG"
 
@@ -58,22 +60,18 @@ def sketch_ingest_batch(
     returns (and persists) the post-batch register table.  Callable
     directly for batch backfill or through :func:`streaming_sketch_ingest`."""
     spark = batch_df.sparkSession
-    prior_path, prior = read_latest(
-        spark, state_dir, "registers", before=batch_id
-    )
-    version = resolve_version(prior_path, batch_id)
-    if prior is None:
-        prior = spark.createDataFrame([], _REG_SCHEMA)
+    root = os.path.join(state_dir, "registers")
+    prior_id, version = fold_target(root, batch_id)
+    prior = read_batch(spark, root, prior_id, _REG_SCHEMA)
     new_regs = sk.hll_registers(batch_df, value_col, [group_col]).withColumnRenamed(
         group_col, "grp"
     )
-    # cut lineage before overwriting directories this plan read from
     merged = pin(
         prior.unionByName(new_regs)
         .groupBy("grp", "reg")
         .agg(F.max("m_rank").alias("m_rank"))
     )
-    write_snapshot(merged, state_dir, "registers", version)
+    commit(merged, root, version)
     return merged
 
 
@@ -81,9 +79,11 @@ def estimates(spark, state_dir: str, with_rollup: bool = True) -> DataFrame:
     """Fold the LATEST register snapshot through the shared estimator:
     ``(grp, registers_used, hll_est)`` rows, plus an '__all__' rollup row
     max-merged from the per-group sketches (never from the raw values)."""
-    path, regs = read_latest(spark, state_dir, "registers")
-    if path is None:
+    root = os.path.join(state_dir, "registers")
+    b = latest(root)
+    if b is None:
         raise ValueError(f"no register snapshot under {state_dir}")
+    regs = read_batch(spark, root, b)
     per_group = sk.hll_fold_registers(regs, ["grp"])
     if not with_rollup:
         return per_group
@@ -104,9 +104,9 @@ def streaming_sketch_ingest(
     group_col: str = "event_type",
 ) -> StreamingQuery:
     """Run :func:`sketch_ingest_batch` over a STREAM via ``foreachBatch``
-    — after every micro-batch, ``{state_dir}/registers_v{batch_id}``
-    holds the register table identical to the batch sketch over every
-    row seen so far."""
+    — after every micro-batch, batch ``batch_id`` of
+    ``{state_dir}/registers`` holds the register table identical to the
+    batch sketch over every row seen so far."""
     return (
         events.writeStream.foreachBatch(
             scoped(

@@ -1,5 +1,5 @@
 """Streaming incremental table-statistics maintenance — the optimizer-
-services family's streaming twin (r9 verdict item 6).
+services family's streaming twin.
 
 ``stats_merge_rollup`` (plans/advanced.py) proves the catalog's stats
 are mergeable along every axis a 100 TB incremental ANALYZE needs:
@@ -10,10 +10,9 @@ them, so "stats over everything ingested so far" is served without ever
 re-scanning history — the incremental-ANALYZE loop a warehouse runs on
 its ingestion path.
 
-State is ONE versioned snapshot ``stats_v{N}`` per batch (the shared
-streaming/snapshots.py discipline: batch-keyed overwrite, read-before,
-_SUCCESS-gated visibility), holding both stat kinds in a single
-uniformly-foldable table:
+State is ONE snapshot per batch, committed as batch N of
+``{state_dir}/stats`` (sinks/files.py's commit protocol), holding both
+stat kinds in a single uniformly-foldable table:
 
     column STRING, reg LONG, m_rank LONG, min_v LONG, max_v LONG, n_nulls LONG
 
@@ -36,13 +35,15 @@ snapshot twins.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import sketch as sk
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, write_snapshot
+from ..sinks.files import commit, fold_target, latest, read_batch
 
 _STATS_SCHEMA = (
     "column STRING, reg LONG, m_rank LONG, min_v LONG, max_v LONG, n_nulls LONG"
@@ -109,12 +110,11 @@ def stats_ingest_batch(
     snapshot; returns the post-batch foldable table.  Callable directly
     for batch backfill or through :func:`streaming_stats_ingest`."""
     spark = batch_df.sparkSession
-    prior_path, prior = read_latest(spark, state_dir, "stats", before=batch_id)
-    version = resolve_version(prior_path, batch_id)
-    if prior is None:
-        prior = spark.createDataFrame([], _STATS_SCHEMA)
+    root = os.path.join(state_dir, "stats")
+    prior_id, version = fold_target(root, batch_id)
+    prior = read_batch(spark, root, prior_id, _STATS_SCHEMA)
     merged = pin(_fold(prior, _partials(batch_df, columns)))
-    write_snapshot(merged, state_dir, "stats", version)
+    commit(merged, root, version)
     return merged
 
 
@@ -122,9 +122,11 @@ def stats(spark, state_dir: str) -> DataFrame:
     """Read side: the catalog view of the LATEST snapshot —
     ``(column, ndv_est, min_v, max_v, n_nulls)``, NDV through the shared
     HLL estimator so streaming stats are bit-equal to the batch path."""
-    path, snap = read_latest(spark, state_dir, "stats")
-    if path is None:
+    root = os.path.join(state_dir, "stats")
+    b = latest(root)
+    if b is None:
         raise ValueError(f"no stats snapshot under {state_dir}")
+    snap = read_batch(spark, root, b)
     ndv = sk.hll_fold_registers(
         snap.filter(F.col("reg") >= 0).select("column", "reg", "m_rank"),
         ["column"],
@@ -149,8 +151,8 @@ def streaming_stats_ingest(
     query_name: str = "stats_ingest",
 ) -> StreamingQuery:
     """Run :func:`stats_ingest_batch` over a STREAM via ``foreachBatch``
-    — after every micro-batch, ``{state_dir}/stats_v{batch_id}`` serves
-    column stats over every row seen so far."""
+    — after every micro-batch, batch ``batch_id`` of
+    ``{state_dir}/stats`` serves column stats over every row seen so far."""
     return (
         rows.writeStream.foreachBatch(scoped(stats_ingest_batch, state_dir, columns))
         .queryName(query_name)

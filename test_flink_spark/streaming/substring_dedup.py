@@ -7,27 +7,26 @@ already in the corpus at any alignment).
 Per micro-batch (foreachBatch — the per-doc winnowing windows are batch
 operators, same argument as cluster_ingest):
 
-1. read the persisted anchor shards (``{state_dir}/anchors/batch=N/``,
-   written one per prior batch, partition-discovered), apply the
-   one-sided df cap (``operators/span_dedup.py::substring_anchor_index``
-   semantics — production maintains the df counts incrementally instead
-   of re-aggregating, noted below);
+1. read the committed anchor shards below N (the ``{state_dir}/anchors``
+   commit root, one shard per prior batch), apply the one-sided df cap
+   (``operators/span_dedup.py::substring_anchor_index`` semantics —
+   production maintains the df counts incrementally instead of
+   re-aggregating, noted below);
 2. probe: ``substring_check_batch`` — new docs' anchors equi-join the
    index on the anchor hash, bounded exact extension, longest verified
-   match per (new doc, corpus doc) — appended to
-   ``{state_dir}/hits/batch=N/``;
-3. append this batch's own anchors as a new shard.
+   match per (new doc, corpus doc) — committed as batch N of
+   ``{state_dir}/hits``;
+3. commit this batch's own anchors as shard N.
 
-All writes are batch-keyed directory overwrites (idempotent under
-foreachBatch retries).  At 100 TB the anchor shards are a bucketed table
-on ``h`` (the probe is then a co-partitioned hash join), the df counts an
-incrementally-merged aggregate, and hits a streaming sink — the per-batch
-work is O(batch anchors + collisions), never a corpus rescan.
+Both roots follow sinks/files.py's commit protocol.  At 100 TB the
+anchor shards are a bucketed table on ``h`` (the probe is then a
+co-partitioned hash join), the df counts an incrementally-merged
+aggregate, and hits a streaming sink — the per-batch work is O(batch
+anchors + collisions), never a corpus rescan.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -36,14 +35,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import pin, scoped
+from ..sinks.files import commit, read_marked
 
 
 def _check_index_params(anchors_dir: str, k: int, w: int, ext: int) -> None:
     """Anchor ctx slices and offsets are baked at index-build time, so a
     probe with different (k, w, ext) silently truncates extensions instead
-    of erroring (r8 ADVICE).  The first batch records the parameters in a
-    ``_PARAMS.json`` sidecar (underscore-prefixed: Spark's directory
-    listing ignores it); every later batch asserts equality."""
+    of erroring.  The first batch records the parameters in a
+    ``_PARAMS.json`` file at the index root; every later batch asserts
+    equality."""
     params = {"k": k, "w": w, "ext": ext}
     path = os.path.join(anchors_dir, "_PARAMS.json")
     if os.path.exists(path):
@@ -76,20 +76,9 @@ def substring_ingest_batch(
     spark = batch_df.sparkSession
     anchors_dir = os.path.join(state_dir, "anchors")
     _check_index_params(anchors_dir, k, w, ext)
-    have_prior = bool(
-        [
-            p
-            for p in glob.glob(os.path.join(anchors_dir, "batch=*"))
-            if int(p.rsplit("=", 1)[1]) < batch_id
-        ]
-    )
+    raw = read_marked(spark, anchors_dir, before=batch_id)
     new_anch = pin(anchor_contexts(batch_df, "text", "doc_id", k, w, ext))
-    if have_prior:
-        raw = (
-            spark.read.parquet(anchors_dir)
-            .filter(F.col("batch") < batch_id)
-            .drop("batch")
-        )
+    if raw is not None:
         # one-sided df cap over the accumulated shards (production keeps
         # these counts as an incrementally-merged aggregate)
         keep = (
@@ -101,12 +90,8 @@ def substring_ingest_batch(
         hits = substring_check_batch(
             batch_df, raw.join(keep, "h"), k=k, w=w, ext=ext, min_len=min_len
         )
-        hits.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "hits", f"batch={batch_id}")
-        )
-    new_anch.write.mode("overwrite").parquet(
-        os.path.join(anchors_dir, f"batch={batch_id}")
-    )
+        commit(hits, os.path.join(state_dir, "hits"), batch_id)
+    commit(new_anch, anchors_dir, batch_id)
 
 
 def streaming_substring_check(
@@ -121,9 +106,9 @@ def streaming_substring_check(
     min_len: int | None = None,
 ) -> StreamingQuery:
     """Run :func:`substring_ingest_batch` over a STREAM of ``(doc_id,
-    text)`` rows: after each micro-batch, ``{state_dir}/hits/`` holds
-    every (arriving doc, corpus doc) longest-duplicated-substring match
-    and the anchor index has grown by the batch's own shard."""
+    text)`` rows: after each micro-batch, the ``{state_dir}/hits`` root
+    holds every (arriving doc, corpus doc) longest-duplicated-substring
+    match and the anchor index has grown by the batch's own shard."""
     return (
         docs.writeStream.foreachBatch(
             scoped(

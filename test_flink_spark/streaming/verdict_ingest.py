@@ -1,5 +1,5 @@
 """Streaming incremental RETENTION VERDICTS — per-micro-batch
-maintenance of the dedup pipeline's terminal table (r8 verdict item 5).
+maintenance of the dedup pipeline's terminal table.
 
 ``corpus_dedup_verdicts`` is the artifact a curation run writes back next
 to the corpus: one ``(doc_id, verdict, coverage_bp, is_canonical)`` row
@@ -18,14 +18,13 @@ retroactive moves only this table exhibits:
 Per micro-batch (foreachBatch — the winnowing windows are batch
 operators, same argument as cluster_ingest):
 
-1. **Persisted state** under ``state_dir``: ``anchors/batch=N/`` (the
-   per-batch anchor-context shards substring_dedup also uses),
-   ``meta/batch=N/`` ((doc_id, fp, n_tokens) — doc-level metadata,
-   tiny next to text), ``intervals_vN/`` (DISTINCT (doc_id, s, e, h)
-   duplicated-span intervals WITH anchor-hash provenance), and
-   ``verdicts_vN/`` — the post-batch snapshot and the COMMIT POINT
-   (written last; a crash leaves only orphan shards the retry ignores
-   and overwrites, the cluster_ingest rule).
+1. **Persisted state**: four commit roots under ``state_dir``
+   (sinks/files.py's commit protocol), each committing batch N in this
+   order: ``anchors`` (the per-batch anchor-context shards
+   substring_dedup also uses), ``meta`` ((doc_id, fp, n_tokens) —
+   doc-level metadata, tiny next to text), ``intervals`` (DISTINCT
+   (doc_id, s, e, h) duplicated-span intervals WITH anchor-hash
+   provenance), and ``verdicts`` — the post-batch snapshot.
 2. **Pair derivation** — the batch detector's df cap (2 ≤ df ≤ max_df)
    is re-evaluated on the UNION anchor counts; new pairs are (batch
    anchor) × (union anchor) equi-joins on live hashes only.  df only
@@ -64,7 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import pin, scoped
-from .snapshots import read_latest, resolve_version, version_of, write_snapshot
+from ..sinks.files import commit, fold_target, read_batch, read_marked
 
 _INTERVALS_SCHEMA = "doc_id LONG, s INT, e INT, h LONG"
 
@@ -95,15 +94,11 @@ def verdict_ingest_batch(
     if min_len is None:
         min_len = w + k - 1
     spark = batch_df.sparkSession
-    anchors_dir = os.path.join(state_dir, "anchors")
-    meta_dir = os.path.join(state_dir, "meta")
-    # the verdict snapshot is the commit point: prior state is exactly
-    # the shards/versions below it, so orphans from a crashed call are
-    # ignored and overwritten (cluster_ingest's crash-resume rule)
-    prior_path, prior_verdicts_df = read_latest(
-        spark, state_dir, "verdicts", before=batch_id
-    )
-    version = resolve_version(prior_path, batch_id)
+    roots = {
+        name: os.path.join(state_dir, name)
+        for name in ("anchors", "meta", "intervals", "verdicts")
+    }
+    prior_id, version = fold_target(roots["verdicts"], batch_id)
     new_anch = pin(anchor_contexts(batch_df, "text", "doc_id", k, w, ext))
     new_meta = pin(
         batch_df.select(
@@ -112,23 +107,11 @@ def verdict_ingest_batch(
             F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
         )
     )
-    if prior_path is not None:
-        prior_anch = (
-            spark.read.parquet(anchors_dir)
-            .filter(F.col("batch") < F.lit(version))
-            .drop("batch")
-        )
-        prior_meta = (
-            spark.read.parquet(meta_dir)
-            .filter(F.col("batch") < F.lit(version))
-            .drop("batch")
-        )
-        # intervals are written in the same call as their verdict
-        # snapshot, so the committed prior's OWN version is the pair key
-        prior_iv = spark.read.parquet(
-            os.path.join(state_dir, f"intervals_v{version_of(prior_path)}")
-        )
-        prior_verdicts = prior_verdicts_df
+    if prior_id is not None:
+        prior_anch = read_marked(spark, roots["anchors"], before=version)
+        prior_meta = read_marked(spark, roots["meta"], before=version)
+        prior_iv = read_batch(spark, roots["intervals"], prior_id)
+        prior_verdicts = read_batch(spark, roots["verdicts"], prior_id)
     else:
         prior_anch = spark.createDataFrame([], new_anch.schema)
         prior_meta = spark.createDataFrame([], new_meta.schema)
@@ -241,16 +224,14 @@ def verdict_ingest_batch(
         snapshot = recomputed
     snapshot = pin(snapshot)
 
-    # shards and interval state first, the verdict snapshot LAST: its
-    # presence implies everything it was derived from exists
-    new_anch.write.mode("overwrite").parquet(
-        os.path.join(anchors_dir, f"batch={version}")
-    )
-    new_meta.write.mode("overwrite").parquet(
-        os.path.join(meta_dir, f"batch={version}")
-    )
-    write_snapshot(iv_state, state_dir, "intervals", version)
-    write_snapshot(snapshot, state_dir, "verdicts", version)
+    # the verdicts last: a direct call resumes after the newest of them
+    for name, df in (
+        ("anchors", new_anch),
+        ("meta", new_meta),
+        ("intervals", iv_state),
+        ("verdicts", snapshot),
+    ):
+        commit(df, roots[name], version)
     return snapshot
 
 
@@ -268,8 +249,8 @@ def streaming_dedup_verdicts(
     trim_bp: int = 1500,
 ) -> StreamingQuery:
     """Run :func:`verdict_ingest_batch` over a STREAM of ``(doc_id,
-    text)`` rows via ``foreachBatch`` — after every micro-batch,
-    ``{state_dir}/verdicts_v{batch_id}`` holds retention verdicts
+    text)`` rows via ``foreachBatch`` — after every micro-batch, batch
+    ``batch_id`` of ``{state_dir}/verdicts`` holds retention verdicts
     identical to the batch retention_verdicts over every document seen
     so far."""
     return (

@@ -332,3 +332,42 @@ def test_compact_parquet_preserves_partition_layout(spark, tmp_path):
         d for d in os.listdir(path) if d.startswith("part=")
     ) == ["part=0", "part=1", "part=2"]
     assert spark.read.parquet(path).filter("part = 1").count() == 300
+
+
+def _file_commits_outside_commit_module(pkg: Path) -> list[str]:
+    """Every DataFrame ``.write`` and ``os.rename``/``os.replace`` in the
+    streaming and sink packages outside sinks/files.py, the commit
+    module.  A ``.write.jdbc`` commits through a database transaction and
+    is not a file commit."""
+    import ast
+
+    found = []
+    for f in sorted([*pkg.glob("streaming/*.py"), *pkg.glob("sinks/*.py")]):
+        if f.relative_to(pkg).as_posix() == "sinks/files.py":
+            continue
+        tree = ast.parse(f.read_text())
+        parent = {id(c): n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute):
+                continue
+            up = parent.get(id(node))
+            if node.attr == "write":
+                if isinstance(up, ast.Call) and up.func is node:
+                    continue  # a file handle's write(...)
+                if isinstance(up, ast.Attribute) and up.attr == "jdbc":
+                    continue
+            elif not (
+                node.attr in ("rename", "replace")
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ):
+                continue
+            found.append(f"{f.relative_to(pkg).as_posix()}:{node.lineno}")
+    return found
+
+
+def test_no_file_commit_outside_commit_module():
+    """Every foreachBatch file writer commits through sinks/files.py's
+    commit protocol (docs/DESIGN_DECISIONS.md, "Commit protocol")."""
+    pkg = Path(__file__).resolve().parents[1] / "test_flink_spark"
+    assert _file_commits_outside_commit_module(pkg) == []

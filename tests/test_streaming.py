@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from test_flink_spark.pipelines.hot_media_track import transform as media_transform
+from test_flink_spark.sinks.files import batch_dir, marked, read_batch, read_marked
 from test_flink_spark.sinks.memory import start_memory
 from test_flink_spark.sources.files import text_lines
 
@@ -1837,7 +1838,7 @@ def test_streaming_cluster_ingest_matches_batch_cc(spark, tmpdirs):
 
     got_v2 = {
         r["doc_id"]: r["cluster_id"]
-        for r in spark.read.parquet(str(state / "labels_v2")).collect()
+        for r in read_batch(spark, str(state / "labels"), 2).collect()
     }
     union = spark.createDataFrame(
         [r for batch in batches for r in batch], schema
@@ -1856,7 +1857,7 @@ def test_streaming_cluster_ingest_matches_batch_cc(spark, tmpdirs):
     # batch 2, docs 10/11 rooted at 10; after, everything roots at 1
     got_v1 = {
         r["doc_id"]: r["cluster_id"]
-        for r in spark.read.parquet(str(state / "labels_v1")).collect()
+        for r in read_batch(spark, str(state / "labels"), 1).collect()
     }
     assert got_v1[10] == got_v1[11] == 10 and got_v1[1] == got_v1[3] == 1
     assert got_v2[10] == got_v2[11] == got_v2[15] == 1
@@ -1911,7 +1912,7 @@ def test_streaming_substring_check_matches_batch_detector(spark, tmpdirs):
 
     got = {
         (r["doc_id"], r["dup_of"], r["len_tokens"], r["start_new"], r["start_corpus"])
-        for r in spark.read.parquet(str(state / "hits")).drop("batch").collect()
+        for r in read_marked(spark, str(state / "hits")).collect()
     }
     union = spark.createDataFrame([r for b in batches for r in b], schema)
     want = {
@@ -2007,11 +2008,10 @@ def test_substring_ingest_rejects_param_mismatch(spark, tmpdirs):
 
 
 def test_cluster_ingest_backfill_resumes_after_partial_write(spark, tmpdirs):
-    """r8 ADVICE: the labels snapshot is now the COMMIT POINT (shingle
-    shard written first).  A backfill call that crashed between the two
-    writes leaves only an orphan shingle shard; the retry must ignore it
-    (no double-counted shingles), overwrite it, and produce labels equal
-    to the batch CC over the union."""
+    """The shingle shard is committed before the labels.  A backfill call
+    that crashed before marking its shard leaves only unmarked shard
+    data; the retry must ignore it (no double-counted shingles), replace
+    it, and produce labels equal to the batch CC over the union."""
     from test_flink_spark.operators.dedup import (
         ngram_jaccard_pairs,
         shingle_hashes,
@@ -2026,9 +2026,9 @@ def test_cluster_ingest_backfill_resumes_after_partial_write(spark, tmpdirs):
     batch1 = spark.createDataFrame([(3, a)], schema)
 
     cluster_ingest_batch(batch0, str(state), batch_id=None)
-    # simulate the crash: batch 1's shingle shard landed, labels did not
+    # simulate the crash: batch 1's shingle shard landed unmarked
     shingle_hashes(batch1, "text", "doc_id", 3).write.mode("overwrite").parquet(
-        str(state / "shingles" / "batch=1")
+        batch_dir(str(state / "shingles"), 1)
     )
     # retry the backfill call — the orphan shard must not leak into
     # prior state (it holds the SAME docs this batch delivers)
@@ -2150,16 +2150,14 @@ def test_streaming_verdict_ingest_matches_batch(spark, tmpdirs):
         q.processAllAvailable()
         snapshots[0] = {
             r["doc_id"]: (r["verdict"], r["coverage_bp"], r["is_canonical"])
-            for r in spark.read.parquet(str(state / "verdicts_v0")).collect()
+            for r in read_batch(spark, str(state / "verdicts"), 0).collect()
         }
         for i in (1, 2):
             write_batch(i)
             q.processAllAvailable()
             snapshots[i] = {
                 r["doc_id"]: (r["verdict"], r["coverage_bp"], r["is_canonical"])
-                for r in spark.read.parquet(
-                    str(state / f"verdicts_v{i}")
-                ).collect()
+                for r in read_batch(spark, str(state / "verdicts"), i).collect()
             }
     finally:
         q.stop()
@@ -2185,7 +2183,7 @@ def test_streaming_verdict_ingest_matches_batch(spark, tmpdirs):
     assert snapshots[1][10][0] == "drop_exact"     # larger-id exact copy
     # the df cap genuinely fired in batch 2: R's interior anchors are
     # carried by all four R-docs
-    anch = spark.read.parquet(str(state / "anchors"))
+    anch = read_marked(spark, str(state / "anchors"))
     max_seen_df = (
         anch.groupBy("h").count().agg({"count": "max"}).collect()[0][0]
     )
@@ -2197,12 +2195,11 @@ def test_streaming_verdict_ingest_matches_batch(spark, tmpdirs):
 
 
 def test_verdict_ingest_backfill_resumes_after_partial_write(spark, tmpdirs):
-    """verdict_ingest's crash-safety contract: the verdict snapshot is
-    the COMMIT POINT (anchor/meta shards and interval state are written
-    first).  A backfill call that crashed after writing everything BUT
-    the snapshot leaves orphans the retry must ignore and overwrite —
-    the union shingle/anchor state must not double-count the redelivered
-    batch."""
+    """verdict_ingest's crash-safety contract: anchor/meta shards and
+    interval state are committed before the verdict snapshot.  A
+    backfill call that crashed after writing everything but before any
+    marker leaves unmarked data the retry must ignore and replace — the
+    union anchor state must not double-count the redelivered batch."""
     from test_flink_spark.operators.span_dedup import (
         anchor_contexts,
         retention_verdicts,
@@ -2220,19 +2217,19 @@ def test_verdict_ingest_backfill_resumes_after_partial_write(spark, tmpdirs):
     batch1 = spark.createDataFrame([(10, dup)], schema)
 
     verdict_ingest_batch(batch0, str(state), batch_id=None)
-    # simulate the crash: batch 1's shards AND interval state landed,
-    # the verdict snapshot did not
+    # simulate the crash: batch 1's shards AND interval state landed
+    # unmarked, the verdict snapshot did not land
     anchor_contexts(batch1, "text", "doc_id", 3, 4, 10).write.mode(
         "overwrite"
-    ).parquet(str(state / "anchors" / "batch=1"))
+    ).parquet(batch_dir(str(state / "anchors"), 1))
     batch1.selectExpr(
         "doc_id",
         "md5(array_join(split(trim(text), '\\\\s+'), ' ')) AS fp",
         "CAST(size(split(trim(text), '\\\\s+')) AS LONG) AS n_tokens",
-    ).write.mode("overwrite").parquet(str(state / "meta" / "batch=1"))
+    ).write.mode("overwrite").parquet(batch_dir(str(state / "meta"), 1))
     spark.createDataFrame(
         [(999, 1, 2, 12345)], "doc_id LONG, s INT, e INT, h LONG"
-    ).write.mode("overwrite").parquet(str(state / "intervals_v1"))
+    ).write.mode("overwrite").parquet(batch_dir(str(state / "intervals"), 1))
 
     got = {
         r["doc_id"]: (r["verdict"], r["coverage_bp"], r["is_canonical"])
@@ -2295,7 +2292,7 @@ def test_verdict_ingest_randomized_differential(spark, tmpdirs):
         )
         got = {
             r["doc_id"]: (r["verdict"], r["coverage_bp"], r["is_canonical"])
-            for r in spark.read.parquet(str(state / f"verdicts_v{i}")).collect()
+            for r in read_batch(spark, str(state / "verdicts"), i).collect()
         }
         want = {
             r["doc_id"]: (r["verdict"], r["coverage_bp"], r["is_canonical"])
@@ -2310,7 +2307,7 @@ def test_verdict_ingest_randomized_differential(spark, tmpdirs):
     # the fixture wasn't vacuous: several verdict classes occurred and
     # at least one anchor hash crossed the cap
     assert len({v for v, _, _ in want.values()}) >= 3
-    anch = spark.read.parquet(str(state / "anchors"))
+    anch = read_marked(spark, str(state / "anchors"))
     assert (
         anch.groupBy("h").count().agg({"count": "max"}).collect()[0][0] > 4
     )
@@ -2388,7 +2385,7 @@ def test_streaming_substring_check_randomized_differential(spark, tmpdirs):
 
     got = {
         (r["doc_id"], r["dup_of"], r["len_tokens"], r["start_new"], r["start_corpus"])
-        for r in spark.read.parquet(str(state / "hits")).drop("batch").collect()
+        for r in read_marked(spark, str(state / "hits")).collect()
     }
     union = spark.createDataFrame(docs, schema)
     want = {
@@ -2472,11 +2469,11 @@ def test_streaming_sketch_ingest_matches_batch_hll(spark, tmpdirs):
     # the duplicate registers)
     batch2 = spark.createDataFrame(batches[2], schema)
     before = sorted(
-        map(tuple, spark.read.parquet(str(state / "registers_v2")).collect())
+        map(tuple, read_batch(spark, str(state / "registers"), 2).collect())
     )
     sketch_ingest_batch(batch2, str(state), batch_id=2)
     after = sorted(
-        map(tuple, spark.read.parquet(str(state / "registers_v2")).collect())
+        map(tuple, read_batch(spark, str(state / "registers"), 2).collect())
     )
     assert before == after
 
@@ -2509,9 +2506,7 @@ def test_sketch_ingest_randomized_split_parity(spark, tmpdirs):
     got = sorted(
         map(
             tuple,
-            spark.read.parquet(
-                str(state / f"registers_v{len(batches) - 1}")
-            ).collect(),
+            read_batch(spark, str(state / "registers"), len(batches) - 1).collect(),
         )
     )
     want = sorted(
@@ -2572,12 +2567,10 @@ def test_broadcast_rules_processing_time_semantics(spark, tmpdirs):
         spark.createDataFrame(ev1, ev_schema), str(state), str(out), 1
     )
 
-    import glob as g
-
     got = sorted(
         map(
             tuple,
-            spark.read.parquet(*g.glob(str(out / "verdicts_b*"))).collect(),
+            read_marked(spark, str(out)).collect(),
         )
     )
     # processing-time semantics: event 11 keeps its v0 verdict; events
@@ -2586,7 +2579,7 @@ def test_broadcast_rules_processing_time_semantics(spark, tmpdirs):
     assert got == want, (got, want)
 
     final_rules = sorted(
-        map(tuple, spark.read.parquet(str(state / "rules_v1")).collect())
+        map(tuple, read_batch(spark, str(state / "rules"), 1).collect())
     )
     assert final_rules == sorted(
         [(1, "view", 200, True, 3), (2, "click", 100, False, 4)]
@@ -2601,7 +2594,7 @@ def test_broadcast_rules_processing_time_semantics(spark, tmpdirs):
         batch_id=1,
     )
     assert final_rules == sorted(
-        map(tuple, spark.read.parquet(str(state / "rules_v1")).collect())
+        map(tuple, read_batch(spark, str(state / "rules"), 1).collect())
     )
 
 
@@ -2644,11 +2637,9 @@ def test_broadcast_rules_streaming_end_to_end(spark, tmpdirs):
         rq.stop()
         eq.stop()
 
-    import glob as g
-
     got = sorted(
         (r["event_id"], r["rule_id"])
-        for r in spark.read.parquet(*g.glob(str(out / "verdicts_b*"))).collect()
+        for r in read_marked(spark, str(out)).collect()
     )
     # e0 under the $1.00 rule: only 11; e1 under the lowered $0.50 rule:
     # only 20 (21 is below even the lowered threshold)
@@ -2680,7 +2671,7 @@ def test_side_outputs_exclusive_partitions_the_batch(spark, tmpdirs):
     )
     got = {
         tag: sorted(
-            r["event_id"] for r in spark.read.parquet(str(out / tag / "b0")).collect()
+            r["event_id"] for r in read_batch(spark, str(out / tag), 0).collect()
         )
         for tag in ("big", "views", "errors", "rest")
     }
@@ -2705,7 +2696,7 @@ def test_side_outputs_multi_mode_tags_every_match(spark, tmpdirs):
     )
     got = {
         tag: sorted(
-            r["event_id"] for r in spark.read.parquet(str(out / tag / "b0")).collect()
+            r["event_id"] for r in read_batch(spark, str(out / tag), 0).collect()
         )
         for tag in ("big", "views", "rest")
     }
@@ -2755,15 +2746,13 @@ def test_side_outputs_streaming_late_data_capture(spark, tmpdirs):
     finally:
         q.stop()
 
-    import glob as g
-
     late = sorted(
         r["event_id"]
-        for r in spark.read.parquet(*g.glob(str(out / "late" / "b*"))).collect()
+        for r in read_marked(spark, str(out / "late")).collect()
     )
     main = sorted(
         r["event_id"]
-        for r in spark.read.parquet(*g.glob(str(out / "rest" / "b*"))).collect()
+        for r in read_marked(spark, str(out / "rest")).collect()
     )
     assert late == [3, 6] and main == [1, 2, 4, 5]
 
@@ -2806,7 +2795,7 @@ def test_allowed_lateness_updates_emitted_window(spark, tmpdirs):
 
     snap = {
         (r["event_type"], r["win_start"]): r["cnt"]
-        for r in spark.read.parquet(str(state / "windows_v1")).collect()
+        for r in read_batch(spark, str(state / "windows"), 1).collect()
     }
     assert snap == {
         ("view", 0): 2,
@@ -2816,7 +2805,7 @@ def test_allowed_lateness_updates_emitted_window(spark, tmpdirs):
     }, snap
     dropped = [
         (r["event_type"], r["ts_ms"])
-        for r in spark.read.parquet(str(late / "b1")).collect()
+        for r in read_batch(spark, str(late), 1).collect()
     ]
     assert dropped == [("click", 5000)]
     # retry idempotence: re-folding batch 1 reproduces the same snapshot
@@ -2826,7 +2815,7 @@ def test_allowed_lateness_updates_emitted_window(spark, tmpdirs):
     late_update_batch(b1, str(state), batch_id=1, late_dir=str(late))
     snap2 = {
         (r["event_type"], r["win_start"]): r["cnt"]
-        for r in spark.read.parquet(str(state / "windows_v1")).collect()
+        for r in read_batch(spark, str(state / "windows"), 1).collect()
     }
     assert snap2 == snap
 
@@ -2835,7 +2824,6 @@ def test_allowed_lateness_randomized_batch_parity(spark, tmpdirs):
     """Randomized differential for the allowed-lateness fold: seeded
     random events with random batch cuts — the final snapshot must equal
     the batch tumbling count over exactly (all rows − late-sink rows)."""
-    import glob as g
     import random
 
     from pyspark.sql import functions as F
@@ -2861,17 +2849,12 @@ def test_allowed_lateness_randomized_batch_parity(spark, tmpdirs):
         )
     got = {
         (r["event_type"], r["win_start"]): r["cnt"]
-        for r in spark.read.parquet(
-            str(state / f"windows_v{len(batches) - 1}")
-        ).collect()
+        for r in read_batch(spark, str(state / "windows"), len(batches) - 1).collect()
     }
-    late_files = g.glob(str(late / "b*"))
+    late_rows = read_marked(spark, str(late))
     dropped = (
-        [
-            (r["event_type"], r["ts_ms"])
-            for r in spark.read.parquet(*late_files).collect()
-        ]
-        if late_files
+        [(r["event_type"], r["ts_ms"]) for r in late_rows.collect()]
+        if late_rows is not None
         else []
     )
     from collections import Counter
@@ -2888,11 +2871,11 @@ def test_allowed_lateness_randomized_batch_parity(spark, tmpdirs):
 
 def test_snapshot_twins_overwrite_orphan_state(spark, tmpdirs):
     """Crash-resume for the snapshot-only twins (sketch_ingest,
-    broadcast_rules, late_updates): a crash mid-write leaves a PARTIAL
-    version directory; because each fold resolves its version BEFORE
-    reading state (reads only versions < batch_id) and writes in
-    overwrite mode, the retry ignores the orphan and reproduces correct
-    state.  Simulated by pre-creating a garbage v1 directory."""
+    broadcast_rules, late_updates): a crash before the marker leaves a
+    PARTIAL unmarked batch directory; because each fold reads only marked
+    batches below its own, the retry ignores the orphan, replaces it and
+    reproduces correct state.  Simulated by pre-creating a garbage
+    unmarked batch 1."""
     import os
 
     from test_flink_spark.streaming.broadcast_rules import rules_ingest_batch
@@ -2906,8 +2889,8 @@ def test_snapshot_twins_overwrite_orphan_state(spark, tmpdirs):
         str(st1),
         batch_id=0,
     )
-    orphan = st1 / "registers_v1"
-    orphan.mkdir()
+    orphan = Path(batch_dir(str(st1 / "registers"), 1))
+    orphan.mkdir(parents=True)
     (orphan / "part-garbage.parquet").write_bytes(b"not parquet")
     merged = sketch_ingest_batch(
         spark.createDataFrame([(u, "view") for u in range(50, 80)], ev_schema),
@@ -2945,8 +2928,8 @@ def test_snapshot_twins_overwrite_orphan_state(spark, tmpdirs):
         str(st2),
         batch_id=0,
     )
-    orphan2 = st2 / "rules_v1"
-    orphan2.mkdir()
+    orphan2 = Path(batch_dir(str(st2 / "rules"), 1))
+    orphan2.mkdir(parents=True)
     (orphan2 / "part-garbage.parquet").write_bytes(b"junk")
     rules_ingest_batch(
         spark.createDataFrame([(1, "view", 75, True, 2)], rules_schema),
@@ -2957,9 +2940,9 @@ def test_snapshot_twins_overwrite_orphan_state(spark, tmpdirs):
     assert got2 == [(1, "view", 75, True, 2)]
 
     # --- late updates (sidecar-gated commit) ---
-    # two orphan flavors: a garbage partial dir (no _SUCCESS), and the
-    # nastier crash AFTER the parquet commit but BEFORE _WATERMARK.json —
-    # both must be invisible to the retry and repaired by overwrite
+    # two orphan flavors: a garbage partial dir, and complete parquet
+    # (with _SUCCESS) but no _WATERMARK.json sidecar — both unmarked,
+    # both must be invisible to the retry and replaced
     from test_flink_spark.streaming.late_updates import late_update_batch
 
     st3 = tmpdirs / "orphan_late"
@@ -2969,8 +2952,8 @@ def test_snapshot_twins_overwrite_orphan_state(spark, tmpdirs):
         str(st3),
         batch_id=0,
     )
-    orphan3 = st3 / "windows_v1"
-    orphan3.mkdir()
+    orphan3 = Path(batch_dir(str(st3 / "windows"), 1))
+    orphan3.mkdir(parents=True)
     (orphan3 / "part-garbage.parquet").write_bytes(b"junk")
     late_update_batch(
         spark.createDataFrame([("view", 62_000)], lu_schema),
@@ -2982,31 +2965,31 @@ def test_snapshot_twins_overwrite_orphan_state(spark, tmpdirs):
         for r in spark.read.parquet(str(orphan3)).collect()
     }
     assert got3 == {("view", 0): 1, ("view", 60_000): 2}
-    # parquet-committed-but-sidecar-less orphan at v2: fabricate it by
-    # writing real parquet (has _SUCCESS) and withholding the sidecar
+    # parquet-committed-but-sidecar-less orphan at batch 2: fabricate it
+    # by writing real parquet (has _SUCCESS) and withholding the sidecar
+    v2 = batch_dir(str(st3 / "windows"), 2)
     spark.createDataFrame([("bogus", 0, 999)], "event_type STRING, win_start LONG, cnt LONG").write.mode(
         "overwrite"
-    ).parquet(str(st3 / "windows_v2"))
-    assert os.path.exists(str(st3 / "windows_v2" / "_SUCCESS"))
-    # a batch_id=None backfill must resolve v1 as prior (not wedge on the
-    # missing _WATERMARK.json), derive version 2, and repair the orphan
+    ).parquet(v2)
+    assert os.path.exists(os.path.join(v2, "_SUCCESS"))
+    # a batch_id=None backfill must resolve batch 1 as prior (not wedge on
+    # the missing _WATERMARK.json), derive batch 2, and repair the orphan
     late_update_batch(
         spark.createDataFrame([("view", 63_000)], lu_schema), str(st3)
     )
     got4 = {
         (r["event_type"], r["win_start"]): r["cnt"]
-        for r in spark.read.parquet(str(st3 / "windows_v2")).collect()
+        for r in read_batch(spark, str(st3 / "windows"), 2).collect()
     }
     assert got4 == {("view", 0): 1, ("view", 60_000): 3}
-    assert os.path.exists(str(st3 / "windows_v2" / "_WATERMARK.json"))
+    assert os.path.exists(os.path.join(v2, "_WATERMARK.json"))
 
 
 def test_broadcast_rules_uncommitted_snapshot_invisible(spark, tmpdirs):
-    """The concurrent-writer race (r9 ADVICE): the rules fold and the
-    event evaluator run as separate streaming queries, so the evaluator
-    can glob the state dir while rules_v{N} is mid-write.  Snapshot
-    resolution is gated on the _SUCCESS commit marker, so an uncommitted
-    (or mid-overwrite) version is invisible and the batch evaluates under
+    """The concurrent-writer race: the rules fold and the event evaluator
+    run as separate streaming queries, so the evaluator can list the
+    rules root while batch N is mid-write.  Only marked batches are
+    read, so an unmarked one is invisible and the batch evaluates under
     the previous committed snapshot instead of crashing on a partial
     directory."""
     import os
@@ -3027,10 +3010,10 @@ def test_broadcast_rules_uncommitted_snapshot_invisible(spark, tmpdirs):
         str(state),
         batch_id=0,
     )
-    # simulate a concurrent writer mid-flight: a v1 dir with data files
-    # but NO _SUCCESS marker (what a reader sees before job commit)
-    mid = state / "rules_v1"
-    mid.mkdir()
+    # simulate a concurrent writer mid-flight: batch 1 with data files
+    # but no marker (what a reader sees before the commit)
+    mid = Path(batch_dir(str(state / "rules"), 1))
+    mid.mkdir(parents=True)
     (mid / "part-00000.parquet").write_bytes(b"incomplete")
     apply_rules_batch(
         spark.createDataFrame(
@@ -3042,7 +3025,7 @@ def test_broadcast_rules_uncommitted_snapshot_invisible(spark, tmpdirs):
         batch_id=0,
     )
     rows = sorted(
-        map(tuple, spark.read.parquet(str(out / "verdicts_b0")).collect())
+        map(tuple, read_batch(spark, str(out), 0).collect())
     )
     # evaluated under committed v0 (threshold 100 cents): event 10 only
     assert rows == [(10, 1, 0)]
@@ -3111,18 +3094,15 @@ def test_broadcast_rules_randomized_interleave_parity(spark, tmpdirs):
                         expected.append((e, r_id, rb - 1))
             eb += 1
 
-    import glob as g
-
-    files = g.glob(str(out / "verdicts_b*"))
     got = sorted(
         (r["event_id"], r["rule_id"], r["rules_version"])
-        for r in spark.read.parquet(*files).collect()
+        for r in read_marked(spark, str(out)).collect()
     )
     assert got == sorted(expected), (len(got), len(expected))
 
 
 def test_stats_ingest_fold_equals_direct(spark, tmpdirs):
-    """Streaming incremental ANALYZE (r9 verdict item 6): per-batch
+    """Streaming incremental ANALYZE: per-batch
     partial-stats folds must serve, after EVERY batch, exactly the stats
     a single direct pass over the union computes — HLL NDV bit-equal
     through the shared estimator, min/max/null-count exact against an
@@ -3178,19 +3158,19 @@ def test_stats_ingest_fold_equals_direct(spark, tmpdirs):
 
     # retry idempotence: re-fold batch 1 under its own batch_id
     before = sorted(
-        map(tuple, spark.read.parquet(str(state / "stats_v1")).collect())
+        map(tuple, read_batch(spark, str(state / "stats"), 1).collect())
     )
     stats_ingest_batch(
         spark.createDataFrame(batches[1], schema), str(state), columns, batch_id=1
     )
     after = sorted(
-        map(tuple, spark.read.parquet(str(state / "stats_v1")).collect())
+        map(tuple, read_batch(spark, str(state / "stats"), 1).collect())
     )
     assert before == after
 
-    # orphan crash: a garbage (uncommitted) version dir is invisible and
+    # orphan crash: a garbage (unmarked) batch dir is invisible and
     # repaired by the next backfill
-    orphan = state / f"stats_v{len(batches)}"
+    orphan = Path(batch_dir(str(state / "stats"), len(batches)))
     orphan.mkdir()
     (orphan / "part-garbage.parquet").write_bytes(b"junk")
     extra = [(9_999, 123_456)]
@@ -3207,7 +3187,6 @@ def test_stats_ingest_streaming_e2e(spark, tmpdirs):
     """End-to-end through a real stream: rate-limited file source ->
     foreachBatch stats fold -> read-side catalog view equals the direct
     pass over everything delivered."""
-    import glob as g
     import json
 
     from test_flink_spark.streaming.stats_ingest import (
@@ -3249,7 +3228,7 @@ def test_stats_ingest_streaming_e2e(spark, tmpdirs):
     stats_ingest_batch(union, str(direct_state), columns, batch_id=0)
     want = sorted(map(tuple, stats(spark, str(direct_state)).collect()))
     assert got == want
-    assert len(g.glob(str(state / "stats_v*"))) >= 2
+    assert len(marked(str(state / "stats"))) >= 2
 
 
 def test_processing_time_tumbling_replay_parity(spark, tmpdirs):
@@ -3277,10 +3256,9 @@ def test_processing_time_tumbling_replay_parity(spark, tmpdirs):
     for i, batch in enumerate(batches):
         for t, _ in batch:
             want[(i // w, t)] += 1
-    last = str(state / f"ptwin_v{len(batches) - 1}")
     got = {
         (r["win_id"], r["event_type"]): r["cnt"]
-        for r in spark.read.parquet(last).collect()
+        for r in read_batch(spark, str(state / "ptwin"), len(batches) - 1).collect()
     }
     assert got == dict(want)
     # retry idempotence
@@ -3289,7 +3267,7 @@ def test_processing_time_tumbling_replay_parity(spark, tmpdirs):
     )
     got2 = {
         (r["win_id"], r["event_type"]): r["cnt"]
-        for r in spark.read.parquet(str(state / "ptwin_v2")).collect()
+        for r in read_batch(spark, str(state / "ptwin"), 2).collect()
     }
     want2 = Counter()
     for i, batch in enumerate(batches[:3]):
@@ -3333,52 +3311,39 @@ def test_processing_time_stream_equals_batch_query(spark, tmpdirs):
     got = sorted(
         map(
             tuple,
-            spark.read.parquet(str(state / f"ptwin_v{len(batches) - 1}")).collect(),
+            read_batch(spark, str(state / "ptwin"), len(batches) - 1).collect(),
         )
     )
     want = sorted(map(tuple, events_processing_time_tumbling(spark, sf).collect()))
     assert got == want
 
 
-def test_write_snapshot_stage_rename_protocol(spark, tmpdirs):
-    """r10 ADVICE: committed snapshot dirs must never be deleted in
-    place.  write_snapshot stages (parquet + sidecars) into a
-    glob-invisible dir and renames into place; a retry overwrite moves
-    the old committed dir aside whole (trash_…) instead of rmtree'ing it
-    under a live reader."""
-    import glob
+def test_commit_stage_rename_protocol(spark, tmpdirs):
+    """A committed batch must never be rewritten in place.  ``commit``
+    writes the parquet and its sidecars under an unlisted name, renames
+    them into place and only then marks the batch; a retry of a marked
+    batch writes nothing."""
     import os
 
-    from test_flink_spark.streaming.snapshots import (
-        latest_snapshot,
-        write_snapshot,
-    )
+    from test_flink_spark.sinks.files import commit, read_sidecar
 
-    state = tmpdirs / "stage_rename_state"
-    state.mkdir()
+    root = str(tmpdirs / "rules")
     df1 = spark.createDataFrame([(1, "a")], "k LONG, v STRING")
-    out = write_snapshot(df1, str(state), "rules", 0, sidecars={"_META.json": {"n": 1}})
+    commit(df1, root, 0, sidecars={"_META.json": {"n": 1}})
+    out = batch_dir(root, 0)
     # fully committed on arrival: _SUCCESS and the sidecar both present
     assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    assert os.path.exists(os.path.join(out, "_META.json"))
-    assert latest_snapshot(str(state), "rules", sidecars=("_META.json",)) == out
-    # no staging residue, and staging/trash names are glob-invisible
-    assert glob.glob(str(state / "stage_*")) == []
-    assert glob.glob(str(state / "rules_v*")) == [out]
+    assert read_sidecar(root, 0, "_META.json") == {"n": 1}
+    assert marked(root) == [0]
+    # no staging residue next to the batch
+    assert os.listdir(os.path.join(root, "data")) == ["batch-0"]
 
-    # retry overwrite of the committed version: old dir moved aside whole
+    # a retry of the marked batch leaves it as it was
+    files = {f: os.stat(os.path.join(out, f)).st_mtime_ns for f in os.listdir(out)}
     df2 = spark.createDataFrame([(2, "b")], "k LONG, v STRING")
-    out2 = write_snapshot(df2, str(state), "rules", 0)
-    assert out2 == out
-    trash = glob.glob(str(state / "trash_rules_v0_*"))
-    assert len(trash) == 1
-    # the displaced dir is intact (still has its commit marker + sidecar)
-    assert os.path.exists(os.path.join(trash[0], "_SUCCESS"))
-    assert os.path.exists(os.path.join(trash[0], "_META.json"))
-    assert [tuple(r) for r in spark.read.parquet(out2).collect()] == [(2, "b")]
-    # second retry gets a distinct trash name
-    write_snapshot(df1, str(state), "rules", 0)
-    assert len(glob.glob(str(state / "trash_rules_v0_*"))) == 2
+    commit(df2, root, 0)
+    assert {f: os.stat(os.path.join(out, f)).st_mtime_ns for f in os.listdir(out)} == files
+    assert [tuple(r) for r in read_batch(spark, root, 0).collect()] == [(1, "a")]
 
 
 def _gdpr_python_audit(rows):
@@ -3456,9 +3421,10 @@ def test_gdpr_ingest_interleave_matches_python_replay(spark, tmpdirs):
 
 
 def test_gdpr_ingest_retry_idempotent_and_orphan_resume(spark, tmpdirs):
-    """A retried batch must not double-count (batch-keyed overwrite +
-    read-before), and a crash orphan (partial version dir without
-    _SUCCESS) must be invisible to the retry."""
+    """A retried batch must not double-count (a marked batch is never
+    rewritten, and the fold reads only marked batches below its own),
+    and a crash orphan (a partial unmarked batch dir) must be invisible
+    to the retry."""
     from test_flink_spark.streaming.gdpr_ingest import audit, gdpr_ingest_batch
 
     state = tmpdirs / "gdpr_retry"
@@ -3477,11 +3443,11 @@ def test_gdpr_ingest_retry_idempotent_and_orphan_resume(spark, tmpdirs):
     df0 = spark.createDataFrame(b0, schema)
     df1 = spark.createDataFrame(b1, schema)
     gdpr_ingest_batch(df0, str(state), batch_id=0)
-    # crash orphan for v1: garbage dir, no _SUCCESS
-    orphan = state / "gdpr_v1"
+    # crash orphan for batch 1: garbage dir, no marker
+    orphan = Path(batch_dir(str(state / "gdpr"), 1))
     orphan.mkdir()
     (orphan / "part-garbage.parquet").write_bytes(b"not parquet")
-    gdpr_ingest_batch(df1, str(state), batch_id=1)  # repairs v1 by overwrite
+    gdpr_ingest_batch(df1, str(state), batch_id=1)  # replaces the orphan
     want = _gdpr_python_audit(b0 + b1)
     got = {
         r["table_name"]: (r["n_rows"], r["n_subjects"])
@@ -3498,14 +3464,13 @@ def test_gdpr_ingest_retry_idempotent_and_orphan_resume(spark, tmpdirs):
 
 
 def test_gdpr_pending_discards_non_cohort_orphans(spark, tmpdirs):
-    """r11 ADVICE (medium): lineitems referencing a SEEN non-cohort order
+    """Lineitems referencing a SEEN non-cohort order
     must be discarded, not re-queued into pending forever — pending holds
     only truly in-flight orphans, so the snapshot is O(cohort + seen
     orderkeys), never O(ingested lineitems)."""
     import hashlib
 
     from test_flink_spark.streaming.gdpr_ingest import audit, gdpr_ingest_batch
-    from test_flink_spark.streaming.snapshots import latest_snapshot
 
     def in_cohort(ck):
         return int(hashlib.md5(str(ck).encode()).hexdigest()[:15], 16) % 32 == 0
@@ -3530,7 +3495,7 @@ def test_gdpr_pending_discards_non_cohort_orphans(spark, tmpdirs):
             str(state),
             batch_id=bid,
         )
-    snap = spark.read.parquet(latest_snapshot(str(state), "gdpr"))
+    snap = read_batch(spark, str(state / "gdpr"), 3)
     pending = {
         (r["k"], r["v"])
         for r in snap.filter(snap.kind == "pending").collect()
@@ -3678,13 +3643,14 @@ def _broadcast_rules(fed):
         from test_flink_spark.streaming.broadcast_rules import streaming_broadcast_rules
 
         spark, other = stream.sparkSession, tmp / "other"
-        other.mkdir()
+        other.mkdir(exist_ok=True)  # exists when a test restarts the queries
         if fed == "rules":
             rules, events = stream, spark.readStream.schema(_EV_SCHEMA).json(str(other))
         else:
             rule = {"rule_id": 1, "event_type": "view", "min_value_cents": 100,
                     "enabled": True, "seq": 1}
-            _write_lines(other, "r0.json", [json.dumps(rule)])
+            if not (other / "r0.json").exists():
+                _write_lines(other, "r0.json", [json.dumps(rule)])
             rules, events = spark.readStream.schema(_RULES_SCHEMA).json(str(other)), stream
         rq, eq = streaming_broadcast_rules(
             rules, events, str(tmp / "state"), str(tmp / "out"), str(tmp / "ckpt")
@@ -3858,3 +3824,138 @@ def test_pins_constant_across_batches(spark, tmpdirs, case):
     finally:
         for q in queries:
             q.stop()
+
+
+def _restart_cases():
+    """_pin_stream_cases() plus the two writers in sinks/files.py, each
+    behind a stateful update-mode sum so a replay must also run its
+    input for the state store to commit."""
+    from test_flink_spark.sinks.files import idempotent_batch_sink, start_parquet_matview
+    from test_flink_spark.sinks.memory import start_foreach_batch
+
+    def sums(stream):
+        return stream.groupBy("k").agg(F.sum("v").alias("v"))
+
+    rows = lambda i: [{"k": j, "v": i + 1} for j in range(3)]  # noqa: E731
+    return {
+        **_pin_stream_cases(),
+        "idempotent_batch_sink": (
+            "k LONG, v LONG",
+            rows,
+            lambda s, t: [start_foreach_batch(
+                sums(s), idempotent_batch_sink(str(t / "out")), "restart_sink",
+                str(t / "ckpt"))],
+        ),
+        "parquet_matview": (
+            "k LONG, v LONG",
+            rows,
+            lambda s, t: [start_parquet_matview(
+                sums(s), str(t / "view"), ["k"], str(t / "ckpt"), "restart_view")],
+        ),
+    }
+
+
+def _commit_files(tmp: Path) -> dict:
+    """path -> mtime of every file under every commit root below ``tmp``."""
+    return {
+        str(f): f.stat().st_mtime_ns
+        for c in tmp.rglob("_committed")
+        for f in c.parent.rglob("*")
+        if f.is_file()
+    }
+
+
+def _committed_outputs(spark, tmp: Path) -> dict:
+    """commit root (relative to ``tmp``) -> {marked batch: (sorted rows,
+    sidecars)}, read through the commit module."""
+    import json
+    import os
+
+    out = {}
+    for c in sorted(tmp.rglob("_committed")):
+        root = str(c.parent)
+        out[str(c.parent.relative_to(tmp))] = {
+            b: (
+                sorted(str(r) for r in read_batch(spark, root, b).collect()),
+                {
+                    f: json.loads(Path(batch_dir(root, b), f).read_text())
+                    for f in os.listdir(batch_dir(root, b))
+                    if f.endswith(".json")
+                },
+            )
+            for b in marked(root)
+        }
+    return out
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "broadcast_rules_apply",
+        "broadcast_rules_fold",
+        "cluster_ingest",
+        "gdpr_ingest",
+        "idempotent_batch_sink",
+        "late_updates",
+        "parquet_matview",
+        "processing_time",
+        "side_outputs",
+        "sketch_ingest",
+        "stats_ingest",
+        "substring_dedup",
+        "verdict_ingest",
+    ],
+)
+def test_restart_from_checkpoint_applies_each_batch_once(spark, tmpdirs, case):
+    """A crash after a writer committed batch 1 but before Spark
+    committed it: deleting ``commits/1`` makes the restarted query re-run
+    batch 1.  The replay must rewrite no committed file, and after a
+    third batch every committed output must equal an uninterrupted run
+    over the same three batches."""
+    import json
+
+    schema, rows, start = _restart_cases()[case]
+
+    def run(tmp, batches, queries=None):
+        src = tmp / "src"
+        src.mkdir(parents=True, exist_ok=True)
+        queries = queries or start(
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src)),
+            tmp,
+        )
+        try:
+            for i in batches:
+                _write_lines(src, f"b{i}.json", [json.dumps(r) for r in rows(i)])
+                queries[0].processAllAvailable()
+        finally:
+            for q in queries:
+                q.stop()
+
+    whole, crash = tmpdirs / "whole", tmpdirs / "crash"
+    run(whole, range(3))
+    run(crash, range(2))
+    # the fed query's checkpoint is the one that committed batch 1
+    [commits] = [c for c in crash.rglob("commits") if (c / "1").exists()]
+    (commits / "1").unlink()
+    (commits / ".1.crc").unlink(missing_ok=True)  # the local FS checksum
+    written = _commit_files(crash)
+    assert written
+
+    queries = start(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .json(str(crash / "src")),
+        crash,
+    )
+    try:
+        queries[0].processAllAvailable()
+        assert (commits / "1").exists()  # Spark re-ran and committed it
+        assert _commit_files(crash) == written  # ... and it wrote nothing
+    except BaseException:
+        for q in queries:
+            q.stop()
+        raise
+    run(crash, [2], queries)
+    assert _committed_outputs(spark, crash) == _committed_outputs(spark, whole)
+    if case == "parquet_matview":
+        view = {str(r) for r in spark.read.parquet(str(crash / "view")).collect()}
+        assert view == {f"Row(k={k}, v=6)" for k in range(3)}

@@ -47,18 +47,6 @@ def test_sliding_counts_accumulate(spark):
     assert len(by) == 24
 
 
-def test_sliding_two_level_equals_direct(spark):
-    # the two-level (pre-agg per slide bucket) strategy must be value-equal
-    # to the native sliding window on any input
-    rows = [("a", t * 37_000 % 7_200_000) for t in range(200)] + [("b", 123_456)]
-    df = _events_df(spark, rows)
-    direct = sliding_count(df, "ts", ["key"], "1 hour", "5 minutes")
-    two = sliding_count(df, "ts", ["key"], "1 hour", "5 minutes", strategy="two_level")
-    d = {(r["key"], r["window_end"]): r["cnt"] for r in direct.collect()}
-    t = {(r["key"], r["window_end"]): r["cnt"] for r in two.collect()}
-    assert d == t
-
-
 def test_session_gap_semantics(spark):
     # gap = 10 s: diff < gap merges, diff == gap splits (strict).
     df = _events_df(spark, [("a", 0), ("a", 9_999), ("a", 19_999), ("a", 30_000)])
@@ -67,72 +55,3 @@ def test_session_gap_semantics(spark):
     # 0 → extends to 9_999 → extends to 19_999; 30_000 − 19_999 > 10 s? no:
     # 10_001 ≥ 10_000 → new session.
     assert got == {(0, 3), (30_000, 1)}
-
-
-def test_sliding_two_level_actually_two_level(spark):
-    # regression guard for the vacuous-test trap: the two_level strategy must
-    # materialize its own plan shape (explode + pre-agg), not silently fall
-    # back to the native window (as a broken interval resolver once caused)
-    import contextlib
-    import io
-
-    df = _events_df(spark, [("a", 0)])
-    two = sliding_count(df, "ts", ["key"], "1 hour", "5 minutes", strategy="two_level")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        two.explain("formatted")
-    plan = buf.getvalue()
-    assert "Generate" in plan  # the bucket-count fan-out explode
-    direct = sliding_count(df, "ts", ["key"], "1 hour", "5 minutes")
-    buf2 = io.StringIO()
-    with contextlib.redirect_stdout(buf2):
-        direct.explain("formatted")
-    assert "Generate" not in buf2.getvalue() or "window" in buf2.getvalue()
-
-
-def test_sliding_auto_routes_by_hash_cardinality(spark):
-    # auto = measured router: few distinct (key, bucket) groups -> direct;
-    # hash entries over the cutoff -> two_level.  Decision checked via
-    # choose_sliding_strategy directly, and via plan shape through the
-    # public strategy="auto" path (Generate marks the two-level explode).
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from test_flink_spark.operators.windows import choose_sliding_strategy
-
-    small = _events_df(spark, [("a", 0), ("b", 100_000)])
-    assert choose_sliding_strategy(small, "ts", ["key"], 300_000, 12) == "direct"
-
-    wide = spark.range(200_000).select(
-        F.col("id").alias("key"),
-        F.timestamp_millis(F.col("id") * 7).alias("ts"),
-    )
-    # ~200k distinct (key, bucket) groups x 12 windows > cutoff with a
-    # test-sized cutoff override
-    assert (
-        choose_sliding_strategy(wide, "ts", ["key"], 300_000, 12, cutoff=1_000_000)
-        == "two_level"
-    )
-
-    out = sliding_count(small, "ts", ["key"], "1 hour", "5 minutes", strategy="auto")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    assert "Generate" not in buf.getvalue()  # routed to direct
-
-    # value equivalence of the auto route on a mixed input
-    rows = [("a", t * 37_000 % 7_200_000) for t in range(100)]
-    df = _events_df(spark, rows)
-    d = {
-        (r["key"], r["window_end"]): r["cnt"]
-        for r in sliding_count(df, "ts", ["key"], "1 hour", "5 minutes").collect()
-    }
-    a = {
-        (r["key"], r["window_end"]): r["cnt"]
-        for r in sliding_count(
-            df, "ts", ["key"], "1 hour", "5 minutes", strategy="auto"
-        ).collect()
-    }
-    assert d == a
